@@ -86,7 +86,7 @@ def _gc_flags(cpus: int) -> str:
 
 
 def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
-        num_buckets: int | None = None, salt_buckets: int = 8,
+        num_buckets: int | None = None,
         sha_impl: str = "arrow", merge_mode: str = "cow",
         compact_every: int = 4, warmup_epochs: int = 0,
         shuffle_partitions: int | None = None,
@@ -97,10 +97,6 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
     from skipmap_processor_spark.lake import LakeTable
     from skipmap_processor_spark.session import get_spark
     from skipmap_processor_spark.streaming.pipeline import apply_epoch
-
-    # slot multiplier for the fast-path (_bucket,_salt) shuffle (see
-    # shuffle_partitions comment below); bench default 2, explicit env wins
-    os.environ.setdefault("SKIPMAP_FPB_MULT", "2")
 
     # an explicit events_dir (e.g. one shard of a pre-split log) bypasses
     # generation; n_events must then be the actual row count of that dir
@@ -122,12 +118,10 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
         # 4 waves of reduce tasks let the scheduler pack around slot-hash
         # imbalance (balls-in-bins over (_bucket,_salt) slots) instead of
         # eating it as a straggler tail; cluster-proportional, so the job
-        # stays identical-in-shape at N and 4N. With waves doing the
-        # balancing, the slot multiplier drops to 2 (fewer output files =
-        # less writer+compaction CPU — the 4N leg's per-event CPU penalty
-        # was mostly file-count-proportional). Measured at local[16], 32M
-        # events: 1x/4 483k ev/s -> 4x/4 717k -> 4x/2 911k steady.
-        # Both env vars overridable for A/B bisection.
+        # stays identical-in-shape at N and 4N. Measured at local[16], 32M
+        # events: 1x/4 483k ev/s -> 4x/4 717k steady. The salt fan-out is
+        # the engine's own rule (lake.salt_fanout); this env var stays
+        # overridable for A/B bisection.
         # An EXPLICIT shuffle_partitions pins the physical job layout
         # (shuffle partition count, and through it the output file count)
         # so two cluster sizes run the byte-identical job — like a real
@@ -185,7 +179,7 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
                                  merge_mode=merge_mode)
         for ep in epochs[:warmup_epochs]:
             apply_epoch(wlake, ev.filter(F.col("epoch") == ep).drop("epoch"),
-                        int(ep), None, salt_buckets, sha_impl)
+                        int(ep), None, sha_impl)
         wlake.compact(target_files_per_bucket=1)
         shutil.rmtree(wdir, ignore_errors=True)
 
@@ -266,7 +260,7 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
             te = time.monotonic()
             stats = apply_epoch(
                 lake, ev.filter(F.col("epoch") == ep).drop("epoch"), int(ep),
-                None, salt_buckets, sha_impl,
+                None, sha_impl,
             )
             stats["_leg_wall"] = round(time.monotonic() - te, 3)
             return stats
@@ -292,7 +286,7 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
             te = time.monotonic()
             stats = apply_epoch(
                 lake, ev.filter(F.col("epoch") == ep).drop("epoch"), int(ep),
-                None, salt_buckets, sha_impl,
+                None, sha_impl,
             )
             per_epoch.append(round(time.monotonic() - te, 3))
             if detail:
@@ -357,7 +351,6 @@ if __name__ == "__main__":
     ap.add_argument("--events", type=int, default=2_000_000)
     ap.add_argument("--epochs", type=int, default=8)
     ap.add_argument("--buckets", type=int, default=None)
-    ap.add_argument("--salt", type=int, default=8)
     ap.add_argument("--sha", choices=["arrow", "jvm"], default="arrow")
     ap.add_argument("--mode", choices=["cow", "mor"], default="cow")
     ap.add_argument("--compact-every", type=int, default=4)
@@ -374,9 +367,8 @@ if __name__ == "__main__":
                          "must be its actual row count")
     args = ap.parse_args()
     res = run(args.cpus, args.keys, args.events, args.epochs, args.buckets,
-              args.salt, args.sha, args.mode, args.compact_every,
+              args.sha, args.mode, args.compact_every,
               args.warmup_epochs, args.shuffle_partitions, args.events_dir,
               args.in_flight)
     res["sha_impl"] = args.sha
-    res["salt_buckets"] = args.salt
     print(json.dumps(res))

@@ -166,9 +166,8 @@ def main() -> None:
                     "linearly in proc count")
 
     smult = os.environ.get("SKIPMAP_BENCH_SHUFFLE_MULT", "4")
-    fmult = os.environ.get("SKIPMAP_FPB_MULT", "2")
     layout = (f"sp{args.fixed_shuffle}" if args.fixed_shuffle
-              else f"s{smult}f{fmult}")
+              else f"s{smult}")
     if args.in_flight > 1:
         layout += f"_if{args.in_flight}"
     sig = (f"n{args.n}_k{args.keys}_e{args.events}_p{args.epochs}"

@@ -215,13 +215,12 @@ def main() -> None:
     # sandbox VM) hits both equally; report the best steady rate per config
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     hist_path = os.path.join(REPO, "BENCH", "scaling_history.jsonl")
-    # the shuffle-wave and slot multipliers change the measured job, so they
-    # are part of the protocol signature (history-best pairs must compare
-    # identical configurations)
+    # the shuffle-wave multiplier changes the measured job, so it is part
+    # of the protocol signature (history-best pairs must compare identical
+    # configurations)
     smult = os.environ.get("SKIPMAP_BENCH_SHUFFLE_MULT", "4")
-    fmult = os.environ.get("SKIPMAP_FPB_MULT", "2")
     layout = (f"sp{args.fixed_shuffle}" if args.fixed_shuffle
-              else f"s{smult}f{fmult}")
+              else f"s{smult}")
     sig = (f"n{args.n}_k{args.keys}_e{args.events}_p{args.epochs}"
            f"_{args.mode}_{args.sha}_{layout}")
 

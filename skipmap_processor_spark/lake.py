@@ -64,7 +64,6 @@ ENGINE_COLS = [
     (6, "_epoch", "bigint"),
 ]
 KEY_COLS = ["repo", "path"]
-ORD_COLS = ["commit", "event_seq"]
 
 
 class CommitConflict(Exception):
@@ -75,6 +74,49 @@ class CommitConflict(Exception):
 def bucket_expr(num_buckets: int):
     """Deterministic bucket id for a key — same function on write and read."""
     return F.pmod(F.xxhash64(F.col("repo"), F.col("path")), F.lit(num_buckets))
+
+
+def salt_fanout(spark: SparkSession, num_buckets: int,
+                files_per_bucket: int = 1) -> int:
+    """Salts per bucket in the ``(_bucket, _salt)`` write exchange: enough
+    for ~4 keys per shuffle slot. Hashing nb bucket values into nb slots
+    leaves ~37% of the slots idle and piles 3-4 buckets on others
+    (measured 3-5x stragglers); the path-hash salt spreads a hot bucket
+    over several tasks while keeping every key's rows together."""
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    return max(int(files_per_bucket), -(-4 * parts // num_buckets))
+
+
+def lww_pick(rows: DataFrame, fpb: int, tiebreak: list | None = None,
+             num_partitions: int | None = None) -> DataFrame:
+    """Last-writer-wins in one exchange: keep each (repo, path)'s first row
+    in ``(commit desc, event_seq desc, *tiebreak)`` order.
+
+    ``rows`` carries ``_bucket``. The only exchange partitions by
+    ``(_bucket, _salt)`` — the partitioning the bucketed write needs — with
+    ``_salt`` a path hash over ``fpb`` values; an in-partition sort by
+    (key, ord desc) plus a ``lag`` comparison marks each key's winner
+    inside the JVM. The output stays partitioned and sorted by
+    ``(_bucket, _salt, repo, path)``, so the write adds neither a shuffle
+    nor a sort. ``num_partitions`` fixes the exchange width (an explicit
+    ``files_per_bucket``); otherwise AQE may coalesce it."""
+    from pyspark.sql import Window
+
+    rows = rows.withColumn("_salt", F.pmod(F.xxhash64(F.col("path")),
+                                           F.lit(fpb)))
+    if num_partitions:
+        rows = rows.repartition(num_partitions, "_bucket", "_salt")
+    w = Window.partitionBy("_bucket", "_salt").orderBy(
+        F.col("repo").asc(), F.col("path").asc(),
+        F.col("commit").desc(), F.col("event_seq").desc(), *(tiebreak or []),
+    )
+    key = F.concat_ws("\x00", F.col("repo"), F.col("path"))
+    prev = F.lag(key).over(w)
+    return (
+        rows.withColumn("_is_first", prev.isNull() | (prev != key))
+        .filter(F.col("_is_first"))
+        .drop("_is_first", "_salt")
+    )
 
 
 def _spec_prune(file_nb: int, req_nb: int, bset: set[int]) -> set[int] | None:
@@ -1043,16 +1085,21 @@ class LakeTable:
             df = df.drop("is_deleted", "_epoch")
         return df
 
-    def lookup(self, keys_df: DataFrame, include_deleted: bool = True) -> DataFrame:
+    def lookup(self, keys_df: DataFrame, include_deleted: bool = True,
+               known: list[tuple] | None = None) -> DataFrame:
         """Current rows for the given keys — bucket-pruned point lookup.
 
         Reads only the buckets the keys hash into, then left-semi joins.
         This is the distributed analog of the reference's keyed cache read
         (/root/reference/src/utils/PostgresCache.ts:209-317).
+
+        ``known``: the distinct keys already on the driver as
+        ``(repo, path, xxhash64(repo, path))``; the prune lists then come
+        from it with no probe job.
         """
         mani = self.manifest()
         nb = int(mani["num_buckets"])
-        keys = keys_df.select(*KEY_COLS).distinct()
+        keys = keys_df.select(*KEY_COLS)
         # one driver-side LIMITED collect covers all three prunes for the
         # point-lookup case: bucket ids (bounded by num_buckets), distinct
         # repos AND distinct paths for footer-range file skipping WITHIN the
@@ -1064,18 +1111,22 @@ class LakeTable:
         # the collect bounded: a BULK lookup (more distinct keys than the
         # cap) falls back to the coarser (bucket, repo) collect, where the
         # interval test still pays but a per-path one would not.
-        trip = (keys.select(bucket_expr(nb).alias("_b"), "repo", "path")
-                .distinct().limit(_REPO_PRUNE_CAP + 1).collect())
+        if known is not None:
+            trip = [(h % nb, repo, path) for repo, path, h in known]
+        else:
+            trip = (keys.select(bucket_expr(nb).alias("_b"), "repo", "path")
+                    .distinct().limit(_REPO_PRUNE_CAP + 1).collect())
         if len(trip) <= _REPO_PRUNE_CAP:
-            buckets = sorted({r["_b"] for r in trip})
-            repos = sorted({r["repo"] for r in trip})
-            paths = sorted({r["path"] for r in trip})
+            buckets = sorted({r[0] for r in trip})
+            repos = sorted({r[1] for r in trip})
+            paths = sorted({r[2] for r in trip})
         else:
             paths = None
-            pairs = (keys.select(bucket_expr(nb).alias("_b"), "repo")
-                     .distinct().collect())
-            buckets = sorted({r["_b"] for r in pairs})
-            repos = sorted({r["repo"] for r in pairs})
+            pairs = trip if known is not None else (
+                keys.select(bucket_expr(nb).alias("_b"), "repo")
+                .distinct().collect())
+            buckets = sorted({r[0] for r in pairs})
+            repos = sorted({r[1] for r in pairs})
             if len(repos) > _REPO_PRUNE_CAP:
                 repos = None
         df = self.read(buckets=buckets, include_deleted=include_deleted,
@@ -1317,11 +1368,17 @@ class LakeTable:
                     pre_partitioned: bool = False,
                     pre_commit_check=None,
                     post_commit_mutate=None) -> dict:
-        """Copy-on-write MERGE of a deduped action batch, gated by epoch HWM.
+        """MERGE of an action batch, gated by epoch HWM.
 
         ``actions`` columns: repo, path, commit, event_seq,
         op ('upsert'|'delete'), plus current payload columns (missing ones
-        are filled with nulls). One row per key (caller dedups — S8/W1).
+        are filled with nulls). Any number of rows per key: merge_batch
+        owns last-writer-wins by ``(commit, event_seq)`` in both modes
+        (``lww_pick``). Equal-ord rows resolve deterministically — the
+        target row first (CoW), then a tombstone, then the smaller payload.
+        ``pre_partitioned`` (MOR only) marks a batch already picked and
+        partitioned by ``lww_pick``. ``files_per_bucket`` > 1 fixes at
+        least that many write tasks per bucket.
 
         Semantics per key (the ord gate makes replay idempotent):
           - no target row            -> insert (tombstone row for deletes)
@@ -1335,15 +1392,6 @@ class LakeTable:
                     "hwm_epoch": int(mani["properties"]["hwm_epoch"])}
 
         nb = int(mani["num_buckets"])
-        payload = self.payload_columns(mani)
-        pay_types = {
-            c["name"]: c["type"]
-            for c in self.current_schema(mani)
-        }
-        for col in payload:
-            if col not in actions.columns:
-                actions = actions.withColumn(col, F.lit(None).cast(pay_types[col]))
-
         if mani["properties"].get("merge_mode") == "mor":
             return self._merge_mor(actions, epoch, mani, files_per_bucket,
                                    pre_partitioned, pre_commit_check,
@@ -1427,13 +1475,6 @@ class LakeTable:
                         return {"skipped": True, "epoch": epoch,
                                 "hwm_epoch": int(
                                     mani["properties"]["hwm_epoch"])}
-                    payload = self.payload_columns(mani)
-                    pay_types = {c["name"]: c["type"]
-                                 for c in self.current_schema(mani)}
-                    for col in payload:
-                        if col not in act.columns:
-                            act = act.withColumn(
-                                col, F.lit(None).cast(pay_types[col]))
                     return self._merge_cow_locked(
                         act, epoch, mani, files_per_bucket, affected,
                         post_commit_mutate)
@@ -1451,73 +1492,32 @@ class LakeTable:
                           mani: dict, files_per_bucket: int,
                           affected: list[int],
                           post_commit_mutate=None) -> dict:
-        """``act`` arrives bucketed (_bucket column) with payload columns
-        filled against ``mani``; the caller holds exclusive locks on every
-        bucket in ``affected``."""
-        nb = int(mani["num_buckets"])
-        payload = self.payload_columns(mani)
-        pay_types = {c["name"]: c["type"] for c in self.current_schema(mani)}
+        """``act`` arrives bucketed (_bucket column); the caller holds
+        exclusive locks on every bucket in ``affected``.
 
+        The merge IS the LWW pick: the locked buckets' target rows
+        (``_src=0``) and the batch's candidate rows (``_src=1``) meet in
+        one ``lww_pick`` exchange, and the picked rows are the buckets' new
+        contents. ``_src`` ranks right after the ord, so a batch row must
+        be strictly newer than the target to replace it."""
+        nb = int(mani["num_buckets"])
         old = self.read(
             buckets=affected, include_deleted=True, with_engine_cols=True
         ).withColumn("_bucket", bucket_expr(nb))
-
-        s = act.select(
-            *KEY_COLS,
-            F.col("_bucket"),
-            *[F.col(c).alias(f"_s_{c}") for c in ORD_COLS + ["op"] + payload],
-        )
-        t = old
-        j = t.join(s, KEY_COLS + ["_bucket"], "full_outer")
-
-        batch_wins = F.col("_s_commit").isNotNull() & (
-            F.col("commit").isNull()
-            | (F.col("_s_commit") > F.col("commit"))
-            | (
-                (F.col("_s_commit") == F.col("commit"))
-                & (F.col("_s_event_seq") > F.col("event_seq"))
-            )
-        )
-        is_del = F.col("_s_op") == F.lit("delete")
-        result = j.select(
-            *KEY_COLS,
-            F.when(batch_wins, F.col("_s_commit")).otherwise(F.col("commit")).alias("commit"),
-            F.when(batch_wins, F.col("_s_event_seq")).otherwise(F.col("event_seq")).alias("event_seq"),
-            F.when(batch_wins, is_del).otherwise(F.coalesce(F.col("is_deleted"), F.lit(False))).alias("is_deleted"),
-            F.when(batch_wins, F.lit(-1 if epoch is None else epoch))
-            .otherwise(F.col("_epoch"))
-            .alias("_epoch"),
-            *[
-                # source-side cast: incoming batches may carry a narrower
-                # pre-widening type; target side is already current-typed
-                # by _read_files' id-bound rebind
-                F.when(batch_wins & is_del, F.lit(None).cast(pay_types[c]))
-                .when(batch_wins, F.col(f"_s_{c}").cast(pay_types[c]))
-                .otherwise(F.col(c))
-                .alias(c)
-                for c in payload
-            ],
-            F.col("_bucket"),
-        )
-
-        # files_per_bucket tasks per affected bucket (raise at scale so a hot
-        # 25 GB bucket isn't one task); stable row order inside files
-        # (deterministic output, reference precedent: sorted cache keys,
-        # /root/reference/src/utils/PostgresCache.ts:340-344)
-        fpb = max(files_per_bucket, 1)
-        parts = [F.col("_bucket")]
-        if fpb > 1:
-            parts.append(F.pmod(F.xxhash64(F.col("path")), F.lit(fpb)))
-        result = result.repartition(
-            max(len(affected), 1) * fpb, *parts
-        ).sortWithinPartitions("_bucket", *KEY_COLS)
+        both = old.withColumn("_src", F.lit(0)).unionByName(
+            self._as_rows(act, epoch, mani).withColumn("_src", F.lit(1)))
+        result = self._pick(both, mani, files_per_bucket, len(affected),
+                            head=[F.col("_src").asc()]).drop("_src")
         new_version = mani["version"] + 1
         out_dir = os.path.join(self.path,
                                f"data/v{new_version}-{uuid.uuid4().hex[:8]}")
+        t0 = time.monotonic()
         self._data_writer(result, mani).parquet(out_dir)
+        t1 = time.monotonic()
 
         new_files = self._scan_written(out_dir, mani["schema_version"])
         new_desc = self._write_shard(new_files, nb=nb)
+        t2 = time.monotonic()
         affected_set = set(affected)
 
         def _covered(fe: dict) -> bool:
@@ -1559,18 +1559,68 @@ class LakeTable:
                 new_version = mani["version"] + 1
         else:
             raise CommitConflict("CoW commit: gave up after 20 retries")
+        t3 = time.monotonic()
 
         stats = {
+            "t_write": round(t1 - t0, 3),
+            "t_scan": round(t2 - t1, 3),
+            "t_commit": round(t3 - t2, 3),
             "skipped": False,
             "epoch": -1 if epoch is None else epoch,
             "version": new_version,
+            "mode": "cow",
             "affected_buckets": affected,
             "files_written": len(new_files),
             "rows_written": sum(fe["rows"] for fe in new_files),
             "per_bucket_rows": {fe["bucket"]: fe["rows"] for fe in new_files},
         }
         self._append_ledger(stats)
+        stats["t_ledger"] = round(time.monotonic() - t3, 3)
         return stats
+
+    def _as_rows(self, actions: DataFrame, epoch: int | None,
+                 mani: dict) -> DataFrame:
+        """Action rows in the table's row layout: ``op`` becomes
+        ``is_deleted``, the epoch is stamped, and payload is cast to the
+        current types of ``mani`` (null on deletes and for payload columns
+        the batch lacks). The cast keeps a file's physical type equal to
+        its recorded schema version when a batch still carries a
+        pre-widening narrow type. ``_bucket`` passes through."""
+        pay_types = {c["name"]: c["type"] for c in self.current_schema(mani)}
+        is_del = F.col("op") == F.lit("delete")
+
+        def value(c: str):
+            null = F.lit(None).cast(pay_types[c])
+            if c not in actions.columns:
+                return null
+            return F.when(is_del, null).otherwise(F.col(c).cast(pay_types[c]))
+
+        return actions.select(
+            *KEY_COLS,
+            F.col("commit"),
+            F.col("event_seq").cast("bigint").alias("event_seq"),
+            is_del.alias("is_deleted"),
+            F.lit(-1 if epoch is None else epoch).cast("bigint").alias("_epoch"),
+            *[value(c).alias(c) for c in self.payload_columns(mani)],
+            *([F.col("_bucket")] if "_bucket" in actions.columns else []),
+        )
+
+    def _pick(self, rows: DataFrame, mani: dict, files_per_bucket: int,
+              n_buckets: int, head: list | None = None) -> DataFrame:
+        """``lww_pick`` over table-layout rows bound for ``n_buckets``
+        buckets. Equal-ord rows fall to ``head``, then a tombstone, then
+        the smaller payload — never to arrival order, so a batch with
+        equal-ord duplicates of a key (a duplicate-keyed base snapshot)
+        writes the same single row on every run."""
+        pay_types = {c["name"]: c["type"] for c in self.current_schema(mani)}
+        tiebreak = [*(head or []), F.col("is_deleted").desc()] + [
+            F.col(c).asc() for c in self.payload_columns(mani)
+            if not pay_types[c].startswith("map")  # maps are unorderable
+        ]
+        fpb = salt_fanout(self.spark, int(mani["num_buckets"]),
+                          files_per_bucket)
+        width = max(n_buckets, 1) * fpb if files_per_bucket > 1 else None
+        return lww_pick(rows, fpb, tiebreak, width)
 
     # ----------------------------------------------------- row-level DML
 
@@ -1643,52 +1693,22 @@ class LakeTable:
                    pre_partitioned: bool = False,
                    pre_commit_check=None,
                    post_commit_mutate=None) -> dict:
-        """Merge-on-read: append the deduped batch as delta rows — no read of
-        existing data, no join. Cost is proportional to the batch, never to
-        the table. Readers resolve versions via the LWW window (read());
-        compact() folds deltas back to one row per key."""
+        """Merge-on-read: append the batch's LWW winners as delta rows — no
+        read of existing data, no join. Cost is proportional to the batch,
+        never to the table. Readers resolve versions via the LWW window
+        (read()); compact() folds deltas back to one row per key."""
         nb = int(mani["num_buckets"])
-        payload = self.payload_columns(mani)
-        pay_types = {c["name"]: c["type"] for c in self.current_schema(mani)}
-        is_del = F.col("op") == F.lit("delete")
-        rows = actions.select(
-            *KEY_COLS,
-            F.col("commit"),
-            F.col("event_seq").cast("bigint").alias("event_seq"),
-            is_del.alias("is_deleted"),
-            F.lit(-1 if epoch is None else epoch).cast("bigint").alias("_epoch"),
-            *[
-                # cast keeps the file's physical type identical to its
-                # recorded schema version even when the incoming batch
-                # carries a pre-widening narrow type (no-op otherwise)
-                F.when(is_del, F.lit(None).cast(pay_types[c]))
-                .otherwise(F.col(c).cast(pay_types[c]))
-                .alias(c)
-                for c in payload
-            ],
-            *([F.col("_bucket")] if pre_partitioned else []),
-        )
+        rows = self._as_rows(actions, epoch, mani)
         if not pre_partitioned:
-            # the general path shuffles here; the fast path
-            # (prepare_actions_fast) already bucket-partitioned upstream —
-            # select() preserves partitioning, so this shuffle is skipped
-            rows = rows.withColumn("_bucket", bucket_expr(nb))
-            fpb = max(files_per_bucket, 1)
-            parts = [F.col("_bucket")]
-            if fpb > 1:
-                parts.append(F.pmod(F.xxhash64(F.col("path")), F.lit(fpb)))
-            rows = rows.repartition(nb * fpb, *parts)
-            # leading _bucket keeps each bucket's rows contiguous so the
-            # dynamic-partition writer's own sort is elided (outputOrdering
-            # prefix match); (repo, path) next for deterministic file order
-            rows = rows.sortWithinPartitions("_bucket", *KEY_COLS)
-        # pre-partitioned input arrives sorted by (_bucket, _salt, repo, path)
-        # from the dedup window — already deterministic and bucket-contiguous;
-        # re-sorting here would add a full-width O(n log n) pass AND break
-        # bucket contiguity, forcing FileFormatWriter to insert its own sort
-        # (measured: two redundant sorts of content-heavy rows per epoch)
-
-        import time as _time
+            # the fast path (prepare_actions_fast) picked upstream; select()
+            # preserves that partitioning, so its write adds no shuffle
+            rows = self._pick(rows.withColumn("_bucket", bucket_expr(nb)),
+                              mani, files_per_bucket, nb)
+        # lww_pick output is sorted by (_bucket, _salt, repo, path) —
+        # deterministic and bucket-contiguous; re-sorting here would add a
+        # full-width O(n log n) pass AND break bucket contiguity, forcing
+        # FileFormatWriter to insert its own sort (measured: two redundant
+        # sorts of content-heavy rows per epoch)
 
         new_version = mani["version"] + 1
         # staging dir is uuid-suffixed: two racing writers must never share a
@@ -1696,9 +1716,9 @@ class LakeTable:
         # files before its manifest entry lands)
         out_dir = os.path.join(self.path,
                                f"data/v{new_version}-{uuid.uuid4().hex[:8]}")
-        _t0 = _time.monotonic()
+        _t0 = time.monotonic()
         self._data_writer(rows, mani).parquet(out_dir)
-        _t1 = _time.monotonic()
+        _t1 = time.monotonic()
 
         if pre_commit_check is not None and not pre_commit_check():
             # optimistic execution invalidated (e.g. renames observed in a
@@ -1712,7 +1732,7 @@ class LakeTable:
 
         new_files = self._scan_written(out_dir, mani["schema_version"])
         new_desc = self._write_shard(new_files, nb=nb)
-        _t2 = _time.monotonic()
+        _t2 = time.monotonic()
         # optimistic CAS commit: delta appends commute, so a conflict rebases
         # by re-appending our shard onto the winner's manifest and retrying
         # (jittered backoff, Iceberg commit protocol). The epoch gate is
@@ -1742,7 +1762,7 @@ class LakeTable:
                 new_version = mani["version"] + 1
         else:
             raise CommitConflict("MOR commit: gave up after 20 retries")
-        _t3 = _time.monotonic()
+        _t3 = time.monotonic()
 
         stats = {
             "t_write": round(_t1 - _t0, 3),
@@ -1758,7 +1778,7 @@ class LakeTable:
             "per_bucket_rows": {fe["bucket"]: fe["rows"] for fe in new_files},
         }
         self._append_ledger(stats)
-        stats["t_ledger"] = round(_time.monotonic() - _t3, 3)
+        stats["t_ledger"] = round(time.monotonic() - _t3, 3)
         return stats
 
     def _data_writer(self, df: DataFrame, mani: dict):

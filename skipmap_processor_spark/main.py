@@ -29,7 +29,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--mode", choices=["batch", "stream"], default="stream")
     ap.add_argument("--merge-mode", choices=["cow", "mor"], default="mor")
     ap.add_argument("--num-buckets", type=int, default=32)
-    ap.add_argument("--salt-buckets", type=int, default=8)
     ap.add_argument("--sha-impl", choices=["arrow", "jvm"], default="arrow")
     ap.add_argument("--compact-target", type=int, default=0,
                     help="if >0, compact to this many files/bucket at the end")
@@ -64,15 +63,13 @@ def main(argv: list[str] | None = None) -> int:
             ap.error("--checkpoint required in stream mode")
         q = run_stream(
             spark, lake, args.events_dir, args.checkpoint,
-            salt_buckets=args.salt_buckets,
             on_batch=lambda s: print(json.dumps(s), flush=True),
         )
         q.awaitTermination()
     else:
         stats = replay_log(
             spark, lake, spark.read.parquet(args.events_dir),
-            read_ddl(args.events_dir), salt_buckets=args.salt_buckets,
-            sha_impl=args.sha_impl,
+            read_ddl(args.events_dir), sha_impl=args.sha_impl,
         )
         for s in stats:
             print(json.dumps(s), flush=True)

@@ -1,7 +1,8 @@
-"""Batch preparation: salted LWW dedup + rename-chain resolution.
+"""Batch preparation: candidate action rows + rename-chain resolution.
 
-Turns one epoch's raw change events into one action row per key
-(``op in {upsert, delete}``) ready for ``LakeTable.merge_batch``.
+Turns one epoch's raw change events into action rows
+(``op in {upsert, delete}``) ready for ``LakeTable.merge_batch``, which
+owns the last-writer-wins pick per key (``lake.lww_pick``).
 
 Semantics source: the in-batch "last occurrence wins, matching ON CONFLICT DO
 UPDATE semantics" dedup of the reference
@@ -11,12 +12,10 @@ chains (reference precedent: endpoint-graph component merge,
 /root/reference/src/transforms/normalization/PointGraph.ts:79-131).
 
 Scale design:
-- The LWW dedup is a two-phase window: phase 1 partitions by
-  ``(repo, path, salt)`` where salt = hash(commit, event_seq) % S, so a hot
-  key's events are reduced S-ways in parallel before the final
-  ``(repo, path)`` window sees at most S rows per key. With Zipf-skewed hot
-  repos this bounds the largest window partition — explicit salting per the
-  north rule, on top of AQE.
+- Rename-free keys need no preparation beyond the column mapping: their
+  events go to the merge un-deduped, and its single ``(_bucket, _salt)``
+  exchange picks each key's winner — the salt spreads a hot bucket over
+  several tasks (explicit salting per the north rule, on top of AQE).
 - Rename resolution is sequential only over the *rename-affected* key set
   (renames are ~5% of events; FIXTURES.md §2). Each ``applyInPandas`` group
   replays its few events through the same ``oracle.apply_event`` function the
@@ -27,13 +26,26 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from skipmap_processor_spark.functions.udfs import content_sha_via_pandas
-from skipmap_processor_spark.lake import KEY_COLS, LakeTable
+from skipmap_processor_spark.functions.udfs import (
+    content_sha_expr,
+    content_sha_via_pandas,
+)
+from skipmap_processor_spark.lake import (
+    KEY_COLS,
+    LakeTable,
+    bucket_expr,
+    lww_pick,
+    salt_fanout,
+)
+
+# rename-edge count up to which the resolver's graph work runs on the
+# driver: ~a few MB of heap, kept small on purpose so a pathological epoch
+# (repo-wide `git mv`) can't blow the driver at exactly the moment it needs
+# headroom
+MAX_EDGES_ON_DRIVER = 50_000
 
 _ACTION_SCHEMA = (
     "repo string, path string, commit string, event_seq bigint, op string, "
@@ -60,9 +72,8 @@ def batch_profile(events: DataFrame, num_buckets: int) -> dict:
     time is the Amdahl term of the whole pipeline at scale — every fused job
     buys scaling efficiency.
 
-    Returns {extra_keys, has_renames, affected_buckets, n_malformed}.
+    Returns {extra_keys, n_renames, affected_buckets, n_malformed}.
     """
-    from skipmap_processor_spark.lake import bucket_expr
     from skipmap_processor_spark.streaming.quarantine import malformed_cond
 
     events = _with_map_extras(events)
@@ -70,7 +81,7 @@ def batch_profile(events: DataFrame, num_buckets: int) -> dict:
         F.array_distinct(
             F.flatten(F.collect_set(F.map_keys("extra_cols")))
         ).alias("ek"),
-        F.max((F.col("op") == "rename").cast("int")).alias("hr"),
+        F.sum((F.col("op") == "rename").cast("long")).alias("nr"),
         F.sum(malformed_cond().cast("long")).alias("nm"),
         F.collect_set(bucket_expr(num_buckets)).alias("b1"),
         F.collect_set(
@@ -99,7 +110,7 @@ def batch_profile(events: DataFrame, num_buckets: int) -> dict:
         )
     return {
         "extra_keys": sorted(row["ek"] or []),
-        "has_renames": bool(row["hr"]),
+        "n_renames": int(row["nr"] or 0),
         "affected_buckets": sorted(set(row["b1"] or []) | set(row["b2"] or [])),
         "n_malformed": int(row["nm"] or 0),
     }
@@ -145,8 +156,41 @@ def lww_dedup(events: DataFrame, salt_buckets: int = 8) -> DataFrame:
     )
 
 
+def _local_frame(spark, columns: dict[str, list]) -> DataFrame:
+    """String columns as a LocalRelation (an Arrow createDataFrame under
+    ``spark.sql.execution.arrow.localRelationThreshold``). The planner
+    knows its size, so joins against it broadcast; and scanning it runs no
+    Python worker, unlike createDataFrame(list), whose RDD scan does —
+    per task, every time a plan re-reads it."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(
+        {k: pa.array(v, pa.string()) for k, v in columns.items()}))
+
+
+def _label_components(edges) -> dict:
+    """Driver-side union-find over ``(repo, path, new_path)`` rename edges:
+    (repo, path) -> component label (the root's repo and path, NUL-joined)."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for repo, a, b in edges:
+        for v in ((repo, a), (repo, b)):
+            parent.setdefault(v, v)
+        ra, rb = find((repo, a)), find((repo, b))
+        if ra != rb:
+            parent[rb] = ra
+    return {v: "\x00".join(find(v)) for v in parent}
+
+
 def rename_components(renames: DataFrame, max_iters: int = 12,
-                      max_edges_on_driver: int = 50_000) -> DataFrame:
+                      max_edges_on_driver: int = MAX_EDGES_ON_DRIVER
+                      ) -> DataFrame:
     """Connected components of the in-epoch rename graph: (repo, path) ->
     component label. Iterative min-label propagation over the (small)
     rename edge set — the distributed analog of the reference's endpoint
@@ -166,33 +210,13 @@ def rename_components(renames: DataFrame, max_iters: int = 12,
     # hybrid: below the threshold a driver-side union-find is microseconds
     # and saves ~8 Spark jobs per rename epoch; the iterative-join loop
     # below handles rename sets too large to collect (the 10^10 regime).
-    # 50k edges ~ a few MB of driver heap — kept small on purpose so a
-    # pathological epoch (repo-wide `git mv`) can't blow the driver at
-    # exactly the moment it needs headroom.
     threshold = int(max_edges_on_driver)
     small = edges.limit(threshold + 1).collect() if threshold > 0 else []
     if threshold > 0 and len(small) <= threshold:
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in small:
-            for v in ((r["repo"], r["a"]), (r["repo"], r["b"])):
-                parent.setdefault(v, v)
-            ra, rb = find((r["repo"], r["a"])), find((r["repo"], r["b"]))
-            if ra != rb:
-                parent[rb] = ra
-        rows = [
-            (repo, path, "\x00".join(find((repo, path))))
-            for (repo, path) in parent
-        ]
-        return renames.sparkSession.createDataFrame(
-            rows, "repo string, path string, label string"
-        )
+        labels = _label_components((r["repo"], r["a"], r["b"]) for r in small)
+        return _local_frame(renames.sparkSession, {
+            "repo": [k[0] for k in labels], "path": [k[1] for k in labels],
+            "label": list(labels.values())})
 
     verts = (
         edges.select("repo", F.col("a").alias("path"))
@@ -269,23 +293,18 @@ def rename_components(renames: DataFrame, max_iters: int = 12,
 
 
 def _resolve_rename_groups(
-    ev_aff: DataFrame, lake: LakeTable, aff_keys: DataFrame
+    ev_aff: DataFrame, name_map: dict, cc: DataFrame, seeds: DataFrame
 ) -> DataFrame:
     """Sequentially replay events on rename-affected keys, seeded with the
-    current table state for those keys (bucket-pruned lookup). Groups are
-    rename-graph connected components (see rename_components), not repos."""
-    mani = lake.manifest()
-    name_map = lake.payload_name_map(mani)  # original -> current
+    current table state for those keys (``seeds``, a bucket-pruned
+    lookup). Groups are rename-graph connected components (``cc``: repo,
+    path, _cc), not repos. ``name_map``: original -> current payload
+    column names."""
     promoted = [
         (orig, cur)
         for orig, cur in name_map.items()
         if orig not in ("lang", "content", "content_sha")
     ]
-
-    renames = ev_aff.filter(F.col("op") == "rename")
-    cc = rename_components(renames).withColumnRenamed("label", "_cc")
-
-    seeds = lake.lookup(aff_keys, include_deleted=True)
     extra_entries: list = []
     for orig, cur in promoted:
         extra_entries += [F.lit(orig), F.col(cur)]
@@ -380,133 +399,122 @@ def _resolve_rename_groups(
     return both.groupBy("_cc").applyInPandas(resolve, schema=_ACTION_SCHEMA)
 
 
+def _action_op():
+    return (F.when(F.col("op") == "delete", F.lit("delete"))
+            .otherwise(F.lit("upsert")).alias("op"))
+
+
+def _payload_cols(lake: LakeTable, mani: dict, sha_impl: str) -> list:
+    """The current payload columns, built from an action row's ``lang``,
+    ``content`` and ``extra_cols``. ``sha_impl``: 'arrow' = Arrow-vectorized
+    pandas_udf normalization + JVM sha2 (the BASELINE.json contract path);
+    'jvm' = pure built-in expressions (whole-stage codegen, no Python
+    workers). Both are proven byte-identical in tests/test_udfs.py."""
+    cur_to_orig = {v: k for k, v in lake.payload_name_map(mani).items()}
+    sha = (content_sha_expr if sha_impl == "jvm"
+           else content_sha_via_pandas)(F.col("content"))
+    out = []
+    for cur in lake.payload_columns(mani):
+        orig = cur_to_orig.get(cur, cur)
+        if orig in ("lang", "content"):
+            out.append(F.col(orig).alias(cur))
+        elif orig == "content_sha":
+            out.append(sha.alias(cur))
+        else:
+            out.append(F.element_at(F.col("extra_cols"), F.lit(orig)).alias(cur))
+    return out
+
+
 def prepare_actions_fast(
     events: DataFrame, lake: LakeTable, sha_impl: str = "arrow",
     files_per_bucket: int = 1
 ) -> DataFrame:
-    """Single-exchange action preparation for rename-free batches.
+    """Single-exchange action preparation for rename-free MOR batches.
 
-    The general path costs 2-3 exchanges of full rows (content strings are
-    the dominant bytes). Here the ONLY exchange is a window partitioned by
-    ``(_bucket, _salt)`` — the same partitioning the lake write needs — with
-    an in-partition sort by (key, ord desc); a ``lag`` comparison marks each
-    key's first (= winning) row, entirely inside the JVM. Normalization +
-    sha follow as per-row expressions (no further exchange), and the write
+    ``lww_pick`` runs first, so normalization + sha follow as per-row
+    expressions over the winners only (no further exchange), and the write
     proceeds without re-shuffling. Returns a DataFrame already partitioned
     by ``_bucket`` — pass ``pre_partitioned=True`` to ``merge_batch``.
-
-    Skew: the ``_salt`` sub-split hashes the path, which preserves
-    key-completeness (all events of one (repo, path) share a salt) while
-    spreading a hot repo's paths across tasks, and gives the exchange many
-    more keys than slots (hashing nb bucket values into nb slots leaves
-    ~37% slots idle and piles 3-4 buckets on others — measured 3-5x
-    stragglers).
     """
     mani = lake.manifest()
     nb = int(mani["num_buckets"])
-    name_map = lake.payload_name_map(mani)
-    payload = lake.payload_columns(mani)
-    cur_to_orig = {v: k for k, v in name_map.items()}
-
-    from pyspark.sql import Window
-
-    from skipmap_processor_spark.lake import bucket_expr
-
-    shuffle_parts = int(
-        events.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    slot_mult = int(os.environ.get("SKIPMAP_FPB_MULT", "4"))
-    fpb = max(files_per_bucket, -(-slot_mult * shuffle_parts // nb))
-    events = _with_map_extras(events)
-    ev = events.select(
+    ev = _with_map_extras(events).select(
         *KEY_COLS, "commit", "event_seq", "op", "lang", "content", "extra_cols",
         bucket_expr(nb).alias("_bucket"),
-        F.pmod(F.xxhash64(F.col("path")), F.lit(fpb)).alias("_salt"),
     )
-    w = Window.partitionBy("_bucket", "_salt").orderBy(
-        F.col("repo").asc(), F.col("path").asc(),
-        F.col("commit").desc(), F.col("event_seq").desc(),
+    picked = lww_pick(ev, salt_fanout(events.sparkSession, nb,
+                                      files_per_bucket))
+    return picked.select(
+        *KEY_COLS, "commit", "event_seq", _action_op(),
+        *_payload_cols(lake, mani, sha_impl), "_bucket",
     )
-    key = F.concat_ws("\x00", F.col("repo"), F.col("path"))
-    prev = F.lag(key).over(w)
-    deduped = (
-        ev.withColumn("_is_first", prev.isNull() | (prev != key))
-        .filter(F.col("_is_first"))
-        .drop("_is_first", "_salt")
-    )
-
-    if sha_impl == "jvm":
-        from skipmap_processor_spark.functions.udfs import content_sha_expr
-
-        sha_col = content_sha_expr(F.col("content"))
-    else:
-        from skipmap_processor_spark.functions.udfs import content_sha_via_pandas
-
-        sha_col = content_sha_via_pandas(F.col("content"))
-
-    sels = [F.col(c) for c in KEY_COLS + ["commit", "event_seq"]]
-    sels.append(
-        F.when(F.col("op") == "delete", F.lit("delete"))
-        .otherwise(F.lit("upsert"))
-        .alias("op")
-    )
-    for cur in payload:
-        orig = cur_to_orig.get(cur, cur)
-        if orig == "lang":
-            sels.append(F.col("lang").alias(cur))
-        elif orig == "content":
-            sels.append(F.col("content").alias(cur))
-        elif orig == "content_sha":
-            sels.append(sha_col.alias(cur))
-        else:
-            sels.append(F.element_at(F.col("extra_cols"), F.lit(orig)).alias(cur))
-    sels.append(F.col("_bucket"))
-    return deduped.select(*sels)
 
 
 def prepare_actions(
-    events: DataFrame, lake: LakeTable, salt_buckets: int = 8,
-    sha_impl: str = "arrow", has_renames: bool | None = None
+    events: DataFrame, lake: LakeTable, sha_impl: str = "arrow",
+    n_renames: int | None = None
 ) -> DataFrame:
-    """Raw epoch events -> one action row per key, in the lake's current
-    column names, with ``content_sha`` computed.
+    """Raw epoch events -> candidate action rows in the lake's current
+    column names, with ``content_sha`` computed (see ``_payload_cols``).
 
-    ``sha_impl``: 'arrow' = Arrow-vectorized pandas_udf normalization + JVM
-    sha2 (the BASELINE.json contract path); 'jvm' = pure built-in
-    expressions (whole-stage codegen, no Python workers). Both are proven
-    byte-identical in tests/test_udfs.py.
+    Rename-free keys pass through un-deduped: ``merge_batch`` picks each
+    key's LWW winner, and on CoW that pick is the merge itself, so the
+    sha UDF sees batch rows only, never target rows. Verbatim duplicate
+    deliveries tie in that pick and are identical, so no dropDuplicates
+    pass is needed. Keys a rename touches are resolved here, one action
+    row each, by the sequential per-component resolver.
+
+    ``n_renames``: the batch's rename count (``batch_profile`` has it);
+    counted here when not given. Up to ``MAX_EDGES_ON_DRIVER`` renames the
+    resolver's inputs come from ONE driver collect of the rename edges:
+    component labels, the affected-key set and the seed lookup's prune
+    lists all derive from it — no probe, count or limit job, and the
+    joins broadcast local relations, not relations computed from the
+    events. Larger sets take the distributed path.
     """
     mani = lake.manifest()
-    name_map = lake.payload_name_map(mani)
-    payload = lake.payload_columns(mani)
-    cur_to_orig = {v: k for k, v in name_map.items()}
-
-    events = _with_map_extras(events)
-    # NOTE on exact duplicate deliveries inside one batch: no dropDuplicates
-    # pass is needed. Verbatim duplicates tie in the LWW window; row_number
-    # keeps exactly one and the tied rows are identical in every column, so
-    # the outcome is deterministic. The rename resolver's ord gate
-    # (oracle.apply_event: ord <= cur.ord -> skip) handles its slice the same
-    # way. Duplicates ACROSS epochs die at the merge ord gate. This saves a
-    # full shuffle per epoch.
-    ev = events
-
+    ev = _with_map_extras(events)
     renames = ev.filter(F.col("op") == "rename")
-    if has_renames is None:
-        has_renames = len(renames.take(1)) > 0
-    if has_renames:
-        aff_keys = (
-            renames.select("repo", "path")
-            .union(renames.select("repo", F.col("new_path").alias("path")))
-            .distinct()
-        )
+    if n_renames is None:
+        n_renames = renames.count()
+    seq_actions = None
+    if n_renames:
+        if n_renames <= MAX_EDGES_ON_DRIVER:
+            edges = renames.select(
+                "repo", "path", "new_path",
+                F.xxhash64("repo", "path").alias("h_src"),
+                F.xxhash64("repo", "new_path").alias("h_dst"),
+            ).collect()
+            hashes = {}
+            for r in edges:
+                hashes[(r["repo"], r["path"])] = r["h_src"]
+                hashes[(r["repo"], r["new_path"])] = r["h_dst"]
+            labels = _label_components(
+                (r["repo"], r["path"], r["new_path"]) for r in edges)
+            cc = _local_frame(ev.sparkSession, {
+                "repo": [k[0] for k in labels],
+                "path": [k[1] for k in labels],
+                "_cc": list(labels.values())})
+            aff_keys = cc.select(*KEY_COLS)
+            n_aff = len(labels)
+            seeds = lake.lookup(aff_keys, known=[
+                (repo, path, h) for (repo, path), h in hashes.items()])
+        else:
+            aff_keys = (
+                renames.select("repo", "path")
+                .union(renames.select("repo", F.col("new_path").alias("path")))
+                .distinct()
+            )
+            n_aff = aff_keys.count()
+            cc = rename_components(renames, max_edges_on_driver=0
+                                   ).withColumnRenamed("label", "_cc")
+            seeds = lake.lookup(aff_keys)
         # guard: the per-component resolver replays its slice through the
         # sequential oracle (interpreted Python, correctness-critical for
         # interleaved rename chains). A pathological epoch (repo-wide
         # `git mv` of a vendored tree) can balloon that slice — surface it
         # loudly so operators see the degradation instead of a mystery-slow
-        # epoch. The job is cheap: aff_keys is a distinct over renames only.
-        n_aff = aff_keys.count()
+        # epoch.
         if n_aff > 1_000_000:
             import warnings
 
@@ -517,44 +525,14 @@ def prepare_actions(
                 RuntimeWarning,
                 stacklevel=2,
             )
-        ev_aff = ev.join(aff_keys, KEY_COLS, "left_semi")
-        ev_rest = ev.join(aff_keys, KEY_COLS, "left_anti")
-        seq_actions = _resolve_rename_groups(ev_aff, lake, aff_keys)
-    else:
-        ev_rest = ev
-        seq_actions = None
+        seq_actions = _resolve_rename_groups(
+            ev.join(aff_keys, KEY_COLS, "left_semi"),
+            lake.payload_name_map(mani), cc, seeds)
+        ev = ev.join(aff_keys, KEY_COLS, "left_anti")
 
-    vec = lww_dedup(ev_rest, salt_buckets=salt_buckets)
-    vec_actions = vec.select(
-        *KEY_COLS,
-        "commit",
-        "event_seq",
-        F.when(F.col("op") == "delete", F.lit("delete"))
-        .otherwise(F.lit("upsert"))
-        .alias("op"),
-        "lang",
-        "content",
-        "extra_cols",
-    )
-    actions = (
-        vec_actions.unionByName(seq_actions) if seq_actions is not None else vec_actions
-    )
-
-    # map to current payload column names + digest
-    sels = [F.col(c) for c in KEY_COLS + ["commit", "event_seq", "op"]]
-    for cur in payload:
-        orig = cur_to_orig.get(cur, cur)
-        if orig == "lang":
-            sels.append(F.col("lang").alias(cur))
-        elif orig == "content":
-            sels.append(F.col("content").alias(cur))
-        elif orig == "content_sha":
-            if sha_impl == "jvm":
-                from skipmap_processor_spark.functions.udfs import content_sha_expr
-
-                sels.append(content_sha_expr(F.col("content")).alias(cur))
-            else:
-                sels.append(content_sha_via_pandas(F.col("content")).alias(cur))
-        else:
-            sels.append(F.element_at(F.col("extra_cols"), F.lit(orig)).alias(cur))
-    return actions.select(*sels)
+    actions = ev.select(*KEY_COLS, "commit", "event_seq", _action_op(),
+                        "lang", "content", "extra_cols")
+    if seq_actions is not None:
+        actions = actions.unionByName(seq_actions)
+    return actions.select(*KEY_COLS, "commit", "event_seq", "op",
+                          *_payload_cols(lake, mani, sha_impl))

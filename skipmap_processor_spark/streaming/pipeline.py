@@ -1,11 +1,11 @@
 """Epoch orchestration: binlog tail -> dedup -> MERGE, batch or streaming.
 
 The unit of work is ``apply_epoch``: one micro-batch of change events is
-DDL-evolved, deduped (salted LWW window + rename resolution), digested
-(Arrow UDF + JVM sha2), and MERGEd into the lake with the epoch HWM gate
-making redelivery a no-op. ``run_stream`` wraps it in Structured Streaming
-``foreachBatch`` with a checkpoint; ``replay_log`` is the batch-mode loop
-(same function, no streaming overhead) used by the bench.
+DDL-evolved, rename-resolved, digested (Arrow UDF + JVM sha2), and MERGEd
+into the lake — whose single-exchange LWW pick dedups it — with the epoch
+HWM gate making redelivery a no-op. ``run_stream`` wraps it in Structured
+Streaming ``foreachBatch`` with a checkpoint; ``replay_log`` is the
+batch-mode loop (same function, no streaming overhead) used by the bench.
 
 Resume model (mirrors the reference's resumable run modes,
 /root/reference/run.sh:7-80 and docs/control-flow.md:115-126):
@@ -60,6 +60,8 @@ def bootstrap_base(lake: LakeTable, base: DataFrame) -> dict:
     """Load the initial snapshot (base table) into an empty lake table.
 
     Runs as an epoch-less merge: the HWM stays -1 so epoch 0 still applies.
+    A duplicate-keyed base still yields one row per key: the merge keeps
+    the max-``commit`` row, and equal-ord duplicates resolve by payload.
     """
     from skipmap_processor_spark.functions.udfs import content_sha_via_pandas
 
@@ -81,7 +83,6 @@ def apply_epoch(
     events: DataFrame,
     epoch: int,
     ddl: pd.DataFrame | None = None,
-    salt_buckets: int = 8,
     sha_impl: str = "arrow",
     on_malformed: str = "error",
 ) -> dict:
@@ -216,8 +217,9 @@ def apply_epoch(
 
     n_quarantined = 0
     if stats is None:
-        # general path: one profile pass (extra keys, rename flag, buckets),
-        # schema promotion, salted window dedup + rename resolution
+        # general path: one profile pass (extra keys, rename count,
+        # buckets), schema promotion, rename resolution; merge_batch picks
+        # each key's LWW winner
         profile = batch_profile(events, int(mani["num_buckets"]))
         if profile["n_malformed"]:
             from skipmap_processor_spark.streaming.quarantine import (
@@ -241,7 +243,7 @@ def apply_epoch(
                 lake.add_column(k, "string", src_key=k)
                 promoted.append(k)
         park_hook = None
-        if profile["has_renames"] or parked:
+        if profile["n_renames"] or parked:
             def _key(r: dict) -> tuple:
                 return (r["repo"], r["path"], r["new_path"], r["commit"],
                         int(r["event_seq"]), int(r["epoch"]))
@@ -311,10 +313,8 @@ def apply_epoch(
                     kept.append(r)
                 LakeTable._set_parked_renames(mani2, kept)
 
-        actions = prepare_actions(
-            events, lake, salt_buckets=salt_buckets, sha_impl=sha_impl,
-            has_renames=profile["has_renames"],
-        )
+        actions = prepare_actions(events, lake, sha_impl=sha_impl,
+                                  n_renames=profile["n_renames"])
         stats = lake.merge_batch(
             actions, epoch, affected_buckets=profile["affected_buckets"],
             post_commit_mutate=park_hook,
@@ -366,7 +366,7 @@ def resolve_parked(lake: LakeTable, spark: SparkSession) -> dict:
         F.lit(None).cast("string").alias("content"),
         F.lit(None).cast("map<string,string>").alias("extra_cols"),
     )
-    actions = prepare_actions(ev, lake, has_renames=True)
+    actions = prepare_actions(ev, lake, n_renames=len(ready))
 
     def hook(mani2: dict) -> None:
         kept = [
@@ -385,7 +385,6 @@ def replay_log(
     lake: LakeTable,
     events: DataFrame,
     ddl: pd.DataFrame | None = None,
-    salt_buckets: int = 8,
     sha_impl: str = "arrow",
     max_in_flight: int = 1,
     on_malformed: str = "error",
@@ -412,7 +411,7 @@ def replay_log(
                 pool.submit(
                     apply_epoch, lake,
                     events.filter(F.col("epoch") == ep).drop("epoch"),
-                    int(ep), None, salt_buckets, sha_impl, on_malformed,
+                    int(ep), None, sha_impl, on_malformed,
                 )
                 for ep in epochs
             ]
@@ -424,8 +423,8 @@ def replay_log(
     out = []
     for ep in epochs:
         batch = events.filter(F.col("epoch") == ep).drop("epoch")
-        out.append(apply_epoch(lake, batch, int(ep), ddl, salt_buckets,
-                               sha_impl, on_malformed))
+        out.append(apply_epoch(lake, batch, int(ep), ddl, sha_impl,
+                               on_malformed))
     return out
 
 
@@ -478,7 +477,6 @@ def run_stream(
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
     available_now: bool = True,
-    salt_buckets: int = 8,
     on_batch=None,
     compact_every: int = 0,
     sha_impl: str = "arrow",
@@ -583,7 +581,7 @@ def run_stream(
                 futs = [
                     pool.submit(
                         apply_epoch, lake, epoch_rows(ep),
-                        int(ep), None, salt_buckets, sha_impl, on_malformed,
+                        int(ep), None, sha_impl, on_malformed,
                     )
                     for ep in epochs
                 ]
@@ -600,15 +598,8 @@ def run_stream(
                     on_batch(stats)
             return
         for ep in epochs:
-            stats = apply_epoch(
-                lake,
-                epoch_rows(ep),
-                int(ep),
-                ddl,
-                salt_buckets,
-                sha_impl,
-                on_malformed,
-            )
+            stats = apply_epoch(lake, epoch_rows(ep), int(ep), ddl, sha_impl,
+                                on_malformed)
             if (
                 compact_every > 0
                 and not stats.get("skipped")
