@@ -1,9 +1,9 @@
 """CDC replay throughput bench: binlog -> lake upsert, events/sec.
 
 Generates (once, cached) a bulk event log at a parameterized size, replays
-it epoch-by-epoch through the full pipeline (dedup window -> Arrow
-normalize+sha -> bucket-pruned MERGE -> ledger), and reports sustained
-events/sec. Run standalone:
+it epoch-by-epoch through the engine's epoch scheduler (the one
+``replay_log`` and ``run_stream`` use: Arrow normalize+sha -> LWW-pick
+MERGE -> ledger), and reports sustained events/sec. Run standalone:
 
     python bench/cdc_bench.py --cpus 32 --events 2000000 --epochs 8
 
@@ -96,7 +96,7 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
 
     from skipmap_processor_spark.lake import LakeTable
     from skipmap_processor_spark.session import get_spark
-    from skipmap_processor_spark.streaming.pipeline import apply_epoch
+    from skipmap_processor_spark.streaming.pipeline import _apply_epochs
 
     # an explicit events_dir (e.g. one shard of a pre-split log) bypasses
     # generation; n_events must then be the actual row count of that dir
@@ -169,6 +169,9 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
     ev = spark.read.parquet(events_dir)
     epochs = sorted(r["epoch"] for r in ev.select("epoch").distinct().collect())
 
+    def rows_of(ep):
+        return ev.filter(F.col("epoch") == ep).drop("epoch")
+
     if warmup_epochs > 0:
         # untimed JIT/codegen/Python-worker warmup against a scratch lake —
         # a 10^10-event stream runs warm forever; measuring cold JIT would
@@ -177,9 +180,8 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
         shutil.rmtree(wdir, ignore_errors=True)
         wlake = LakeTable.create(spark, wdir, num_buckets=num_buckets or max(cpus, 8),
                                  merge_mode=merge_mode)
-        for ep in epochs[:warmup_epochs]:
-            apply_epoch(wlake, ev.filter(F.col("epoch") == ep).drop("epoch"),
-                        int(ep), None, sha_impl)
+        _apply_epochs(wlake, epochs[:warmup_epochs], rows_of, None, sha_impl,
+                      "error", 1, 0, None)
         wlake.compact(target_files_per_bucket=1)
         shutil.rmtree(wdir, ignore_errors=True)
 
@@ -238,67 +240,20 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
     pcpu0 = _tree_cpu()
     gc0_sec, gc0_n = _jvm_gc()
     t0 = time.monotonic()
-    per_epoch = []
-    epoch_detail = []
-    compact_sec = 0.0
-    if in_flight > 1:
-        # CONCURRENT epoch apply (backfill/catch-up mode): a sequential
-        # loop leaves the wide executor idle through every per-epoch
-        # scheduler/barrier/driver phase — the fixed term that caps the
-        # N->4N ratio. Epoch applies commute by design (MOR = ord-gated
-        # CAS append, CoW = per-bucket locks, renames via the
-        # parked-rename protocol + resolve_parked finalizer; oracle
-        # equality under concurrent apply is tested in
-        # tests/test_ooo_rename.py), so overlapping them pipelines one
-        # epoch's reduce/write phase under the next epoch's scan.
-        # Compaction folds once after the drain (same fold work).
-        from concurrent.futures import ThreadPoolExecutor
-
-        from skipmap_processor_spark.streaming.pipeline import resolve_parked
-
-        def one(ep: int) -> dict:
-            te = time.monotonic()
-            stats = apply_epoch(
-                lake, ev.filter(F.col("epoch") == ep).drop("epoch"), int(ep),
-                None, sha_impl,
-            )
-            stats["_leg_wall"] = round(time.monotonic() - te, 3)
-            return stats
-
-        with ThreadPoolExecutor(max_workers=in_flight) as pool:
-            futs = [pool.submit(one, ep) for ep in epochs]
-            for f in futs:
-                stats = f.result()
-                assert not stats["skipped"]
-                per_epoch.append(stats["_leg_wall"])
-                if detail:
-                    epoch_detail.append(
-                        {k: stats.get(k) for k in
-                         ("t_write", "t_scan", "t_commit", "t_ledger",
-                          "files_written", "wall_sec")})
-        resolve_parked(lake, spark)
-        if merge_mode == "mor":
-            tc = time.monotonic()
-            lake.compact(target_files_per_bucket=1)
-            compact_sec += time.monotonic() - tc
-    else:
-        for i, ep in enumerate(epochs):
-            te = time.monotonic()
-            stats = apply_epoch(
-                lake, ev.filter(F.col("epoch") == ep).drop("epoch"), int(ep),
-                None, sha_impl,
-            )
-            per_epoch.append(round(time.monotonic() - te, 3))
-            if detail:
-                epoch_detail.append({k: stats.get(k) for k in
-                                     ("t_write", "t_scan", "t_commit",
-                                      "t_ledger", "files_written",
-                                      "wall_sec")})
-            assert not stats["skipped"]
-            if merge_mode == "mor" and (i + 1) % compact_every == 0:
-                tc = time.monotonic()
-                lake.compact(target_files_per_bucket=1)
-                compact_sec += time.monotonic() - tc
+    # in_flight > 1 is the CONCURRENT epoch apply (backfill/catch-up
+    # mode): a sequential loop leaves the wide executor idle through every
+    # per-epoch scheduler/barrier/driver phase — the fixed term that caps
+    # the N->4N ratio — so overlapping epochs pipelines one epoch's
+    # reduce/write phase under the next epoch's scan. MOR compacts every
+    # compact_every epochs, or once after a concurrent drain (same fold
+    # work); CoW never does.
+    out = _apply_epochs(lake, epochs, rows_of, None, sha_impl, "error",
+                        in_flight, compact_every if merge_mode == "mor" else 0,
+                        None)
+    assert not any(st["skipped"] for st in out)
+    per_epoch = [round(st["wall_sec"], 3) for st in out]
+    compact_sec = sum(st["compact"]["wall_sec"] for st in out
+                      if "compact" in st)
     wall = time.monotonic() - t0
     cpu1, steal1 = _proc_stat()
     pcpu1 = _tree_cpu()
@@ -340,7 +295,10 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
         "gc_collections": gc1_n - gc0_n,
         "events_per_cpu_sec": round(n_events / max(cpu1 - cpu0, 1e-9), 1),
         "final_rows": final_rows,
-        **({"epoch_detail": epoch_detail} if detail else {}),
+        **({"epoch_detail": [
+            {k: st.get(k) for k in ("t_write", "t_scan", "t_commit",
+                                    "t_ledger", "files_written", "wall_sec")}
+            for st in out]} if detail else {}),
     }
 
 

@@ -1720,15 +1720,22 @@ class LakeTable:
         self._data_writer(rows, mani).parquet(out_dir)
         _t1 = time.monotonic()
 
-        if pre_commit_check is not None and not pre_commit_check():
+        if pre_commit_check is not None:
             # optimistic execution invalidated (e.g. renames observed in a
             # batch run through the rename-free fast path): nothing was
             # committed — the staged files are invisible without a manifest
-            # entry; delete them and let the caller re-run the general path
+            # entry; delete them and let the caller re-run the general path.
+            # A check that raises (ord contract) must not orphan them either.
             import shutil as _shutil
 
-            _shutil.rmtree(out_dir, ignore_errors=True)
-            return {"aborted": True, "epoch": epoch}
+            try:
+                ok = pre_commit_check()
+            except BaseException:
+                _shutil.rmtree(out_dir, ignore_errors=True)
+                raise
+            if not ok:
+                _shutil.rmtree(out_dir, ignore_errors=True)
+                return {"aborted": True, "epoch": epoch}
 
         new_files = self._scan_written(out_dir, mani["schema_version"])
         new_desc = self._write_shard(new_files, nb=nb)

@@ -64,6 +64,7 @@ def main(argv: list[str] | None = None) -> int:
         q = run_stream(
             spark, lake, args.events_dir, args.checkpoint,
             on_batch=lambda s: print(json.dumps(s), flush=True),
+            sha_impl=args.sha_impl,
         )
         q.awaitTermination()
     else:

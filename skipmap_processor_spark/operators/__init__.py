@@ -1,5 +1,1 @@
-from skipmap_processor_spark.operators.dedup import (  # noqa: F401
-    lww_dedup,
-    prepare_actions,
-    salted_repartition,
-)
+from skipmap_processor_spark.operators.dedup import prepare_actions  # noqa: F401

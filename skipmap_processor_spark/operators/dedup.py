@@ -26,7 +26,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from skipmap_processor_spark.functions.udfs import (
@@ -65,24 +65,52 @@ def _with_map_extras(events: DataFrame) -> DataFrame:
     return events
 
 
+def probe_aggs() -> list:
+    """The probe aggregates both apply paths compute in their one pass over
+    the batch (``batch_profile``'s ``agg()``, the MOR fast path's
+    ``observe()``): rename count, malformed-row count, and min/max
+    ``commit`` width over WELL-FORMED rows — a quarantine-bound row must
+    not abort the epoch via a garbage commit id. Read the result with
+    ``check_ord``."""
+    from skipmap_processor_spark.streaming.quarantine import malformed_cond
+
+    bad = malformed_cond()
+    return [
+        F.sum((F.col("op") == "rename").cast("long")).alias("n_renames"),
+        F.sum(bad.cast("long")).alias("n_malformed"),
+        F.min(F.when(~bad, F.length("commit"))).alias("min_cw"),
+        F.max(F.when(~bad, F.length("commit"))).alias("max_cw"),
+    ]
+
+
+def check_ord(m) -> None:
+    """Raise if the ``probe_aggs`` result ``m`` breaks the ord contract:
+    LWW compares ``commit`` lexicographically, which is only a total order
+    for fixed-width ids (the binlog's zero-padded gseq prefix). Mixed
+    widths would silently pick wrong LWW winners (ADVICE r1)."""
+    if m["min_cw"] is not None and m["min_cw"] != m["max_cw"]:
+        raise ValueError(
+            "ord contract violated: variable-width `commit` ids "
+            f"(len {m['min_cw']}..{m['max_cw']}) are not lexicographically "
+            "ordered; feed fixed-width monotone commit ids (e.g. "
+            "zero-padded sequence prefix)"
+        )
+
+
 def batch_profile(events: DataFrame, num_buckets: int) -> dict:
     """One-pass batch profile: fuses what would otherwise be three separate
     driver jobs per epoch (extra-column discovery, rename detection,
-    affected-bucket probe) into a single aggregation. Per-epoch serial driver
-    time is the Amdahl term of the whole pipeline at scale — every fused job
-    buys scaling efficiency.
+    affected-bucket probe) into a single aggregation, next to the shared
+    ``probe_aggs``. Per-epoch serial driver time is the Amdahl term of the
+    whole pipeline at scale — every fused job buys scaling efficiency.
 
     Returns {extra_keys, n_renames, affected_buckets, n_malformed}.
     """
-    from skipmap_processor_spark.streaming.quarantine import malformed_cond
-
     events = _with_map_extras(events)
     row = events.agg(
         F.array_distinct(
             F.flatten(F.collect_set(F.map_keys("extra_cols")))
         ).alias("ek"),
-        F.sum((F.col("op") == "rename").cast("long")).alias("nr"),
-        F.sum(malformed_cond().cast("long")).alias("nm"),
         F.collect_set(bucket_expr(num_buckets)).alias("b1"),
         F.collect_set(
             F.when(
@@ -93,71 +121,21 @@ def batch_profile(events: DataFrame, num_buckets: int) -> dict:
                 ),
             )
         ).alias("b2"),
-        # ord probe over WELL-FORMED rows only: a malformed row (headed for
-        # quarantine) must not be able to abort the whole epoch via a
-        # garbage commit id
-        F.min(F.when(~malformed_cond(), F.length("commit"))).alias("min_cw"),
-        F.max(F.when(~malformed_cond(), F.length("commit"))).alias("max_cw"),
+        *probe_aggs(),
     ).first()
-    if row["min_cw"] is not None and row["min_cw"] != row["max_cw"]:
-        # LWW compares `commit` lexicographically — only a total order for
-        # fixed-width monotone ids. Mixed widths silently corrupt LWW picks;
-        # fail loudly (ADVICE r1).
-        raise ValueError(
-            "ord contract violated: variable-width `commit` ids "
-            f"(len {row['min_cw']}..{row['max_cw']}); feed fixed-width "
-            "monotone commit ids (e.g. zero-padded sequence prefix)"
-        )
+    check_ord(row)
     return {
         "extra_keys": sorted(row["ek"] or []),
-        "n_renames": int(row["nr"] or 0),
+        "n_renames": int(row["n_renames"] or 0),
         "affected_buckets": sorted(set(row["b1"] or []) | set(row["b2"] or [])),
-        "n_malformed": int(row["nm"] or 0),
+        "n_malformed": int(row["n_malformed"] or 0),
     }
 
 
-def salted_repartition(
-    df: DataFrame, num_partitions: int, key: str = "repo", salt: int = 16
-) -> DataFrame:
-    """Repartition by (key, salt) so one hot key spreads over ``salt`` tasks.
-
-    Use ahead of heavy per-partition work when the natural key is skewed
-    (north rule: explicit hot-repo salting, SURVEY.md §4).
-    """
-    return df.repartition(
-        num_partitions, F.col(key), F.pmod(F.xxhash64(F.col("path")), F.lit(salt))
-    )
-
-
-def lww_dedup(events: DataFrame, salt_buckets: int = 8) -> DataFrame:
-    """Last-writer-wins per (repo, path): keep the max-(commit, event_seq) row.
-
-    Two-phase when ``salt_buckets > 1``: a salted partial window bounds skew
-    (map-side-combine analog for argmax), then a final window over the at
-    most ``salt_buckets`` survivors per key.
-    """
-    order = [F.col("commit").desc(), F.col("event_seq").desc()]
-    df = events
-    if salt_buckets > 1:
-        df = df.withColumn(
-            "_salt", F.pmod(F.xxhash64("commit", "event_seq"), F.lit(salt_buckets))
-        )
-        w1 = Window.partitionBy("repo", "path", "_salt").orderBy(*order)
-        df = (
-            df.withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_salt")
-        )
-    w2 = Window.partitionBy("repo", "path").orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def _local_frame(spark, columns: dict[str, list]) -> DataFrame:
-    """String columns as a LocalRelation (an Arrow createDataFrame under
+def _local_frame(spark, columns: dict[str, list],
+                 bigint: tuple = ()) -> DataFrame:
+    """String columns (``bigint`` names the int64 ones) as a LocalRelation
+    (an Arrow createDataFrame under
     ``spark.sql.execution.arrow.localRelationThreshold``). The planner
     knows its size, so joins against it broadcast; and scanning it runs no
     Python worker, unlike createDataFrame(list), whose RDD scan does —
@@ -165,7 +143,8 @@ def _local_frame(spark, columns: dict[str, list]) -> DataFrame:
     import pyarrow as pa
 
     return spark.createDataFrame(pa.table(
-        {k: pa.array(v, pa.string()) for k, v in columns.items()}))
+        {k: pa.array(v, pa.int64() if k in bigint else pa.string())
+         for k, v in columns.items()}))
 
 
 def _label_components(edges) -> dict:
@@ -188,9 +167,7 @@ def _label_components(edges) -> dict:
     return {v: "\x00".join(find(v)) for v in parent}
 
 
-def rename_components(renames: DataFrame, max_iters: int = 12,
-                      max_edges_on_driver: int = MAX_EDGES_ON_DRIVER
-                      ) -> DataFrame:
+def rename_components(renames: DataFrame, max_iters: int = 12) -> DataFrame:
     """Connected components of the in-epoch rename graph: (repo, path) ->
     component label. Iterative min-label propagation over the (small)
     rename edge set — the distributed analog of the reference's endpoint
@@ -200,24 +177,14 @@ def rename_components(renames: DataFrame, max_iters: int = 12,
     grouping the sequential resolver by component instead of by repo bounds
     each applyInPandas group to one chain's keys — a hot repo with one
     rename no longer funnels its whole epoch slice into a single group.
+    ``prepare_actions`` runs it only above ``MAX_EDGES_ON_DRIVER`` renames;
+    smaller sets take the driver union-find, ``_label_components``.
     """
     edges = renames.select(
         "repo",
         F.col("path").alias("a"),
         F.col("new_path").alias("b"),
     ).distinct()
-
-    # hybrid: below the threshold a driver-side union-find is microseconds
-    # and saves ~8 Spark jobs per rename epoch; the iterative-join loop
-    # below handles rename sets too large to collect (the 10^10 regime).
-    threshold = int(max_edges_on_driver)
-    small = edges.limit(threshold + 1).collect() if threshold > 0 else []
-    if threshold > 0 and len(small) <= threshold:
-        labels = _label_components((r["repo"], r["a"], r["b"]) for r in small)
-        return _local_frame(renames.sparkSession, {
-            "repo": [k[0] for k in labels], "path": [k[1] for k in labels],
-            "label": list(labels.values())})
-
     verts = (
         edges.select("repo", F.col("a").alias("path"))
         .union(edges.select("repo", F.col("b").alias("path")))
@@ -506,8 +473,7 @@ def prepare_actions(
                 .distinct()
             )
             n_aff = aff_keys.count()
-            cc = rename_components(renames, max_edges_on_driver=0
-                                   ).withColumnRenamed("label", "_cc")
+            cc = rename_components(renames).withColumnRenamed("label", "_cc")
             seeds = lake.lookup(aff_keys)
         # guard: the per-component resolver replays its slice through the
         # sequential oracle (interpreted Python, correctness-critical for

@@ -5,7 +5,10 @@ DDL-evolved, rename-resolved, digested (Arrow UDF + JVM sha2), and MERGEd
 into the lake — whose single-exchange LWW pick dedups it — with the epoch
 HWM gate making redelivery a no-op. ``run_stream`` wraps it in Structured
 Streaming ``foreachBatch`` with a checkpoint; ``replay_log`` is the
-batch-mode loop (same function, no streaming overhead) used by the bench.
+batch-mode replay of a whole log (same function, no streaming overhead).
+Both — and ``bench/cdc_bench.py`` — drive epochs through one scheduler,
+``_apply_epochs`` (sequential or concurrent apply, parked-rename
+finalization, compaction, reporting).
 
 Resume model (mirrors the reference's resumable run modes,
 /root/reference/run.sh:7-80 and docs/control-flow.md:115-126):
@@ -28,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from skipmap_processor_spark.lake import LakeTable
-from skipmap_processor_spark.operators.dedup import prepare_actions
+from skipmap_processor_spark.operators.dedup import _local_frame, prepare_actions
 from skipmap_processor_spark.sources.events import event_spark_schema, read_ddl
 
 
@@ -54,6 +57,29 @@ def _collect_renames(events: DataFrame) -> list:
     return (events.filter(F.col("op") == "rename")
             .select("repo", "path", "new_path", "commit", "event_seq")
             .collect())
+
+
+def _parked_key(r: dict) -> tuple:
+    """Identity of a parked-rename entry (a manifest dict)."""
+    return (r["repo"], r["path"], r["new_path"], r["commit"],
+            int(r["event_seq"]), int(r["epoch"]))
+
+
+def _parked_frame(spark: SparkSession, parked: list[dict],
+                  schema: StructType) -> DataFrame:
+    """Parked-rename entries as ``op='rename'`` event rows in ``schema``'s
+    columns (the rest null): an Arrow LocalRelation (``_local_frame``), so
+    no Python worker scans it."""
+    cols = {k: [r[k] for r in parked]
+            for k in ("repo", "path", "new_path", "commit")}
+    cols["event_seq"] = [int(r["event_seq"]) for r in parked]
+    df = _local_frame(spark, cols, bigint=("event_seq",)).withColumn(
+        "op", F.lit("rename"))
+    return df.select(*(
+        F.col(f.name) if f.name in df.columns
+        else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in schema.fields
+    ))
 
 
 def bootstrap_base(lake: LakeTable, base: DataFrame) -> dict:
@@ -108,7 +134,9 @@ def apply_epoch(
         return {"skipped": True, "epoch": epoch, "hwm_epoch": lake.hwm_epoch}
     from skipmap_processor_spark.operators.dedup import (
         batch_profile,
+        check_ord,
         prepare_actions_fast,
+        probe_aggs,
     )
 
     # NOTE: no persist() of the batch — a parquet re-scan is ~10x cheaper
@@ -141,17 +169,8 @@ def apply_epoch(
         else []
     )
     if inject:
-        spark = events.sparkSession
-        inj = spark.createDataFrame(
-            [(r["repo"], r["path"], r["new_path"], r["commit"],
-              int(r["event_seq"])) for r in inject],
-            "repo string, path string, new_path string, commit string, "
-            "event_seq bigint",
-        ).withColumn("op", F.lit("rename"))
-        for f in events.schema.fields:
-            if f.name not in inj.columns:
-                inj = inj.withColumn(f.name, F.lit(None).cast(f.dataType))
-        events = events.unionByName(inj.select(*events.columns))
+        events = events.unionByName(
+            _parked_frame(events.sparkSession, inject, events.schema))
 
     if mani["properties"].get("merge_mode") == "mor" and not inject:
         # OPTIMISTIC single-pass fast path: assume the epoch is rename-free
@@ -160,15 +179,12 @@ def apply_epoch(
         # pass, and roll back the uncommitted staging dir if violated.
         from pyspark.sql import Observation
 
-        from skipmap_processor_spark.streaming.quarantine import malformed_cond
-
         known = sorted(lake.payload_name_map())
         known_list = ", ".join(f"'{k}'" for k in known) or "''"
         obs = Observation()
         ev_obs = events.observe(
             obs,
-            F.sum((F.col("op") == "rename").cast("long")).alias("n_renames"),
-            F.sum(malformed_cond().cast("long")).alias("n_malformed"),
+            *probe_aggs(),
             F.sum(
                 (
                     F.size(
@@ -180,29 +196,12 @@ def apply_epoch(
                     > 0
                 ).cast("long")
             ).alias("n_unknown_extras"),
-            # ord-contract probe: LWW compares `commit` lexicographically,
-            # which is only a total order for fixed-width ids (the binlog's
-            # zero-padded gseq prefix). Mixed widths (e.g. raw git hashes
-            # mixed with seq ids) would silently pick wrong LWW winners —
-            # fail loudly instead (ADVICE r1). Well-formed rows only: a
-            # quarantine-bound row must not abort the epoch via a garbage
-            # commit id.
-            F.min(F.when(~malformed_cond(), F.length("commit")))
-            .alias("min_cw"),
-            F.max(F.when(~malformed_cond(), F.length("commit")))
-            .alias("max_cw"),
         )
         actions = prepare_actions_fast(ev_obs, lake, sha_impl=sha_impl)
 
         def valid() -> bool:
             m = obs.get
-            if m["min_cw"] is not None and m["min_cw"] != m["max_cw"]:
-                raise ValueError(
-                    "ord contract violated: variable-width `commit` ids "
-                    f"(len {m['min_cw']}..{m['max_cw']}) are not "
-                    "lexicographically ordered; feed a fixed-width monotone "
-                    "commit id (e.g. zero-padded sequence prefix)"
-                )
+            check_ord(m)  # merge_batch drops the staged files if it raises
             # malformed rows => abort to the general path, which applies the
             # on_malformed policy (never raise here: the staged fast-path
             # files must roll back first)
@@ -244,10 +243,6 @@ def apply_epoch(
                 promoted.append(k)
         park_hook = None
         if profile["n_renames"] or parked:
-            def _key(r: dict) -> tuple:
-                return (r["repo"], r["path"], r["new_path"], r["commit"],
-                        int(r["event_seq"]), int(r["epoch"]))
-
             # Resolution finality is judged against the SNAPSHOT the
             # resolver seeded from (`mani`), NOT the commit-time gap state:
             # with concurrent epoch applies, a racing epoch can commit
@@ -283,17 +278,17 @@ def apply_epoch(
             if _covered_below(int(epoch)):
                 fresh: list[dict] = []
             else:
-                inj_keys = {_key(r) for r in inject}
+                inj_keys = {_parked_key(r) for r in inject}
                 fresh = [
                     {"repo": r["repo"], "path": r["path"],
                      "new_path": r["new_path"], "commit": r["commit"],
                      "event_seq": int(r["event_seq"]), "epoch": int(epoch)}
                     for r in _collect_renames(events)
                 ]
-                fresh = [r for r in fresh if _key(r) not in inj_keys]
+                fresh = [r for r in fresh if _parked_key(r) not in inj_keys]
 
             resolved_keys = {
-                _key(r) for r in fresh + inject
+                _parked_key(r) for r in fresh + inject
                 if _covered_below(int(r["epoch"]))
             }
 
@@ -306,7 +301,7 @@ def apply_epoch(
                 # winner's manifest), and rebuilding from the stale
                 # snapshot would silently drop them
                 for r in fresh + lake.parked_renames(mani2):
-                    key = _key(r)
+                    key = _parked_key(r)
                     if key in seen or key in resolved_keys:
                         continue
                     seen.add(key)
@@ -350,34 +345,83 @@ def resolve_parked(lake: LakeTable, spark: SparkSession) -> dict:
     ready = [r for r in parked if not gap_below(int(r["epoch"]))]
     if not ready:
         return {"resolved": 0, "still_parked": len(parked)}
-    ready_keys = {
-        (r["repo"], r["path"], r["new_path"], r["commit"],
-         int(r["event_seq"]), int(r["epoch"])) for r in ready
-    }
-    ev = spark.createDataFrame(
-        [(r["repo"], r["path"], r["new_path"], r["commit"],
-          int(r["event_seq"])) for r in ready],
-        "repo string, path string, new_path string, commit string, "
-        "event_seq bigint",
-    ).select(
-        "repo", "path", "new_path", "commit", "event_seq",
-        F.lit("rename").alias("op"),
-        F.lit(None).cast("string").alias("lang"),
-        F.lit(None).cast("string").alias("content"),
-        F.lit(None).cast("map<string,string>").alias("extra_cols"),
-    )
-    actions = prepare_actions(ev, lake, n_renames=len(ready))
+    ready_keys = {_parked_key(r) for r in ready}
+    schema = StructType([f for f in event_spark_schema().fields
+                         if f.name != "epoch"])
+    actions = prepare_actions(_parked_frame(spark, ready, schema), lake,
+                              n_renames=len(ready))
 
     def hook(mani2: dict) -> None:
-        kept = [
-            r for r in lake.parked_renames(mani2)
-            if (r["repo"], r["path"], r["new_path"], r["commit"],
-                int(r["event_seq"]), int(r["epoch"])) not in ready_keys
-        ]
+        kept = [r for r in lake.parked_renames(mani2)
+                if _parked_key(r) not in ready_keys]
         LakeTable._set_parked_renames(mani2, kept)
 
     lake.merge_batch(actions, epoch=None, post_commit_mutate=hook)
     return {"resolved": len(ready), "still_parked": len(parked) - len(ready)}
+
+
+def _compact(lake: LakeTable) -> dict:
+    """Compact to one file per bucket; the result carries its wall time."""
+    t0 = time.monotonic()
+    out = lake.compact(target_files_per_bucket=1)
+    return {**out, "wall_sec": round(time.monotonic() - t0, 3)}
+
+
+def _apply_epochs(lake: LakeTable, epochs: list, rows_of, ddl, sha_impl: str,
+                  on_malformed: str, max_in_flight: int, compact_every: int,
+                  on_batch) -> list[dict]:
+    """The one epoch scheduler: ``apply_epoch`` over ``epochs``
+    (ascending), ``rows_of(ep)`` building each epoch's events; returns one
+    stats dict per epoch, in epoch order.
+
+    - CONCURRENT (``max_in_flight`` threads) only for more than one epoch
+      of a DDL-free log: applies commute (MOR: ord-gated CAS append; CoW:
+      per-bucket locks; renames: the parked-rename protocol), but a
+      schema change takes effect FROM its epoch, so a DDL-bearing log
+      runs sequentially in epoch order.
+    - After a concurrent drain ``resolve_parked`` finalizes renames whose
+      gap closed mid-flight; a non-zero count rides on the LAST stats as
+      ``parked_resolved``.
+    - Compaction (``stats["compact"]``): sequentially after each applied
+      epoch with ``(ep + 1) % compact_every == 0``; concurrently at most
+      once after the drain (on the last stats), if any applied epoch
+      crossed such a boundary.
+    - ``on_batch(stats)`` per epoch, in epoch order.
+    """
+    def due(ep, stats: dict) -> bool:
+        return (compact_every > 0 and not stats.get("skipped")
+                and (int(ep) + 1) % compact_every == 0)
+
+    has_ddl = ddl is not None and len(ddl) > 0
+    if max_in_flight > 1 and len(epochs) > 1 and not has_ddl:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=max_in_flight) as pool:
+            futs = [
+                pool.submit(apply_epoch, lake, rows_of(ep), int(ep), None,
+                            sha_impl, on_malformed)
+                for ep in epochs
+            ]
+            out = [f.result() for f in futs]
+        fin = resolve_parked(lake, lake.spark)
+        if fin.get("resolved"):
+            out[-1]["parked_resolved"] = fin["resolved"]
+        if any(due(ep, st) for ep, st in zip(epochs, out)):
+            out[-1]["compact"] = _compact(lake)
+        if on_batch is not None:
+            for stats in out:
+                on_batch(stats)
+        return out
+    out = []
+    for ep in epochs:
+        stats = apply_epoch(lake, rows_of(ep), int(ep), ddl, sha_impl,
+                            on_malformed)
+        if due(ep, stats):
+            stats["compact"] = _compact(lake)
+        if on_batch is not None:
+            on_batch(stats)
+        out.append(stats)
+    return out
 
 
 def replay_log(
@@ -389,43 +433,22 @@ def replay_log(
     max_in_flight: int = 1,
     on_malformed: str = "error",
 ) -> list[dict]:
-    """Batch-mode replay: epochs through apply_epoch.
+    """Batch-mode replay: every epoch of ``events`` through apply_epoch,
+    one stats dict per epoch.
 
     ``max_in_flight > 1`` applies that many epochs CONCURRENTLY (backfill /
-    catch-up mode): the MOR merge is an ord-gated CAS append and the CoW
-    merge takes per-bucket locks, so epoch applies commute — the lake's
-    final state is arrival-order-independent by design (LWW ord total
-    order; renames via the parked-rename protocol, finalized by
-    resolve_parked after the pool drains). Overlapping epochs fills the
+    catch-up mode; DDL-free logs only): the lake's final state is
+    arrival-order-independent by design, and overlapping epochs fills the
     scheduler/barrier idle a sequential loop leaves on wide executors.
-    DDL-bearing logs replay sequentially (schema changes take effect FROM
-    their epoch — a concurrent earlier epoch could see the later schema)."""
+    After the drain ``resolve_parked`` runs, and its count rides on the
+    LAST epoch's stats as ``parked_resolved``. See ``_apply_epochs``."""
     epochs = sorted(
         r["epoch"] for r in events.select("epoch").distinct().collect()
     )
-    if max_in_flight > 1 and (ddl is None or not len(ddl)):
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=max_in_flight) as pool:
-            futs = [
-                pool.submit(
-                    apply_epoch, lake,
-                    events.filter(F.col("epoch") == ep).drop("epoch"),
-                    int(ep), None, sha_impl, on_malformed,
-                )
-                for ep in epochs
-            ]
-            out = [f.result() for f in futs]
-        fin = resolve_parked(lake, spark)
-        if fin.get("resolved"):
-            out.append({"parked_resolved": fin["resolved"]})
-        return out
-    out = []
-    for ep in epochs:
-        batch = events.filter(F.col("epoch") == ep).drop("epoch")
-        out.append(apply_epoch(lake, batch, int(ep), ddl, sha_impl,
-                               on_malformed))
-    return out
+    return _apply_epochs(
+        lake, epochs,
+        lambda ep: events.filter(F.col("epoch") == ep).drop("epoch"),
+        ddl, sha_impl, on_malformed, max_in_flight, 0, None)
 
 
 def epochs_from_source_log(checkpoint_dir: str,
@@ -493,6 +516,11 @@ def run_stream(
     tail falls behind and a trigger delivers several epoch files, applies
     commute — see replay_log — and overlapping them fills scheduler/barrier
     idle; requires a DDL-free log, falls back to sequential otherwise).
+    ``on_batch`` gets each epoch's stats. A concurrent micro-batch runs
+    ``resolve_parked`` after its drain (a non-zero count rides on its last
+    epoch's stats as ``parked_resolved``) and compacts at most once, if
+    any of its epochs crossed a ``compact_every`` boundary; a sequential
+    one compacts after each such epoch. See ``_apply_epochs``.
 
     ``wire_format`` selects the on-disk event encoding: ``"parquet"`` (the
     internal event schema, default) or ``"debezium"`` / ``"maxwell"`` —
@@ -572,42 +600,8 @@ def run_stream(
                 r["epoch"]
                 for r in batch_df.select("epoch").distinct().collect()
             )
-        concurrent = (max_in_flight > 1 and len(epochs) > 1
-                      and (ddl is None or not len(ddl)))
-        if concurrent:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=max_in_flight) as pool:
-                futs = [
-                    pool.submit(
-                        apply_epoch, lake, epoch_rows(ep),
-                        int(ep), None, sha_impl, on_malformed,
-                    )
-                    for ep in epochs
-                ]
-                results = [f.result() for f in futs]
-            resolve_parked(lake, batch_df.sparkSession)
-            for ep, stats in zip(epochs, results):
-                if (
-                    compact_every > 0
-                    and not stats.get("skipped")
-                    and (int(ep) + 1) % compact_every == 0
-                ):
-                    stats["compact"] = lake.compact(target_files_per_bucket=1)
-                if on_batch is not None:
-                    on_batch(stats)
-            return
-        for ep in epochs:
-            stats = apply_epoch(lake, epoch_rows(ep), int(ep), ddl, sha_impl,
-                                on_malformed)
-            if (
-                compact_every > 0
-                and not stats.get("skipped")
-                and (int(ep) + 1) % compact_every == 0
-            ):
-                stats["compact"] = lake.compact(target_files_per_bucket=1)
-            if on_batch is not None:
-                on_batch(stats)
+        _apply_epochs(lake, epochs, epoch_rows, ddl, sha_impl, on_malformed,
+                      max_in_flight, compact_every, on_batch)
 
     writer = (
         sdf.writeStream.foreachBatch(handle)
