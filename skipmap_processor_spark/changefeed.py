@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from skipmap_processor_spark.lake import (KEY_COLS, _REPO_PRUNE_CAP,
                                            _prune_by_members,
                                            _prune_by_stats, LakeTable,
-                                           bucket_expr)
+                                           bucket_expr, lww_fold)
 
 # commit kinds that can add/remove live rows; manifests written before
 # commit-kind tagging carry no marker and are treated as merges (safe:
@@ -164,22 +164,6 @@ def _added_entries(lake: LakeTable, from_version: int,
     return uniq
 
 
-def _lww_fold(df: DataFrame) -> DataFrame:
-    """One LWW-winning row per key (tombstones included). Associative:
-    fold(fold(A) ∪ B) == fold(A ∪ B) — the post image exploits this."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*KEY_COLS).orderBy(
-        F.col("commit").desc(), F.col("event_seq").desc(),
-        F.col("_epoch").desc(),
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def table_changes(lake: LakeTable, from_version: int,
                   to_version: int | None = None) -> DataFrame:
     """Net row-level changes of the LIVE view between two snapshots.
@@ -256,14 +240,18 @@ def table_changes(lake: LakeTable, from_version: int,
     keys = None
     ktbl = getattr(cand_df, "_skipmap_key_table", None)
     if ktbl is not None and ktbl.num_rows <= 200_000:
+        import pyarrow as pa
+
         kd = ktbl.group_by(KEY_COLS).aggregate([])
-        reps = kd.column(KEY_COLS[0]).to_pylist()
-        pths = kd.column(KEY_COLS[1]).to_pylist()
-        # pure-python hashing: ~5 us/key — cap where it stops being free
-        if len(reps) <= 20_000 and all(
-                isinstance(v, str) for v in reps + pths):
+        # pure-python hashing: ~5 us/key — cap where it stops being free;
+        # both gates read Arrow metadata before any value reaches Python
+        if kd.num_rows <= 20_000 and all(
+                pa.types.is_string(col.type) and col.null_count == 0
+                for col in kd.columns):
             from skipmap_processor_spark._xxh64 import bucket_of
 
+            reps = kd.column(KEY_COLS[0]).to_pylist()
+            pths = kd.column(KEY_COLS[1]).to_pylist()
             buckets = sorted({bucket_of(r, p, nb)
                               for r, p in zip(reps, pths)})
             cand_repos = sorted(set(reps))
@@ -317,7 +305,7 @@ def table_changes(lake: LakeTable, from_version: int,
         # window drop out of the plan (measured cold at the 1000-commit
         # catch-up: 7.1 s -> 4.1 s, all of it first-use codegen of the
         # operators removed).
-        post = _lww_fold(cand_df)
+        post = lww_fold(cand_df)
         feed = post.filter(~F.col("is_deleted")).select(
             *KEY_COLS, *payload, "commit", "event_seq",
             F.lit("insert").alias("_change_type"))
@@ -330,8 +318,8 @@ def table_changes(lake: LakeTable, from_version: int,
         .join(keys, KEY_COLS, "inner")
         .localCheckpoint(eager=True)
     )
-    pre = _lww_fold(base)
-    post = _lww_fold(base.unionByName(cand_df))
+    pre = lww_fold(base)
+    post = lww_fold(base.unionByName(cand_df))
 
     p = pre.select(
         *KEY_COLS,

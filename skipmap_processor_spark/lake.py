@@ -28,29 +28,42 @@ upserts, /root/reference/src/io/PostGISDataStore.ts:829-850):
 - **Tombstones**: deletes keep ``(key, ord, is_deleted=true)`` rows so stale
   duplicate deliveries can never resurrect a deleted/renamed-away row.
 
-Concurrency: optimistic multi-writer. A commit atomically claims the next
-manifest version via exclusive file creation (``O_CREAT|O_EXCL`` — the CAS);
-a loser gets ``CommitConflict``, reloads the latest manifest, rebases its
-file-list changes, and retries with jittered backoff — Iceberg's commit
+Concurrency: optimistic multi-writer, one protocol for every commit
+(``_commit_with_rebase``). An attempt edits a base manifest and claims
+version ``base + 1`` by an atomic create-if-absent of its manifest file (a
+hard link of a complete temp file — the CAS). A loser gets
+``CommitConflict``, backs off with jitter, reloads the latest manifest and
+re-runs its own edit on it — the per-writer rebase: a data writer
+re-checks the epoch gate, drops the files it replaces and appends its
+shard; a DDL re-applies its schema change. Because the claim is always
+``base + 1``, a commit landing between load and claim fails the claim
+instead of being skipped over and lost. This is Iceberg's commit
 protocol on a filesystem catalog (reference precedent: deadlock retry with
 backoff, /root/reference/src/clustering/database/PostgreSQLClusteringDatabase.ts:136-172).
-On object stores without atomic create-if-absent you swap this for a real
-catalog (Hive/Nessie/REST) CAS; the rebase logic is identical.
+Data writes stage their files first (``_commit_staged``, a fresh
+``data/v{N}-<uuid>`` dir) and remove that dir exactly when the commit
+certainly did not happen: the pre-commit check failed, the edit found the
+epoch applied or raised, or every claim lost; never once a claim reached
+``_commit_manifest``. On object stores without atomic create-if-absent you
+swap the claim for a real catalog (Hive/Nessie/REST) CAS; the rebase logic
+is identical.
 """
 
 from __future__ import annotations
 
 import base64
+import contextlib
 import fcntl
 import hashlib
 import json
 import os
 import random
+import shutil
 import time
 import uuid
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -100,8 +113,6 @@ def lww_pick(rows: DataFrame, fpb: int, tiebreak: list | None = None,
     ``(_bucket, _salt, repo, path)``, so the write adds neither a shuffle
     nor a sort. ``num_partitions`` fixes the exchange width (an explicit
     ``files_per_bucket``); otherwise AQE may coalesce it."""
-    from pyspark.sql import Window
-
     rows = rows.withColumn("_salt", F.pmod(F.xxhash64(F.col("path")),
                                            F.lit(fpb)))
     if num_partitions:
@@ -117,6 +128,38 @@ def lww_pick(rows: DataFrame, fpb: int, tiebreak: list | None = None,
         .filter(F.col("_is_first"))
         .drop("_is_first", "_salt")
     )
+
+
+def lww_fold(df: DataFrame) -> DataFrame:
+    """One last-writer-wins row per (repo, path), tombstones included — the
+    read-side fold over files that may hold several versions of a key.
+    ``_epoch desc`` breaks ties between verbatim duplicate deliveries that
+    landed in two epochs (value-irrelevant, but deterministic for
+    engine-column reads). Associative: fold(fold(A) ∪ B) == fold(A ∪ B).
+    ``row_number() == 1`` lets Spark push a WindowGroupLimit below the
+    window."""
+    w = Window.partitionBy(*KEY_COLS).orderBy(
+        F.col("commit").desc(), F.col("event_seq").desc(),
+        F.col("_epoch").desc())
+    return (df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn"))
+
+
+@contextlib.contextmanager
+def _flocked(paths: list[str]):
+    """Hold an exclusive ``flock`` on every lock file in ``paths`` (created
+    on demand), taken in list order — callers pass one global order, so
+    overlapping holders cannot deadlock. Closing a descriptor releases its
+    lock."""
+    fds: list[int] = []
+    try:
+        for p in paths:
+            fds.append(os.open(p, os.O_CREAT | os.O_RDWR, 0o644))
+            fcntl.flock(fds[-1], fcntl.LOCK_EX)
+        yield
+    finally:
+        for fd in fds:
+            os.close(fd)
 
 
 def _spec_prune(file_nb: int, req_nb: int, bset: set[int]) -> set[int] | None:
@@ -405,9 +448,12 @@ class LakeTable:
             return json.load(f)
 
     def _commit_manifest(self, manifest: dict) -> None:
-        """Atomically claim manifest version N (CAS via O_CREAT|O_EXCL) and
-        advance the _VERSION pointer monotonically. Raises CommitConflict if
-        another writer claimed N first — the caller rebases and retries."""
+        """Atomically claim manifest version N (CAS: hard-link a complete,
+        fsynced temp file to ``v{N}.json``, which fails if the name exists)
+        and advance the _VERSION pointer monotonically. Raises
+        CommitConflict if another writer claimed N first — the caller
+        rebases and retries. The link publishes the whole file at once, so
+        a rebasing writer never reads a claimed-but-unwritten manifest."""
         v = int(manifest["version"])
         # wall-clock commit stamp (Iceberg snapshot timestamp-ms analog):
         # the resolution target for TIMESTAMP AS OF reads (version_as_of).
@@ -415,20 +461,20 @@ class LakeTable:
         # moment the winning write actually happened.
         manifest["committed_unix"] = round(time.time(), 3)
         mpath = os.path.join(self.path, "manifests", f"v{v}.json")
-        try:
-            fd = os.open(mpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-        except FileExistsError:
-            raise CommitConflict(f"manifest v{v} already committed") from None
-        with os.fdopen(fd, "w") as f:
+        tmp = f"{mpath}.tmp.{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
             json.dump(manifest, f)
             f.flush()
             os.fsync(f.fileno())
+        try:
+            os.link(tmp, mpath)
+        except FileExistsError:
+            raise CommitConflict(f"manifest v{v} already committed") from None
+        finally:
+            os.remove(tmp)
         # pointer advance under a short flock so a slow loser can't regress
         # the pointer below a newer winner's version
-        lock = os.path.join(self.path, "_VERSION.lock")
-        lf = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
-        try:
-            fcntl.flock(lf, fcntl.LOCK_EX)
+        with _flocked([os.path.join(self.path, "_VERSION.lock")]):
             vpath = os.path.join(self.path, "_VERSION")
             cur = -1
             if os.path.exists(vpath):
@@ -442,9 +488,14 @@ class LakeTable:
                     f.flush()
                     os.fsync(f.fileno())
                 os.replace(tmp, vpath)  # atomic pointer swap
-        finally:
-            fcntl.flock(lf, fcntl.LOCK_UN)
-            os.close(lf)
+
+    def _bucket_locks(self, buckets: list[int]):
+        """``_flocked`` over the table's per-bucket lock files, in
+        ascending bucket order."""
+        d = os.path.join(self.path, "_locks")
+        os.makedirs(d, exist_ok=True)
+        return _flocked([os.path.join(d, f"b{b}.lock")
+                         for b in sorted(buckets)])
 
     def _latest_version(self) -> int:
         """Authoritative latest version: max committed manifest file. Used on
@@ -458,31 +509,39 @@ class LakeTable:
                     continue
         return best
 
-    def _commit_with_rebase(self, mutate, max_retries: int = 20,
-                            kind: str = "metadata") -> dict:
-        """Optimistic-commit loop: load the latest manifest, apply ``mutate``
-        (which edits the manifest in place and may raise to abort), commit;
-        on CommitConflict, back off with jitter and retry on the new latest.
+    def _commit_with_rebase(self, mutate, kind: str = "metadata",
+                            base: dict | None = None) -> dict:
+        """The one optimistic-commit loop. Each attempt takes a base
+        manifest — ``base`` on the first attempt when given (a data
+        writer's snapshot: no listing), else the latest — lets ``mutate``
+        edit it in place, and claims version ``base + 1``. On
+        CommitConflict another writer won that version: back off with
+        jitter and rebase onto the new latest. The claim is computed from
+        the base, never re-read after ``mutate``, so a commit landing in
+        between fails the claim rather than being skipped over and lost.
 
-        ``mutate(mani) -> bool`` returns False to abort (commit not needed).
-        Returns the committed (or last-loaded) manifest.
+        ``mutate(mani) -> bool`` returns False when no commit is needed
+        and may raise to abort. Returns the committed (or, on False, the
+        loaded) manifest; raises CommitConflict when every attempt lost.
 
         ``kind`` defaults to ``metadata`` (DDL / bookkeeping commits never
         add or remove data rows — the change feed skips these versions
-        during candidate-file discovery); callers whose mutate DOES land
-        data (WAP publish) pass ``merge`` so downstream feeds see it."""
-        for attempt in range(max_retries):
-            mani = self.manifest(self._latest_version())
+        during candidate-file discovery); data commits pass ``merge`` or
+        ``compact``."""
+        for attempt in range(20):
+            mani = (base if attempt == 0 and base is not None
+                    else self.manifest(self._latest_version()))
+            version = int(mani["version"]) + 1
             if not mutate(mani):
                 return mani
-            mani["version"] = self._latest_version() + 1
+            mani["version"] = version
             mani["commit_kind"] = kind
             try:
                 self._commit_manifest(mani)
                 return mani
             except CommitConflict:
-                time.sleep(random.uniform(0.01, 0.05) * (attempt + 1))
-        raise CommitConflict(f"gave up after {max_retries} retries")
+                time.sleep(random.uniform(0.005, 0.03) * (attempt + 1))
+        raise CommitConflict(f"{kind} commit: gave up after 20 attempts")
 
     # ------------------------------------------------------- file shards
     # The file list lives in immutable, uuid-named shard JSONs; the core
@@ -1056,23 +1115,7 @@ class LakeTable:
                 if len(files) > 128:
                     fold_files, plain_files = files, []
             if fold_files:
-                # _epoch desc tie-break: verbatim duplicate deliveries
-                # landed in two epochs are identical rows — pick is
-                # value-irrelevant but made deterministic for
-                # engine-column reads.
-                from pyspark.sql import Window
-
-                w = Window.partitionBy(*KEY_COLS).orderBy(
-                    F.col("commit").desc(),
-                    F.col("event_seq").desc(),
-                    F.col("_epoch").desc(),
-                )
-                df = (
-                    _scoped(fold_files)
-                    .withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
+                df = lww_fold(_scoped(fold_files))
                 if plain_files:
                     df = df.unionByName(_scoped(plain_files))
             else:
@@ -1169,18 +1212,7 @@ class LakeTable:
         files, _ = self.files_since(commit_floor, mani)
         df = self._read_files(mani, files)
         if mani["properties"].get("has_deltas"):
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*KEY_COLS).orderBy(
-                F.col("commit").desc(),
-                F.col("event_seq").desc(),
-                F.col("_epoch").desc(),
-            )
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
+            df = lww_fold(df)
         df = df.filter(F.col("commit") > F.lit(commit_floor))
         if not include_deleted:
             df = df.filter(~F.col("is_deleted"))
@@ -1388,8 +1420,7 @@ class LakeTable:
         """
         mani = self.manifest()
         if epoch is not None and self._epoch_applied(mani, epoch):
-            return {"skipped": True, "epoch": epoch,
-                    "hwm_epoch": int(mani["properties"]["hwm_epoch"])}
+            return self._skipped(mani, epoch)
 
         nb = int(mani["num_buckets"])
         if mani["properties"].get("merge_mode") == "mor":
@@ -1446,15 +1477,7 @@ class LakeTable:
                     img = {b % s_min for b in affected}
                     affected = [b for b in range(nb) if b % s_min in img]
                 affected = sorted(set(affected))
-                lock_dir = os.path.join(self.path, "_locks")
-                os.makedirs(lock_dir, exist_ok=True)
-                fds: list[int] = []
-                try:
-                    for b in affected:
-                        fd = os.open(os.path.join(lock_dir, f"b{b}.lock"),
-                                     os.O_CREAT | os.O_RDWR, 0o644)
-                        fcntl.flock(fd, fcntl.LOCK_EX)
-                        fds.append(fd)
+                with self._bucket_locks(affected):
                     # reload under the locks: a writer sharing any bucket may
                     # have committed (and applied this very epoch) while we
                     # waited — and rescale_buckets may have changed the spec
@@ -1472,21 +1495,20 @@ class LakeTable:
                         nb = new_nb
                         continue
                     if epoch is not None and self._epoch_applied(mani, epoch):
-                        return {"skipped": True, "epoch": epoch,
-                                "hwm_epoch": int(
-                                    mani["properties"]["hwm_epoch"])}
+                        return self._skipped(mani, epoch)
                     return self._merge_cow_locked(
                         act, epoch, mani, files_per_bucket, affected,
                         post_commit_mutate)
-                finally:
-                    for fd in fds:
-                        fcntl.flock(fd, fcntl.LOCK_UN)
-                        os.close(fd)
             raise CommitConflict(
                 "CoW merge: bucket spec kept changing under us (8 restarts)")
         finally:
             if persisted_df is not None:
                 persisted_df.unpersist()
+
+    @staticmethod
+    def _skipped(mani: dict, epoch: int) -> dict:
+        return {"skipped": True, "epoch": epoch,
+                "hwm_epoch": int(mani["properties"]["hwm_epoch"])}
 
     def _merge_cow_locked(self, act: DataFrame, epoch: int | None,
                           mani: dict, files_per_bucket: int,
@@ -1508,16 +1530,6 @@ class LakeTable:
             self._as_rows(act, epoch, mani).withColumn("_src", F.lit(1)))
         result = self._pick(both, mani, files_per_bucket, len(affected),
                             head=[F.col("_src").asc()]).drop("_src")
-        new_version = mani["version"] + 1
-        out_dir = os.path.join(self.path,
-                               f"data/v{new_version}-{uuid.uuid4().hex[:8]}")
-        t0 = time.monotonic()
-        self._data_writer(result, mani).parquet(out_dir)
-        t1 = time.monotonic()
-
-        new_files = self._scan_written(out_dir, mani["schema_version"])
-        new_desc = self._write_shard(new_files, nb=nb)
-        t2 = time.monotonic()
         affected_set = set(affected)
 
         def _covered(fe: dict) -> bool:
@@ -1532,50 +1544,14 @@ class LakeTable:
                     f"incomparable bucket specs {fe['nb']} vs {nb}")
             return int(fe["bucket"]) in need
 
-        # atomic: data + schema + HWM commit together. Holding this bucket
-        # set's locks, a conflicting commit is either metadata-only
-        # (add/rename/drop column) or a CoW merge over a DISJOINT bucket
-        # set — in both cases rebasing is recomputing the carry list on the
-        # winner's manifest (drop our buckets' files, append our shard) and
-        # retrying: the winner never touched our buckets.
-        for attempt in range(20):
-            self._rewrite_shards(mani, _covered)
-            mani["shards"] = mani["shards"] + [new_desc]
-            mani["version"] = new_version
-            if epoch is not None:
-                self._mark_epoch_applied(mani, epoch)
-            if post_commit_mutate is not None:
-                # runs on the (possibly rebased) manifest AFTER the epoch
-                # gate state is final — the parked-rename bookkeeping reads
-                # the post-apply gap intervals, atomically with the data
-                post_commit_mutate(mani)
-            mani["commit_kind"] = "merge"
-            try:
-                self._commit_manifest(mani)
-                break
-            except CommitConflict:
-                time.sleep(random.uniform(0.005, 0.03) * (attempt + 1))
-                mani = self.manifest(self._latest_version())
-                new_version = mani["version"] + 1
-        else:
-            raise CommitConflict("CoW commit: gave up after 20 retries")
-        t3 = time.monotonic()
-
-        stats = {
-            "t_write": round(t1 - t0, 3),
-            "t_scan": round(t2 - t1, 3),
-            "t_commit": round(t3 - t2, 3),
-            "skipped": False,
-            "epoch": -1 if epoch is None else epoch,
-            "version": new_version,
-            "mode": "cow",
-            "affected_buckets": affected,
-            "files_written": len(new_files),
-            "rows_written": sum(fe["rows"] for fe in new_files),
-            "per_bucket_rows": {fe["bucket"]: fe["rows"] for fe in new_files},
-        }
-        self._append_ledger(stats)
-        stats["t_ledger"] = round(time.monotonic() - t3, 3)
+        # Holding this bucket set's locks, a conflicting commit is either
+        # metadata-only (add/rename/drop column) or a CoW merge over a
+        # DISJOINT bucket set — rebasing recomputes the carry list on the
+        # winner's manifest: the winner never touched our buckets.
+        stats = self._commit_staged(result, mani, epoch, drop=_covered,
+                                    post_commit_mutate=post_commit_mutate)
+        if not stats["skipped"]:
+            stats["affected_buckets"] = affected
         return stats
 
     def _as_rows(self, actions: DataFrame, epoch: int | None,
@@ -1709,83 +1685,100 @@ class LakeTable:
         # full-width O(n log n) pass AND break bucket contiguity, forcing
         # FileFormatWriter to insert its own sort (measured: two redundant
         # sorts of content-heavy rows per epoch)
+        # Delta appends commute: a rebase only re-appends the shard and
+        # recounts has_deltas on the winner's manifest.
+        return self._commit_staged(rows, mani, epoch, recount_deltas=True,
+                                   pre_commit_check=pre_commit_check,
+                                   post_commit_mutate=post_commit_mutate)
 
-        new_version = mani["version"] + 1
-        # staging dir is uuid-suffixed: two racing writers must never share a
-        # staging path (mode=overwrite would silently delete the loser's
-        # files before its manifest entry lands)
-        out_dir = os.path.join(self.path,
-                               f"data/v{new_version}-{uuid.uuid4().hex[:8]}")
-        _t0 = time.monotonic()
-        self._data_writer(rows, mani).parquet(out_dir)
-        _t1 = time.monotonic()
+    def _commit_staged(self, rows: DataFrame, mani: dict, epoch: int | None,
+                       kind: str = "merge", drop=None,
+                       recount_deltas: bool = False, pre_commit_check=None,
+                       post_commit_mutate=None) -> dict:
+        """Make ``rows`` (bucketed by ``_bucket``) visible in one manifest
+        commit — the staged-commit protocol every data write shares.
 
-        if pre_commit_check is not None:
-            # optimistic execution invalidated (e.g. renames observed in a
-            # batch run through the rename-free fast path): nothing was
-            # committed — the staged files are invisible without a manifest
-            # entry; delete them and let the caller re-run the general path.
-            # A check that raises (ord contract) must not orphan them either.
-            import shutil as _shutil
+        1. Write ``rows`` to a fresh ``data/v{N}-<uuid>`` staging dir, N
+           = ``mani``'s version + 1 (uuid: racing writers never share a
+           staging path — mode=overwrite would delete the loser's files).
+        2. ``pre_commit_check()`` returning False (an optimistic fast path
+           invalidated) reports ``aborted``; then the footer scan and one
+           new shard.
+        3. ``_commit_with_rebase`` from ``mani``. Each attempt re-checks
+           the epoch gate on its base (already applied: report
+           ``skipped``), drops the files ``drop(fe)`` selects (the files
+           this write replaces), appends the shard, marks the epoch
+           applied, runs ``post_commit_mutate`` (it sees the post-apply
+           gap intervals, atomically with the data) and, with
+           ``recount_deltas``, recomputes ``has_deltas``.
 
-            try:
-                ok = pre_commit_check()
-            except BaseException:
-                _shutil.rmtree(out_dir, ignore_errors=True)
-                raise
-            if not ok:
-                _shutil.rmtree(out_dir, ignore_errors=True)
-                return {"aborted": True, "epoch": epoch}
+        The staged dir is removed exactly when the commit certainly did
+        not happen: the check returned False or raised, an edit found the
+        epoch applied or raised, or every claim lost. Any other error once
+        a claim reached ``_commit_manifest`` leaves the files in place —
+        the manifest may exist; ``vacuum`` reclaims true orphans.
 
-        new_files = self._scan_written(out_dir, mani["schema_version"])
-        new_desc = self._write_shard(new_files, nb=nb)
-        _t2 = time.monotonic()
-        # optimistic CAS commit: delta appends commute, so a conflict rebases
-        # by re-appending our shard onto the winner's manifest and retrying
-        # (jittered backoff, Iceberg commit protocol). The epoch gate is
-        # re-checked on the rebased manifest — if a racing writer applied the
-        # same epoch, our staged files are rolled back and we report skipped.
-        for attempt in range(20):
-            mani["shards"] = mani.get("shards", []) + [new_desc]
-            mani["version"] = new_version
+        Returns the merge stats (``kind="merge"`` also appends the lineage
+        ledger row), or the ``aborted``/``skipped`` dict."""
+        nb = int(mani["num_buckets"])
+        out_dir = os.path.join(self.path, "data",
+                               f"v{int(mani['version']) + 1}-"
+                               f"{uuid.uuid4().hex[:8]}")
+        claiming = skipped = False
+
+        def mutate(m: dict) -> bool:
+            nonlocal claiming, skipped
+            claiming = False
+            if epoch is not None and self._epoch_applied(m, epoch):
+                skipped = True
+                return False
+            if drop is not None:
+                self._rewrite_shards(m, drop)
+            m["shards"] = m.get("shards", []) + [desc]
             if epoch is not None:
-                self._mark_epoch_applied(mani, epoch)
+                self._mark_epoch_applied(m, epoch)
             if post_commit_mutate is not None:
-                post_commit_mutate(mani)
-            mani["properties"]["has_deltas"] = self._has_multi(mani)
-            mani["commit_kind"] = "merge"
-            try:
-                self._commit_manifest(mani)
-                break
-            except CommitConflict:
-                time.sleep(random.uniform(0.005, 0.03) * (attempt + 1))
-                mani = self.manifest(self._latest_version())
-                if epoch is not None and self._epoch_applied(mani, epoch):
-                    import shutil as _shutil
+                post_commit_mutate(m)
+            if recount_deltas:
+                m["properties"]["has_deltas"] = self._has_multi(m)
+            claiming = True
+            return True
 
-                    _shutil.rmtree(out_dir, ignore_errors=True)
-                    return {"skipped": True, "epoch": epoch,
-                            "hwm_epoch": int(mani["properties"]["hwm_epoch"])}
-                new_version = mani["version"] + 1
-        else:
-            raise CommitConflict("MOR commit: gave up after 20 retries")
-        _t3 = time.monotonic()
-
+        try:
+            t0 = time.monotonic()
+            self._data_writer(rows, mani).parquet(out_dir)
+            t1 = time.monotonic()
+            if pre_commit_check is not None and not pre_commit_check():
+                shutil.rmtree(out_dir, ignore_errors=True)
+                return {"aborted": True, "epoch": epoch}
+            new_files = self._scan_written(out_dir, mani["schema_version"])
+            desc = self._write_shard(new_files, nb=nb)
+            t2 = time.monotonic()
+            mani = self._commit_with_rebase(mutate, kind, base=mani)
+        except BaseException as e:
+            if not claiming or isinstance(e, CommitConflict):
+                shutil.rmtree(out_dir, ignore_errors=True)
+            raise
+        if skipped:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            return self._skipped(mani, epoch)
+        t3 = time.monotonic()
         stats = {
-            "t_write": round(_t1 - _t0, 3),
-            "t_scan": round(_t2 - _t1, 3),
-            "t_commit": round(_t3 - _t2, 3),
+            "t_write": round(t1 - t0, 3),
+            "t_scan": round(t2 - t1, 3),
+            "t_commit": round(t3 - t2, 3),
             "skipped": False,
             "epoch": -1 if epoch is None else epoch,
-            "version": new_version,
-            "mode": "mor",
+            "version": int(mani["version"]),
+            "mode": mani["properties"].get("merge_mode", "cow"),
             "affected_buckets": sorted({fe["bucket"] for fe in new_files}),
             "files_written": len(new_files),
             "rows_written": sum(fe["rows"] for fe in new_files),
             "per_bucket_rows": {fe["bucket"]: fe["rows"] for fe in new_files},
         }
-        self._append_ledger(stats)
-        stats["t_ledger"] = round(time.monotonic() - _t3, 3)
+        if kind == "merge":
+            self._append_ledger(stats)
+            stats["t_ledger"] = round(time.monotonic() - t3, 3)
         return stats
 
     def _data_writer(self, df: DataFrame, mani: dict):
@@ -2399,15 +2392,7 @@ class LakeTable:
             raise ValueError(
                 f"rescale must grow by an integer factor: {cur} -> {new_nb}")
 
-        lock_dir = os.path.join(self.path, "_locks")
-        os.makedirs(lock_dir, exist_ok=True)
-        fds: list[int] = []
-        try:
-            for b in range(cur):
-                fd = os.open(os.path.join(lock_dir, f"b{b}.lock"),
-                             os.O_CREAT | os.O_RDWR, 0o644)
-                fcntl.flock(fd, fcntl.LOCK_EX)
-                fds.append(fd)
+        with self._bucket_locks(range(cur)):
 
             def mutate(mani: dict) -> bool:
                 old = int(mani["num_buckets"])
@@ -2438,10 +2423,6 @@ class LakeTable:
             mani = self._commit_with_rebase(mutate)
             return {"rescaled": True, "num_buckets": int(new_nb),
                     "version": int(mani["version"])}
-        finally:
-            for fd in fds:
-                fcntl.flock(fd, fcntl.LOCK_UN)
-                os.close(fd)
 
     def compaction_plan(self, max_delta_depth: int = 4,
                         min_small_file_bytes: int = 32 << 20,
@@ -2520,7 +2501,6 @@ class LakeTable:
         a concurrent MOR delta append rebase-retries cleanly (its new files
         are carried, has_deltas recomputed)."""
         mani = self.manifest()
-        base_version = mani["version"]
         nb_cur = int(mani["num_buckets"])
         hwm = int(mani["properties"]["hwm_epoch"])
         # bucket ids only collide within a spec — key groups by (nb, bucket)
@@ -2556,35 +2536,16 @@ class LakeTable:
         folded = self.fold_ledger()
         if not todo:
             return {"compacted_buckets": 0, "ledger_files_folded": folded}
-        folded_paths = {fe["path"] for fs in todo.values() for fe in fs}
-        nb = int(mani["num_buckets"])
-        # Fused single-exchange fold (same trick as the ingest fast path):
-        # the naive read()+rewrite costs TWO exchanges and TWO sorts — the
-        # MOR read window shuffles+sorts by key to pick LWW winners, then
-        # the write repartitions+sorts by bucket. Here the ONLY exchange is
-        # the bucket-partitioned window whose sort (_bucket, key, ord desc)
-        # both marks each key's first (= winning) row via lag and leaves the
-        # data in exactly the layout the dynamic-partition writer needs, so
-        # its own sort is elided. Files are pinned to base_version so the
-        # fold set matches folded_paths exactly.
-        from pyspark.sql import Window
-
+        # Fused single-exchange fold (same kernel as the ingest write): the
+        # naive read()+rewrite costs TWO exchanges and TWO sorts — the MOR
+        # read window shuffles+sorts by key, then the write repartitions+
+        # sorts by bucket. lww_pick's one bucket-partitioned exchange both
+        # picks each key's winner and leaves the rows in the layout the
+        # partitioned writer needs, so its own sort is elided. Files are
+        # pinned to the snapshot so the fold set is exactly `fold_files`.
         fold_files = [fe for fs in todo.values() for fe in fs]
-        df = self._read_files(mani, fold_files).withColumn(
-            "_bucket", bucket_expr(nb)
-        )
-        w = Window.partitionBy("_bucket").orderBy(
-            F.col("repo").asc(), F.col("path").asc(),
-            F.col("commit").desc(), F.col("event_seq").desc(),
-            F.col("_epoch").desc(),
-        )
-        key = F.concat_ws("\x00", *KEY_COLS)
-        prev = F.lag(key).over(w)
-        df = (
-            df.withColumn("_is_first", prev.isNull() | (prev != key))
-            .filter(F.col("_is_first"))
-            .drop("_is_first")
-        )
+        df = lww_pick(self._read_files(mani, fold_files).withColumn(
+            "_bucket", bucket_expr(nb_cur)), 1, [F.col("_epoch").desc()])
         horizon = None
         if retention_epochs is not None:
             # AFTER winner selection: pre-filtering would let an older
@@ -2601,31 +2562,14 @@ class LakeTable:
             df = df.filter(
                 ~(F.col("is_deleted") & (F.col("_epoch") <= F.lit(horizon)))
             )
-        new_version = base_version + 1
-        out_dir = os.path.join(
-            self.path, f"data/v{new_version}-compact-{uuid.uuid4().hex[:8]}")
-        self._data_writer(df, mani).parquet(out_dir)
-        new_files = self._scan_written(out_dir, mani["schema_version"])
-        new_desc = self._write_shard(new_files, nb=nb)
-        for attempt in range(20):
-            self._rewrite_shards(mani, lambda fe: fe["path"] in folded_paths)
-            mani["shards"] = mani["shards"] + [new_desc]
-            mani["version"] = new_version
-            mani["properties"]["has_deltas"] = self._has_multi(mani)
-            # a logical no-op for the LIVE-rows view (LWW fold + tombstone
-            # GC never changes a non-deleted key's winning row) — the change
-            # feed skips this version's files during candidate discovery
-            mani["commit_kind"] = "compact"
-            try:
-                self._commit_manifest(mani)
-                break
-            except CommitConflict:
-                time.sleep(random.uniform(0.005, 0.03) * (attempt + 1))
-                mani = self.manifest(self._latest_version())
-                new_version = mani["version"] + 1
-        else:
-            raise CommitConflict("compact: gave up after 20 retries")
-        return {"compacted_buckets": len(todo), "version": new_version,
+        folded_paths = {fe["path"] for fe in fold_files}
+        # kind "compact": a logical no-op for the LIVE-rows view (LWW fold +
+        # tombstone GC never changes a non-deleted key's winning row) — the
+        # change feed skips this version's files during candidate discovery
+        stats = self._commit_staged(
+            df, mani, None, kind="compact",
+            drop=lambda fe: fe["path"] in folded_paths, recount_deltas=True)
+        return {"compacted_buckets": len(todo), "version": stats["version"],
                 "retention_horizon": horizon, "ledger_files_folded": folded}
 
     def vacuum(self, keep_versions: int = 2,
@@ -2724,10 +2668,7 @@ class LakeTable:
         d = os.path.join(self.path, "_ledger")
         if not os.path.exists(d):
             return 0
-        lf = os.open(os.path.join(self.path, "_LEDGER.lock"),
-                     os.O_CREAT | os.O_RDWR, 0o644)
-        try:
-            fcntl.flock(lf, fcntl.LOCK_EX)
+        with _flocked([os.path.join(self.path, "_LEDGER.lock")]):
             files = sorted(fn for fn in os.listdir(d)
                            if fn.endswith(".parquet"))
             if len(files) <= 1:
@@ -2751,6 +2692,3 @@ class LakeTable:
                 except FileNotFoundError:
                     pass
             return len(files)
-        finally:
-            fcntl.flock(lf, fcntl.LOCK_UN)
-            os.close(lf)
