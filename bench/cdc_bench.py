@@ -92,11 +92,12 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
         shuffle_partitions: int | None = None,
         events_dir: str | None = None,
         in_flight: int = 1) -> dict:
-    from pyspark.sql import functions as F
-
     from skipmap_processor_spark.lake import LakeTable
     from skipmap_processor_spark.session import get_spark
-    from skipmap_processor_spark.streaming.pipeline import _apply_epochs
+    from skipmap_processor_spark.streaming.pipeline import (
+        _apply_epochs,
+        _epoch_slice,
+    )
 
     # an explicit events_dir (e.g. one shard of a pre-split log) bypasses
     # generation; n_events must then be the actual row count of that dir
@@ -169,8 +170,8 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
     ev = spark.read.parquet(events_dir)
     epochs = sorted(r["epoch"] for r in ev.select("epoch").distinct().collect())
 
-    def rows_of(ep):
-        return ev.filter(F.col("epoch") == ep).drop("epoch")
+    def rows_of(eps):
+        return _epoch_slice(ev, eps, epochs)
 
     if warmup_epochs > 0:
         # untimed JIT/codegen/Python-worker warmup against a scratch lake —

@@ -1399,7 +1399,8 @@ class LakeTable:
                     affected_buckets: list[int] | None = None,
                     pre_partitioned: bool = False,
                     pre_commit_check=None,
-                    post_commit_mutate=None) -> dict:
+                    post_commit_mutate=None,
+                    epochs: list[int] | None = None) -> dict:
         """MERGE of an action batch, gated by epoch HWM.
 
         ``actions`` columns: repo, path, commit, event_seq,
@@ -1412,21 +1413,30 @@ class LakeTable:
         partitioned by ``lww_pick``. ``files_per_bucket`` > 1 fixes at
         least that many write tasks per bucket.
 
+        ``epochs`` (MOR only; ascending, ending in ``epoch``) merges a
+        group of epochs in one commit: ``actions`` then carries each row's
+        own ``_epoch``, the gate skips the whole merge if any of them is
+        applied, and the commit marks all of them (see ``_commit_staged``).
+
         Semantics per key (the ord gate makes replay idempotent):
           - no target row            -> insert (tombstone row for deletes)
           - target ord >= action ord -> keep target (stale duplicate)
           - action newer + upsert    -> replace row
           - action newer + delete    -> tombstone with the delete's ord
         """
+        marks = list(epochs) if epochs else (
+            [] if epoch is None else [epoch])
         mani = self.manifest()
-        if epoch is not None and self._epoch_applied(mani, epoch):
-            return self._skipped(mani, epoch)
+        if any(self._epoch_applied(mani, e) for e in marks):
+            return self._skipped(mani, marks[-1])
 
         nb = int(mani["num_buckets"])
         if mani["properties"].get("merge_mode") == "mor":
-            return self._merge_mor(actions, epoch, mani, files_per_bucket,
+            return self._merge_mor(actions, marks, mani, files_per_bucket,
                                    pre_partitioned, pre_commit_check,
-                                   post_commit_mutate)
+                                   post_commit_mutate, epochs is not None)
+        if epochs is not None:
+            raise ValueError("merge_batch(epochs=...) needs a MOR table")
 
         # CoW rewrites of the SAME bucket don't commute (a concurrent
         # rewrite would be silently lost), but DISJOINT-bucket rewrites do:
@@ -1548,20 +1558,23 @@ class LakeTable:
         # metadata-only (add/rename/drop column) or a CoW merge over a
         # DISJOINT bucket set — rebasing recomputes the carry list on the
         # winner's manifest: the winner never touched our buckets.
-        stats = self._commit_staged(result, mani, epoch, drop=_covered,
+        stats = self._commit_staged(result, mani,
+                                    [] if epoch is None else [epoch],
+                                    drop=_covered,
                                     post_commit_mutate=post_commit_mutate)
         if not stats["skipped"]:
             stats["affected_buckets"] = affected
         return stats
 
-    def _as_rows(self, actions: DataFrame, epoch: int | None,
-                 mani: dict) -> DataFrame:
+    def _as_rows(self, actions: DataFrame, epoch: int | None, mani: dict,
+                 row_epochs: bool = False) -> DataFrame:
         """Action rows in the table's row layout: ``op`` becomes
-        ``is_deleted``, the epoch is stamped, and payload is cast to the
-        current types of ``mani`` (null on deletes and for payload columns
-        the batch lacks). The cast keeps a file's physical type equal to
-        its recorded schema version when a batch still carries a
-        pre-widening narrow type. ``_bucket`` passes through."""
+        ``is_deleted``, the epoch is stamped (with ``row_epochs``, each
+        row's own ``_epoch`` column), and payload is cast to the current
+        types of ``mani`` (null on deletes and for payload columns the
+        batch lacks). The cast keeps a file's physical type equal to its
+        recorded schema version when a batch still carries a pre-widening
+        narrow type. ``_bucket`` passes through."""
         pay_types = {c["name"]: c["type"] for c in self.current_schema(mani)}
         is_del = F.col("op") == F.lit("delete")
 
@@ -1576,7 +1589,9 @@ class LakeTable:
             F.col("commit"),
             F.col("event_seq").cast("bigint").alias("event_seq"),
             is_del.alias("is_deleted"),
-            F.lit(-1 if epoch is None else epoch).cast("bigint").alias("_epoch"),
+            (F.col("_epoch") if row_epochs
+             else F.lit(-1 if epoch is None else epoch)).cast("bigint")
+            .alias("_epoch"),
             *[value(c).alias(c) for c in self.payload_columns(mani)],
             *([F.col("_bucket")] if "_bucket" in actions.columns else []),
         )
@@ -1664,17 +1679,19 @@ class LakeTable:
         actions = self.read().filter(pred).select(*cols)
         return self.merge_batch(actions, epoch=epoch)
 
-    def _merge_mor(self, actions: DataFrame, epoch: int | None, mani: dict,
+    def _merge_mor(self, actions: DataFrame, marks: list[int], mani: dict,
                    files_per_bucket: int = 1,
                    pre_partitioned: bool = False,
                    pre_commit_check=None,
-                   post_commit_mutate=None) -> dict:
+                   post_commit_mutate=None,
+                   row_epochs: bool = False) -> dict:
         """Merge-on-read: append the batch's LWW winners as delta rows — no
         read of existing data, no join. Cost is proportional to the batch,
         never to the table. Readers resolve versions via the LWW window
         (read()); compact() folds deltas back to one row per key."""
         nb = int(mani["num_buckets"])
-        rows = self._as_rows(actions, epoch, mani)
+        rows = self._as_rows(actions, marks[-1] if marks else None, mani,
+                             row_epochs)
         if not pre_partitioned:
             # the fast path (prepare_actions_fast) picked upstream; select()
             # preserves that partitioning, so its write adds no shuffle
@@ -1687,11 +1704,11 @@ class LakeTable:
         # sorts of content-heavy rows per epoch)
         # Delta appends commute: a rebase only re-appends the shard and
         # recounts has_deltas on the winner's manifest.
-        return self._commit_staged(rows, mani, epoch, recount_deltas=True,
+        return self._commit_staged(rows, mani, marks, recount_deltas=True,
                                    pre_commit_check=pre_commit_check,
                                    post_commit_mutate=post_commit_mutate)
 
-    def _commit_staged(self, rows: DataFrame, mani: dict, epoch: int | None,
+    def _commit_staged(self, rows: DataFrame, mani: dict, epochs: list[int],
                        kind: str = "merge", drop=None,
                        recount_deltas: bool = False, pre_commit_check=None,
                        post_commit_mutate=None) -> dict:
@@ -1705,12 +1722,12 @@ class LakeTable:
            invalidated) reports ``aborted``; then the footer scan and one
            new shard.
         3. ``_commit_with_rebase`` from ``mani``. Each attempt re-checks
-           the epoch gate on its base (already applied: report
-           ``skipped``), drops the files ``drop(fe)`` selects (the files
-           this write replaces), appends the shard, marks the epoch
-           applied, runs ``post_commit_mutate`` (it sees the post-apply
-           gap intervals, atomically with the data) and, with
-           ``recount_deltas``, recomputes ``has_deltas``.
+           the epoch gate on its base (any of ``epochs`` already applied:
+           report ``skipped``), drops the files ``drop(fe)`` selects (the
+           files this write replaces), appends the shard, marks every
+           epoch of ``epochs`` applied, runs ``post_commit_mutate`` (it
+           sees the post-apply gap intervals, atomically with the data)
+           and, with ``recount_deltas``, recomputes ``has_deltas``.
 
         The staged dir is removed exactly when the commit certainly did
         not happen: the check returned False or raised, an edit found the
@@ -1719,8 +1736,15 @@ class LakeTable:
         the manifest may exist; ``vacuum`` reclaims true orphans.
 
         Returns the merge stats (``kind="merge"`` also appends the lineage
-        ledger row), or the ``aborted``/``skipped`` dict."""
+        ledger: one row per (epoch, bucket) written), or the
+        ``aborted``/``skipped`` dict. ``epochs`` empty is an epoch-less
+        write (ledger epoch -1). Several epochs (a MOR group) split each
+        bucket's rows by the staged files' ``_epoch`` values during the
+        footer scan, also reported as ``per_epoch_bucket_rows``; one epoch
+        attributes every written row to it (CoW rewrites whole buckets)."""
         nb = int(mani["num_buckets"])
+        epoch = epochs[-1] if epochs else None
+        group = len(epochs) > 1
         out_dir = os.path.join(self.path, "data",
                                f"v{int(mani['version']) + 1}-"
                                f"{uuid.uuid4().hex[:8]}")
@@ -1729,14 +1753,14 @@ class LakeTable:
         def mutate(m: dict) -> bool:
             nonlocal claiming, skipped
             claiming = False
-            if epoch is not None and self._epoch_applied(m, epoch):
+            if any(self._epoch_applied(m, e) for e in epochs):
                 skipped = True
                 return False
             if drop is not None:
                 self._rewrite_shards(m, drop)
             m["shards"] = m.get("shards", []) + [desc]
-            if epoch is not None:
-                self._mark_epoch_applied(m, epoch)
+            for e in epochs:
+                self._mark_epoch_applied(m, e)
             if post_commit_mutate is not None:
                 post_commit_mutate(m)
             if recount_deltas:
@@ -1751,7 +1775,18 @@ class LakeTable:
             if pre_commit_check is not None and not pre_commit_check():
                 shutil.rmtree(out_dir, ignore_errors=True)
                 return {"aborted": True, "epoch": epoch}
-            new_files = self._scan_written(out_dir, mani["schema_version"])
+            new_files = self._scan_written(out_dir, mani["schema_version"],
+                                           count_epochs=group)
+            per_bucket: dict[int, int] = {}
+            by_epoch: dict[int, dict[int, int]] = {ep: {} for ep in epochs}
+            for fe in new_files:
+                b = fe["bucket"]
+                per_bucket[b] = per_bucket.get(b, 0) + fe["rows"]
+                for ep, n in fe.pop("epoch_rows", {}).items():
+                    per = by_epoch.setdefault(ep, {})
+                    per[b] = per.get(b, 0) + n
+            if not group:
+                by_epoch = {-1 if epoch is None else epoch: per_bucket}
             desc = self._write_shard(new_files, nb=nb)
             t2 = time.monotonic()
             mani = self._commit_with_rebase(mutate, kind, base=mani)
@@ -1774,10 +1809,12 @@ class LakeTable:
             "affected_buckets": sorted({fe["bucket"] for fe in new_files}),
             "files_written": len(new_files),
             "rows_written": sum(fe["rows"] for fe in new_files),
-            "per_bucket_rows": {fe["bucket"]: fe["rows"] for fe in new_files},
+            "per_bucket_rows": per_bucket,
         }
+        if group:
+            stats["per_epoch_bucket_rows"] = by_epoch
         if kind == "merge":
-            self._append_ledger(stats)
+            self._append_ledger(by_epoch, stats["version"])
             stats["t_ledger"] = round(time.monotonic() - t3, 3)
         return stats
 
@@ -1806,8 +1843,15 @@ class LakeTable:
 
         return self._commit_with_rebase(mutate)
 
-    def _scan_written(self, out_dir: str, schema_version: int) -> list[dict]:
+    def _scan_written(self, out_dir: str, schema_version: int,
+                      count_epochs: bool = False) -> list[dict]:
+        """Manifest entries of the parquet files under ``out_dir``, from
+        their footers. ``count_epochs`` adds ``epoch_rows`` (``_epoch``
+        value -> rows) to each entry: the footer range when the file holds
+        one epoch, else a read of its ``_epoch`` column."""
         from concurrent.futures import ThreadPoolExecutor
+
+        import pyarrow.compute as pc
 
         paths = []
         for bdir in sorted(os.listdir(out_dir)):
@@ -1831,18 +1875,27 @@ class LakeTable:
                 members = _build_members([rng[0]])
             elif md.num_rows <= _MEMBER_ROW_CAP:
                 try:
-                    import pyarrow.compute as pc
-
                     col = pf.read(columns=["repo"]).column("repo")
                     members = _build_members(pc.unique(col).to_pylist())
                 except Exception:  # pragma: no cover - advisory, never fatal
                     members = None
-            return md.num_rows, stats, os.path.getsize(t[1]), members
+            ep_rows = None
+            if count_epochs:
+                rng = stats.get("_epoch")
+                if rng is not None and rng[0] == rng[1]:
+                    ep_rows = {int(rng[0]): md.num_rows}
+                else:
+                    vc = pc.value_counts(pf.read(columns=["_epoch"])
+                                         .column("_epoch"))
+                    ep_rows = {int(v["values"]): int(v["counts"])
+                               for v in vc.to_pylist()}
+            return md.num_rows, stats, os.path.getsize(t[1]), members, ep_rows
 
         with ThreadPoolExecutor(max_workers=16) as ex:
             metas = list(ex.map(_footer, paths))
         out = []
-        for (b, fp), (n, stats, nbytes, members) in zip(paths, metas):
+        for (b, fp), (n, stats, nbytes, members, ep_rows) in zip(paths,
+                                                                 metas):
             fe = {
                 "path": os.path.relpath(fp, self.path),
                 "bucket": b,
@@ -1854,38 +1907,35 @@ class LakeTable:
                 fe["stats"] = stats
             if members:
                 fe["members"] = {"repo": members}
+            if ep_rows is not None:
+                fe["epoch_rows"] = ep_rows
             out.append(fe)
         return out
 
     # ------------------------------------------------------------- ledger
 
-    def _append_ledger(self, stats: dict) -> None:
+    def _append_ledger(self, by_epoch: dict[int, dict[int, int]],
+                       version: int) -> None:
         """Per-partition lineage ledger (observational; the exactly-once gate
-        is the manifest HWM, which commits atomically with the data)."""
+        is the manifest HWM, which commits atomically with the data): one
+        file per commit, one (epoch, bucket, rows, version) row per bucket
+        of ``by_epoch`` (epoch -> bucket -> rows); an epoch that wrote no
+        rows gets one (epoch, -1, 0) row."""
         import pandas as pd
         import pyarrow as pa
 
         rows = [
-            {
-                "epoch": int(stats["epoch"]),
-                "bucket": int(b),
-                "rows": int(r),
-                "version": int(stats["version"]),
-            }
-            for b, r in stats["per_bucket_rows"].items()
-        ] or [
-            {
-                "epoch": int(stats["epoch"]),
-                "bucket": -1,
-                "rows": 0,
-                "version": int(stats["version"]),
-            }
+            {"epoch": int(e), "bucket": int(b), "rows": int(r),
+             "version": int(version)}
+            for e in sorted(by_epoch)
+            for b, r in (by_epoch[e] or {-1: 0}).items()
         ]
         d = os.path.join(self.path, "_ledger")
         os.makedirs(d, exist_ok=True)
         pq.write_table(
             pa.Table.from_pandas(pd.DataFrame(rows), preserve_index=False),
-            os.path.join(d, f"epoch-{stats['epoch']}-{uuid.uuid4().hex[:8]}.parquet"),
+            os.path.join(d, f"epoch-{max(by_epoch)}-"
+                            f"{uuid.uuid4().hex[:8]}.parquet"),
         )
 
     def read_ledger(self) -> DataFrame:
@@ -2351,9 +2401,7 @@ class LakeTable:
             for fe in entries:
                 b = int(fe["bucket"])
                 pbr[b] = pbr.get(b, 0) + int(fe.get("rows", 0))
-            self._append_ledger({"epoch": -1,
-                                 "version": int(mani["version"]),
-                                 "per_bucket_rows": pbr})
+            self._append_ledger({-1: pbr}, int(mani["version"]))
         return stats
 
     def rescale_buckets(self, new_nb: int) -> dict:
@@ -2567,7 +2615,7 @@ class LakeTable:
         # tombstone GC never changes a non-deleted key's winning row) — the
         # change feed skips this version's files during candidate discovery
         stats = self._commit_staged(
-            df, mani, None, kind="compact",
+            df, mani, [], kind="compact",
             drop=lambda fe: fe["path"] in folded_paths, recount_deltas=True)
         return {"compacted_buckets": len(todo), "version": stats["version"],
                 "retention_horizon": horizon, "ledger_files_folded": folded}

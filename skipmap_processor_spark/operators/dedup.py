@@ -396,24 +396,30 @@ def prepare_actions_fast(
     events: DataFrame, lake: LakeTable, sha_impl: str = "arrow",
     files_per_bucket: int = 1
 ) -> DataFrame:
-    """Single-exchange action preparation for rename-free MOR batches.
+    """Single-exchange action preparation for rename-free MOR batches of
+    one or more epochs.
 
     ``lww_pick`` runs first, so normalization + sha follow as per-row
     expressions over the winners only (no further exchange), and the write
-    proceeds without re-shuffling. Returns a DataFrame already partitioned
-    by ``_bucket`` — pass ``pre_partitioned=True`` to ``merge_batch``.
+    proceeds without re-shuffling. Each row carries its event's ``epoch``
+    as ``_epoch``; equal-ord rows of different epochs resolve to the later
+    epoch, as ``lake.lww_fold`` does at read time. Returns a DataFrame
+    already partitioned by ``_bucket`` — pass ``pre_partitioned=True`` and
+    the batch's ``epochs`` to ``merge_batch``.
     """
     mani = lake.manifest()
     nb = int(mani["num_buckets"])
     ev = _with_map_extras(events).select(
         *KEY_COLS, "commit", "event_seq", "op", "lang", "content", "extra_cols",
+        F.col("epoch").cast("bigint").alias("_epoch"),
         bucket_expr(nb).alias("_bucket"),
     )
     picked = lww_pick(ev, salt_fanout(events.sparkSession, nb,
-                                      files_per_bucket))
+                                      files_per_bucket),
+                      [F.col("_epoch").desc()])
     return picked.select(
         *KEY_COLS, "commit", "event_seq", _action_op(),
-        *_payload_cols(lake, mani, sha_impl), "_bucket",
+        *_payload_cols(lake, mani, sha_impl), "_epoch", "_bucket",
     )
 
 

@@ -128,6 +128,13 @@ def _null_image():
     return F.lit(None).cast(_image())
 
 
+def _epoch_passthrough(df: DataFrame) -> list:
+    """``df``'s ``epoch`` column (a tailer's ``epoch=K`` partition), if it
+    has one, carried through the decode as ``_part_epoch``."""
+    return ([F.col("epoch").alias("_part_epoch")]
+            if "epoch" in df.columns else [])
+
+
 def parse_debezium(df: DataFrame, value_col: str = "value") -> DataFrame:
     """Debezium JSON documents → internal event rows.
 
@@ -136,9 +143,11 @@ def parse_debezium(df: DataFrame, value_col: str = "value") -> DataFrame:
     repo, path, new_path, lang, content, schema_ver, extra_cols). Unknown
     ops and unparseable documents yield null op / null keys for the
     quarantine layer to divert — they are never silently dropped here.
+    An ``epoch`` column of ``df`` (the tailer's ``epoch=K`` partition)
+    supplies ``epoch`` instead of ``source.epoch``.
     """
     v = F.from_json(F.col(value_col), debezium_value_schema())
-    d = df.select(v.alias("v"))
+    d = df.select(v.alias("v"), *_epoch_passthrough(df))
 
     before, after, src = F.col("v.before"), F.col("v.after"), F.col("v.source")
     is_del = F.col("v.op") == "d"
@@ -161,7 +170,8 @@ def parse_debezium(df: DataFrame, value_col: str = "value") -> DataFrame:
         .when(is_del, F.lit("delete"))
     )
     return d.select(
-        F.coalesce(src["epoch"], F.lit(0)).alias("epoch"),
+        (F.col("_part_epoch") if "_part_epoch" in d.columns
+         else F.coalesce(src["epoch"], F.lit(0))).alias("epoch"),
         src["seq"].alias("event_seq"),
         F.coalesce(img["commit"], src["txId"]).alias("commit"),
         F.timestamp_millis(
@@ -189,10 +199,11 @@ def parse_maxwell(df: DataFrame, value_col: str = "value") -> DataFrame:
 
     ``type`` insert/bootstrap-insert → insert, delete → delete; update →
     update unless ``old`` moved the key (→ rename). Maxwell has no epoch;
-    rows parse with epoch 0 for the tailer to stamp per microbatch.
+    rows parse with epoch 0, or with ``df``'s ``epoch`` column (the
+    tailer's ``epoch=K`` partition) when it has one.
     """
     v = F.from_json(F.col(value_col), maxwell_value_schema())
-    d = df.select(v.alias("v"))
+    d = df.select(v.alias("v"), *_epoch_passthrough(df))
 
     data, old = F.col("v.data"), F.col("v.old")
     is_rename = (
@@ -218,7 +229,8 @@ def parse_maxwell(df: DataFrame, value_col: str = "value") -> DataFrame:
     old_repo = F.coalesce(old["repo"], data["repo"])
     old_path = F.coalesce(old["path"], data["path"])
     return d.select(
-        F.lit(0).cast("long").alias("epoch"),
+        (F.col("_part_epoch") if "_part_epoch" in d.columns
+         else F.lit(0)).cast("long").alias("epoch"),
         F.col("v.xid").alias("event_seq"),
         data["commit"].alias("commit"),
         F.timestamp_seconds(F.col("v.ts")).alias("ts"),

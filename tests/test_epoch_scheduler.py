@@ -2,9 +2,12 @@
 and the CLI's wiring into ``run_stream``.
 
 ``apply_epoch`` is replaced by a recorder, so these tests pin only the
-scheduling rules: one call per epoch with the epoch as the third
-positional argument (or ``epoch=``), concurrency only for DDL-free logs,
-``parked_resolved`` on the last stats, and the compaction schedule.
+scheduling rules. On a CoW lake (and for any aborted group): one call per
+epoch with the epoch as the third positional argument (or ``epoch=``),
+concurrency only for DDL-free logs, ``parked_resolved`` on the last
+stats, and the compaction schedule. On a MOR lake a DDL-free log's
+epochs go through one call with ``epochs=``, reported per epoch, with
+one compaction after the group.
 """
 
 from __future__ import annotations
@@ -25,18 +28,30 @@ N_EPOCHS = 4
 
 
 class _Recorder:
-    """Stands in for ``apply_epoch``: records the epoch, the DDL argument
-    and the peak number of applies in flight."""
+    """Stands in for ``apply_epoch``: records the epoch, the DDL argument,
+    each group call's ``epochs`` and the peak number of applies in flight.
+    ``abort_groups`` makes every group call report ``aborted``."""
 
-    def __init__(self):
+    def __init__(self, abort_groups: bool = False):
         self.epochs: list[int] = []
         self.ddl_seen: list[bool] = []
+        self.groups: list[list[int]] = []
+        self.abort_groups = abort_groups
         self.active = self.peak = 0
         self.lock = threading.Lock()
 
     def __call__(self, *args, **kwargs):
         ep = int(kwargs["epoch"]) if "epoch" in kwargs else int(args[2])
         ddl = kwargs.get("ddl", args[3] if len(args) > 3 else None)
+        group = kwargs.get("epochs")
+        if group is not None:
+            with self.lock:
+                self.groups.append(list(group))
+            if self.abort_groups:
+                return {"aborted": True, "epoch": ep, "group": group}
+            return {"skipped": False, "epoch": ep, "group": list(group),
+                    "version": 1, "wall_sec": 0.4, "per_bucket_rows": {},
+                    "rows_written": 0}
         with self.lock:
             self.epochs.append(ep)
             self.ddl_seen.append(ddl is not None and len(ddl) > 0)
@@ -57,8 +72,8 @@ def log():
 
 
 def _drive(how, spark, tmp_path, monkeypatch, ev, ddl, max_in_flight,
-           compact_every=0):
-    rec = _Recorder()
+           compact_every=0, merge_mode="cow", abort_groups=False):
+    rec = _Recorder(abort_groups)
     finalized: list[int] = []
     compacts: list[list[int]] = []
     monkeypatch.setattr(pipeline, "apply_epoch", rec)
@@ -66,10 +81,11 @@ def _drive(how, spark, tmp_path, monkeypatch, ev, ddl, max_in_flight,
         pipeline, "resolve_parked",
         lambda lake, spark: finalized.append(1) or {"resolved": 3})
     lake = LakeTable.create(spark, str(tmp_path / "lake"), num_buckets=4,
-                            merge_mode="mor")
+                            merge_mode=merge_mode)
     monkeypatch.setattr(
         lake, "compact",
-        lambda **kw: compacts.append(list(rec.epochs)) or {})
+        lambda **kw: compacts.append(
+            list(rec.epochs) + [e for g in rec.groups for e in g]) or {})
     if how == "replay_log":
         sdf = spark.createDataFrame(ev.drop(columns=["ts", "extra_cols"]))
         stats = pipeline.replay_log(spark, lake, sdf, ddl,
@@ -95,6 +111,7 @@ def test_one_apply_per_epoch(spark, tmp_path, monkeypatch, log, how,
     rec, stats, finalized, _ = _drive(how, spark, tmp_path, monkeypatch, ev,
                                       None, max_in_flight)
     epochs = list(range(N_EPOCHS))
+    assert rec.groups == []  # a CoW lake never groups
     assert sorted(rec.epochs) == epochs  # exactly one call per epoch
     assert [s["epoch"] for s in stats] == epochs  # reported in epoch order
     resolved = [i for i, s in enumerate(stats) if "parked_resolved" in s]
@@ -164,3 +181,60 @@ def test_main_stream_passes_sha_impl(spark, tmp_path, monkeypatch):
     ])
     assert rc == 0
     assert seen["sha_impl"] == "jvm"
+
+
+@pytest.mark.parametrize("how", ["replay_log", "run_stream"])
+def test_mor_group_one_call(spark, tmp_path, monkeypatch, log, how):
+    """A DDL-free log into a MOR lake: one ``apply_epoch`` call with
+    ``epochs=``, reported once per epoch in epoch order, each epoch with
+    the shared version and the group wall split evenly."""
+    ev, _ddl = log
+    rec, stats, finalized, _ = _drive(how, spark, tmp_path, monkeypatch, ev,
+                                      None, 2, merge_mode="mor")
+    epochs = list(range(N_EPOCHS))
+    assert rec.groups == [epochs] and rec.epochs == []
+    assert [s["epoch"] for s in stats] == epochs
+    assert all(not s["skipped"] and s["group"] == epochs
+               and s["version"] == 1 for s in stats)
+    assert [s["wall_sec"] for s in stats] == [0.4 / N_EPOCHS] * N_EPOCHS
+    assert finalized == []
+
+
+def test_mor_group_compacts_once(spark, tmp_path, monkeypatch, log):
+    """A group compacts once, after the whole group, if any of its epochs
+    crossed a ``compact_every`` boundary."""
+    ev, _ddl = log
+    rec, stats, _, compacts = _drive("run_stream", spark, tmp_path,
+                                     monkeypatch, ev, None, 1,
+                                     compact_every=2, merge_mode="mor")
+    assert compacts == [[0, 1, 2, 3]]
+    assert [s["epoch"] for s in stats if "compact" in s] == [N_EPOCHS - 1]
+
+
+@pytest.mark.parametrize("max_in_flight", [1, 2])
+@pytest.mark.parametrize("how", ["replay_log", "run_stream"])
+def test_mor_aborted_group_falls_back(spark, tmp_path, monkeypatch, log,
+                                      how, max_in_flight):
+    """An aborted group applies its epochs one by one under the per-epoch
+    rules: sequential or concurrent, ``resolve_parked`` after a concurrent
+    drain, compaction per epoch or once after the drain."""
+    ev, _ddl = log
+    rec, stats, finalized, compacts = _drive(
+        how, spark, tmp_path, monkeypatch, ev, None, max_in_flight,
+        compact_every=2 if how == "run_stream" else 0, merge_mode="mor",
+        abort_groups=True)
+    epochs = list(range(N_EPOCHS))
+    assert rec.groups == [epochs]
+    assert sorted(rec.epochs) == epochs
+    assert [s["epoch"] for s in stats] == epochs
+    if max_in_flight == 1:
+        assert rec.epochs == epochs and rec.peak == 1
+        assert finalized == []
+        if how == "run_stream":
+            assert compacts == [[0, 1] + epochs, epochs + epochs]
+    else:
+        assert rec.peak == 2
+        assert finalized == [1]
+        assert stats[-1]["parked_resolved"] == 3
+        if how == "run_stream":
+            assert len(compacts) == 1
