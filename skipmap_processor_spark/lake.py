@@ -1426,6 +1426,8 @@ class LakeTable:
         """
         marks = list(epochs) if epochs else (
             [] if epoch is None else [epoch])
+        if epochs is None and "_epoch" in actions.columns:
+            actions = actions.drop("_epoch")  # ungrouped: stamp ``epoch``
         mani = self.manifest()
         if any(self._epoch_applied(mani, e) for e in marks):
             return self._skipped(mani, marks[-1])
@@ -1434,7 +1436,7 @@ class LakeTable:
         if mani["properties"].get("merge_mode") == "mor":
             return self._merge_mor(actions, marks, mani, files_per_bucket,
                                    pre_partitioned, pre_commit_check,
-                                   post_commit_mutate, epochs is not None)
+                                   post_commit_mutate)
         if epochs is not None:
             raise ValueError("merge_batch(epochs=...) needs a MOR table")
 
@@ -1566,11 +1568,11 @@ class LakeTable:
             stats["affected_buckets"] = affected
         return stats
 
-    def _as_rows(self, actions: DataFrame, epoch: int | None, mani: dict,
-                 row_epochs: bool = False) -> DataFrame:
+    def _as_rows(self, actions: DataFrame, epoch: int | None,
+                 mani: dict) -> DataFrame:
         """Action rows in the table's row layout: ``op`` becomes
-        ``is_deleted``, the epoch is stamped (with ``row_epochs``, each
-        row's own ``_epoch`` column), and payload is cast to the current
+        ``is_deleted``, the epoch is stamped (a ``_epoch`` column of
+        ``actions`` passes through), and payload is cast to the current
         types of ``mani`` (null on deletes and for payload columns the
         batch lacks). The cast keeps a file's physical type equal to its
         recorded schema version when a batch still carries a pre-widening
@@ -1589,7 +1591,7 @@ class LakeTable:
             F.col("commit"),
             F.col("event_seq").cast("bigint").alias("event_seq"),
             is_del.alias("is_deleted"),
-            (F.col("_epoch") if row_epochs
+            (F.col("_epoch") if "_epoch" in actions.columns
              else F.lit(-1 if epoch is None else epoch)).cast("bigint")
             .alias("_epoch"),
             *[value(c).alias(c) for c in self.payload_columns(mani)],
@@ -1683,15 +1685,13 @@ class LakeTable:
                    files_per_bucket: int = 1,
                    pre_partitioned: bool = False,
                    pre_commit_check=None,
-                   post_commit_mutate=None,
-                   row_epochs: bool = False) -> dict:
+                   post_commit_mutate=None) -> dict:
         """Merge-on-read: append the batch's LWW winners as delta rows — no
         read of existing data, no join. Cost is proportional to the batch,
         never to the table. Readers resolve versions via the LWW window
         (read()); compact() folds deltas back to one row per key."""
         nb = int(mani["num_buckets"])
-        rows = self._as_rows(actions, marks[-1] if marks else None, mani,
-                             row_epochs)
+        rows = self._as_rows(actions, marks[-1] if marks else None, mani)
         if not pre_partitioned:
             # the fast path (prepare_actions_fast) picked upstream; select()
             # preserves that partitioning, so its write adds no shuffle
@@ -1783,8 +1783,7 @@ class LakeTable:
                 b = fe["bucket"]
                 per_bucket[b] = per_bucket.get(b, 0) + fe["rows"]
                 for ep, n in fe.pop("epoch_rows", {}).items():
-                    per = by_epoch.setdefault(ep, {})
-                    per[b] = per.get(b, 0) + n
+                    by_epoch[ep][b] = by_epoch[ep].get(b, 0) + n
             if not group:
                 by_epoch = {-1 if epoch is None else epoch: per_bucket}
             desc = self._write_shard(new_files, nb=nb)

@@ -136,12 +136,15 @@ def apply_epoch(
     lake: one observe-validated fast-path write whose rows keep their own
     epoch, and one commit that marks every epoch of the group applied.
     A single epoch is a group of one. The observe check covers the whole
-    group (renames, malformed rows, unknown extra columns, commit width);
-    if it fails, if renames are parked, or if any epoch of the group is
-    (or becomes) applied before the commit, nothing is committed and a
-    group of several returns ``aborted`` — the caller applies its epochs
-    one by one (``_apply_epochs``). A group of one falls through to the
-    general path, as every epoch does on a CoW lake."""
+    group (renames, malformed rows, unknown extra columns, commit width,
+    rows whose ``epoch`` is not in the group); if it fails, if renames are
+    parked, or if any epoch of the group is (or becomes) applied before
+    the commit, nothing is committed and a group of several returns
+    ``aborted``, with ``bad`` = [first, last] epoch holding renames,
+    malformed rows or unknown extra columns when the write saw them; the
+    caller then schedules the epochs again (``_apply_epochs``). A group
+    of one falls through to the general path, as every epoch does on a
+    CoW lake."""
     if on_malformed not in ("error", "quarantine"):
         raise ValueError(f"on_malformed={on_malformed!r}")
     t0 = time.monotonic()
@@ -152,10 +155,10 @@ def apply_epoch(
         return {"skipped": True, "epoch": epoch, "hwm_epoch": lake.hwm_epoch}
     from skipmap_processor_spark.operators.dedup import (
         batch_profile,
-        check_ord,
         prepare_actions_fast,
         probe_aggs,
     )
+    from skipmap_processor_spark.streaming.quarantine import malformed_cond
 
     # NOTE: no persist() of the batch — a parquet re-scan is ~10x cheaper
     # than building a multi-GB columnar cache per epoch (measured: cache
@@ -203,41 +206,45 @@ def apply_epoch(
             events = events.withColumn("epoch", F.lit(epoch).cast("bigint"))
         known = sorted(lake.payload_name_map())
         known_list = ", ".join(f"'{k}'" for k in known) or "''"
+        unknown = F.size(F.expr(
+            "map_filter(CAST(extra_cols AS MAP<STRING,STRING>), "
+            f"(k, v) -> NOT k IN ({known_list}))")) > 0
+        # rows only the general path applies; their epoch span tells the
+        # scheduler which epochs around them can still go as a group
+        needs_general = ((F.col("op") == "rename") | malformed_cond()
+                         | unknown)
         obs = Observation()
         ev_obs = events.observe(
             obs,
             *probe_aggs(),
-            F.sum(
-                (
-                    F.size(
-                        F.expr(
-                            "map_filter(CAST(extra_cols AS MAP<STRING,STRING>), "
-                            f"(k, v) -> NOT k IN ({known_list}))"
-                        )
-                    )
-                    > 0
-                ).cast("long")
-            ).alias("n_unknown_extras"),
+            F.sum(unknown.cast("long")).alias("n_unknown_extras"),
+            F.collect_set("epoch").alias("epochs"),
+            F.min(F.when(needs_general, F.col("epoch"))).alias("first_bad"),
+            F.max(F.when(needs_general, F.col("epoch"))).alias("last_bad"),
         )
         actions = prepare_actions_fast(ev_obs, lake, sha_impl=sha_impl)
 
         def valid() -> bool:
+            # any violation aborts (the staged files roll back): the general
+            # path applies the on_malformed policy and raises the ord
+            # contract error; a row whose epoch is outside the group would
+            # be stamped and ledgered under the wrong epoch
             m = obs.get
-            if len(group) == 1:
-                # merge_batch drops the staged files if it raises; in a
-                # group, mixed widths may be per-epoch uniform: abort
-                check_ord(m)
-            # malformed rows => abort to the general path, which applies the
-            # on_malformed policy (never raise here: the staged fast-path
-            # files must roll back first)
             return (not m["n_renames"] and not m["n_unknown_extras"]
-                    and not m["n_malformed"] and m["min_cw"] == m["max_cw"])
+                    and not m["n_malformed"] and m["min_cw"] == m["max_cw"]
+                    and set(m["epochs"]) <= set(group))
 
         stats = lake.merge_batch(
             actions, epoch, pre_partitioned=True, pre_commit_check=valid,
             epochs=group,
         )
         if len(group) > 1 and (stats.get("aborted") or stats["skipped"]):
+            # obs is only filled once the write ran (not on a gate skip);
+            # a span inside the group lets the scheduler make progress
+            m = obs.get if stats.get("aborted") else {}
+            if (m.get("first_bad") is not None
+                    and set(m["epochs"]) <= set(group)):
+                aborted["bad"] = [m["first_bad"], m["last_bad"]]
             return {**aborted, "wall_sec": time.monotonic() - t0}
         if stats.get("aborted"):
             stats = None  # fall through to the general path
@@ -256,7 +263,6 @@ def apply_epoch(
         profile = batch_profile(events, int(mani["num_buckets"]))
         if profile["n_malformed"]:
             from skipmap_processor_spark.streaming.quarantine import (
-                malformed_cond,
                 quarantine_epoch,
                 raise_malformed,
             )
@@ -403,13 +409,16 @@ def _compact(lake: LakeTable) -> dict:
 
 def _apply_group(lake: LakeTable, mani: dict, epochs: list, rows_of,
                  sha_impl: str, on_malformed: str,
-                 compact_every: int) -> list[dict] | None:
+                 compact_every: int) -> tuple[list[dict] | None, list | None]:
     """Apply the not-yet-applied epochs of ``epochs`` as one group
     (``apply_epoch(..., epochs=group)``) and return one stats dict per
-    epoch, or None when the group aborted and nothing was committed.
-    A group epoch's stats are the group's shared commit fields
+    epoch. A group epoch's stats are the group's shared commit fields
     (``version``, ``group``, timings, files) with the group wall divided
-    by the group size and the epoch's own ledger rows."""
+    by the group size and the epoch's own ledger rows. When the group
+    aborted, nothing was committed and the result is None, with the
+    aborted write's ``bad`` span: the first and last epoch holding rows
+    only the general path applies, or None if the abort had another
+    cause."""
     group = [int(ep) for ep in epochs
              if not LakeTable._epoch_applied(mani, int(ep))]
     stats = None
@@ -417,7 +426,7 @@ def _apply_group(lake: LakeTable, mani: dict, epochs: list, rows_of,
         stats = apply_epoch(lake, rows_of(group), group[-1], None, sha_impl,
                             on_malformed, epochs=group)
         if stats.get("aborted"):
-            return None
+            return None, stats.get("bad")
     out = []
     for ep in epochs:
         if int(ep) not in group:
@@ -437,7 +446,7 @@ def _apply_group(lake: LakeTable, mani: dict, epochs: list, rows_of,
     if group and not stats["skipped"] and any(
             _compact_due(ep, compact_every) for ep in group):
         out[-1]["compact"] = _compact(lake)
-    return out
+    return out, None
 
 
 def _compact_due(ep, compact_every: int) -> bool:
@@ -446,10 +455,14 @@ def _compact_due(ep, compact_every: int) -> bool:
 
 def _apply_epochs(lake: LakeTable, epochs: list, rows_of, ddl, sha_impl: str,
                   on_malformed: str, max_in_flight: int, compact_every: int,
-                  on_batch) -> list[dict]:
+                  on_batch, bad: list | None = None) -> list[dict]:
     """The one epoch scheduler: applies ``epochs`` (ascending), with
     ``rows_of(eps)`` building the events of the epochs ``eps`` (``epoch``
     column kept); returns one stats dict per epoch, in epoch order.
+    ``bad``: a [first, last] span of ``epochs`` already known to hold rows
+    only the general path applies (``run_stream`` reads renames from the
+    event files' footers); it splits the epochs as an aborted group's span
+    does, without the group's write.
 
     - GROUP: on a MOR lake, for a DDL-free log with no parked renames, the
       epochs not applied yet go through ONE ``apply_epoch(...,
@@ -457,10 +470,14 @@ def _apply_epochs(lake: LakeTable, epochs: list, rows_of, ddl, sha_impl: str,
       (LWW upserts and deletes commute across epochs). Epochs applied
       before the call report ``skipped``; each group epoch's stats carry
       the shared ``version``, ``group`` and ``wall_sec`` = group wall /
-      group size. If the group aborts (a rename, malformed row, unknown
-      extra column or mixed commit width anywhere in it, or a racing
-      writer applied one of its epochs), nothing is committed and the
-      epochs apply one by one under the rules below.
+      group size. If the group aborts, nothing is committed. When its
+      write saw rows only the general path applies (renames, malformed
+      rows, unknown extra columns), the epochs from the first to the last
+      such epoch apply one by one under the rules below, and the epochs
+      before and after that span are scheduled again from the top, so
+      they can still go as groups. Any other abort (mixed commit widths,
+      or a racing writer applied one of its epochs) applies every epoch
+      one by one.
     - CONCURRENT (``max_in_flight`` threads) only for more than one epoch
       of a DDL-free log: applies commute (MOR: ord-gated CAS append; CoW:
       per-bucket locks; renames: the parked-rename protocol), but a
@@ -475,21 +492,40 @@ def _apply_epochs(lake: LakeTable, epochs: list, rows_of, ddl, sha_impl: str,
       epoch crossed such a boundary.
     - ``on_batch(stats)`` per epoch, in epoch order.
     """
-    def due(ep, stats: dict) -> bool:
-        return not stats.get("skipped") and _compact_due(ep, compact_every)
-
+    args = (rows_of, ddl, sha_impl, on_malformed, max_in_flight,
+            compact_every, on_batch)
     has_ddl = ddl is not None and len(ddl) > 0
     mani = lake.manifest()
     if (epochs and not has_ddl
             and mani["properties"].get("merge_mode") == "mor"
             and not lake.parked_renames(mani)):
-        out = _apply_group(lake, mani, epochs, rows_of, sha_impl,
-                           on_malformed, compact_every)
-        if out is not None:
-            if on_batch is not None:
-                for stats in out:
-                    on_batch(stats)
-            return out
+        if bad is None:
+            out, bad = _apply_group(lake, mani, epochs, rows_of, sha_impl,
+                                    on_malformed, compact_every)
+            if out is not None:
+                if on_batch is not None:
+                    for stats in out:
+                        on_batch(stats)
+                return out
+        if bad is not None:
+            lo, hi = bad
+            return (_apply_epochs(lake, [e for e in epochs if e < lo], *args)
+                    + _apply_each(lake, [e for e in epochs
+                                         if lo <= e <= hi], *args)
+                    + _apply_epochs(lake, [e for e in epochs if e > hi],
+                                    *args))
+    return _apply_each(lake, epochs, *args)
+
+
+def _apply_each(lake: LakeTable, epochs: list, rows_of, ddl, sha_impl: str,
+                on_malformed: str, max_in_flight: int, compact_every: int,
+                on_batch) -> list[dict]:
+    """``_apply_epochs`` without the group rule: one ``apply_epoch`` per
+    epoch, concurrent or sequential."""
+    def due(ep, stats: dict) -> bool:
+        return not stats.get("skipped") and _compact_due(ep, compact_every)
+
+    has_ddl = ddl is not None and len(ddl) > 0
     if max_in_flight > 1 and len(epochs) > 1 and not has_ddl:
         from concurrent.futures import ThreadPoolExecutor
 
@@ -563,6 +599,29 @@ def epochs_from_source_log(checkpoint_dir: str,
     return None if files is None else sorted(files)
 
 
+def _rename_epochs(files: dict[int, list[str]]) -> list[int]:
+    """Epochs whose parquet event files hold a non-null ``new_path`` (a
+    rename) by their footers' null counts: a driver-side read, no Spark
+    job. A file without such statistics counts as rename-free; the fast
+    path's own check stays the authority."""
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for ep, paths in files.items():
+        for p in paths:
+            md = pq.read_metadata(urlparse(p).path)
+            i = md.schema.names.index("new_path")
+            if any((st := md.row_group(r).column(i).statistics) is not None
+                   and st.has_null_count
+                   and st.null_count < md.row_group(r).num_rows
+                   for r in range(md.num_row_groups)):
+                out.append(int(ep))
+                break
+    return sorted(out)
+
+
 def files_from_source_log(checkpoint_dir: str,
                           batch_id: int) -> dict[int, list[str]] | None:
     """Each epoch of a micro-batch with its files, read from the
@@ -634,6 +693,9 @@ def run_stream(
     micro-batch applies part of its epochs, those rows read only their
     own files, named by the checkpoint's source log
     (``files_from_source_log``); the foreachBatch DF cannot prune them.
+    For parquet events the footers of those files also name the epochs
+    holding renames (``_rename_epochs``), so a MOR trigger splits around
+    them before the group's write instead of aborting it.
 
     ``wire_format`` selects the on-disk event encoding: ``"parquet"`` (the
     internal event schema, default) or ``"debezium"`` / ``"maxwell"`` —
@@ -692,6 +754,11 @@ def run_stream(
             files = files_from_source_log(checkpoint_dir, int(batch_id))
         except Exception:
             files = None
+        try:  # only a trigger of several epochs can be split
+            renames = (_rename_epochs(files) if fmt == "parquet"
+                       and files is not None and len(files) > 1 else [])
+        except (OSError, ValueError):  # footer unreadable: no hint
+            renames = []
         if files is None:  # fallback: partition-column scan (one job)
             epochs = sorted(
                 r["epoch"]
@@ -714,7 +781,8 @@ def run_stream(
             return rows if decode is None else decode(rows)
 
         _apply_epochs(lake, epochs, rows_of, ddl, sha_impl, on_malformed,
-                      max_in_flight, compact_every, on_batch)
+                      max_in_flight, compact_every, on_batch,
+                      [renames[0], renames[-1]] if renames else None)
 
     writer = (
         sdf.writeStream.foreachBatch(handle)

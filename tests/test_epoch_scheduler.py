@@ -7,7 +7,9 @@ epoch with the epoch as the third positional argument (or ``epoch=``),
 concurrency only for DDL-free logs, ``parked_resolved`` on the last
 stats, and the compaction schedule. On a MOR lake a DDL-free log's
 epochs go through one call with ``epochs=``, reported per epoch, with
-one compaction after the group.
+one compaction after the group; a span of epochs holding renames (from
+an aborted group, or from the event files' footers) applies one by one,
+with the epochs around it grouped again.
 """
 
 from __future__ import annotations
@@ -30,13 +32,16 @@ N_EPOCHS = 4
 class _Recorder:
     """Stands in for ``apply_epoch``: records the epoch, the DDL argument,
     each group call's ``epochs`` and the peak number of applies in flight.
-    ``abort_groups`` makes every group call report ``aborted``."""
+    ``abort_groups`` makes every group call report ``aborted``; ``bad``
+    (an epoch span) makes a group call that overlaps it report ``aborted``
+    with that span as its ``bad`` epochs."""
 
-    def __init__(self, abort_groups: bool = False):
+    def __init__(self, abort_groups: bool = False, bad=None):
         self.epochs: list[int] = []
         self.ddl_seen: list[bool] = []
         self.groups: list[list[int]] = []
         self.abort_groups = abort_groups
+        self.bad = bad
         self.active = self.peak = 0
         self.lock = threading.Lock()
 
@@ -49,6 +54,10 @@ class _Recorder:
                 self.groups.append(list(group))
             if self.abort_groups:
                 return {"aborted": True, "epoch": ep, "group": group}
+            if self.bad and any(self.bad[0] <= e <= self.bad[1]
+                                for e in group):
+                return {"aborted": True, "epoch": ep, "group": group,
+                        "bad": list(self.bad)}
             return {"skipped": False, "epoch": ep, "group": list(group),
                     "version": 1, "wall_sec": 0.4, "per_bucket_rows": {},
                     "rows_written": 0}
@@ -71,9 +80,17 @@ def log():
     return ev, ddl
 
 
+def _rename_free(log):
+    """The log without its renames: ``run_stream`` reads rename epochs
+    from the event files' footers and would split a MOR group around
+    them before the recorder sees it."""
+    ev, _ddl = log
+    return ev[ev["op"] != "rename"]
+
+
 def _drive(how, spark, tmp_path, monkeypatch, ev, ddl, max_in_flight,
-           compact_every=0, merge_mode="cow", abort_groups=False):
-    rec = _Recorder(abort_groups)
+           compact_every=0, merge_mode="cow", abort_groups=False, bad=None):
+    rec = _Recorder(abort_groups, bad)
     finalized: list[int] = []
     compacts: list[list[int]] = []
     monkeypatch.setattr(pipeline, "apply_epoch", rec)
@@ -188,7 +205,7 @@ def test_mor_group_one_call(spark, tmp_path, monkeypatch, log, how):
     """A DDL-free log into a MOR lake: one ``apply_epoch`` call with
     ``epochs=``, reported once per epoch in epoch order, each epoch with
     the shared version and the group wall split evenly."""
-    ev, _ddl = log
+    ev = _rename_free(log)
     rec, stats, finalized, _ = _drive(how, spark, tmp_path, monkeypatch, ev,
                                       None, 2, merge_mode="mor")
     epochs = list(range(N_EPOCHS))
@@ -203,7 +220,7 @@ def test_mor_group_one_call(spark, tmp_path, monkeypatch, log, how):
 def test_mor_group_compacts_once(spark, tmp_path, monkeypatch, log):
     """A group compacts once, after the whole group, if any of its epochs
     crossed a ``compact_every`` boundary."""
-    ev, _ddl = log
+    ev = _rename_free(log)
     rec, stats, _, compacts = _drive("run_stream", spark, tmp_path,
                                      monkeypatch, ev, None, 1,
                                      compact_every=2, merge_mode="mor")
@@ -218,7 +235,7 @@ def test_mor_aborted_group_falls_back(spark, tmp_path, monkeypatch, log,
     """An aborted group applies its epochs one by one under the per-epoch
     rules: sequential or concurrent, ``resolve_parked`` after a concurrent
     drain, compaction per epoch or once after the drain."""
-    ev, _ddl = log
+    ev = _rename_free(log)
     rec, stats, finalized, compacts = _drive(
         how, spark, tmp_path, monkeypatch, ev, None, max_in_flight,
         compact_every=2 if how == "run_stream" else 0, merge_mode="mor",
@@ -238,3 +255,44 @@ def test_mor_aborted_group_falls_back(spark, tmp_path, monkeypatch, log,
         assert stats[-1]["parked_resolved"] == 3
         if how == "run_stream":
             assert len(compacts) == 1
+
+
+@pytest.mark.parametrize("max_in_flight", [1, 2])
+@pytest.mark.parametrize("how", ["replay_log", "run_stream"])
+def test_mor_aborted_group_splits_around_bad_span(spark, tmp_path,
+                                                  monkeypatch, log, how,
+                                                  max_in_flight):
+    """A group that aborts on rows only the general path applies, in
+    epochs 1..2, applies that span one by one and the epochs before and
+    after it as groups again; stats stay one per epoch, in epoch order."""
+    ev = _rename_free(log)
+    rec, stats, finalized, compacts = _drive(
+        how, spark, tmp_path, monkeypatch, ev, None, max_in_flight,
+        compact_every=2 if how == "run_stream" else 0, merge_mode="mor",
+        bad=(1, 2))
+    assert rec.groups == [[0, 1, 2, 3], [0], [3]]
+    assert sorted(rec.epochs) == [1, 2]
+    assert [s["epoch"] for s in stats] == [0, 1, 2, 3]
+    assert [s.get("group") for s in stats] == [[0], None, None, [3]]
+    compacted = [s["epoch"] for s in stats if "compact" in s]
+    if max_in_flight == 1:
+        assert rec.epochs == [1, 2] and finalized == []
+        assert compacted == ([1, 3] if how == "run_stream" else [])
+    else:
+        assert rec.peak == 2 and finalized == [1]
+        assert stats[2]["parked_resolved"] == 3
+        assert compacted == ([2, 3] if how == "run_stream" else [])
+    assert len(compacts) == len(compacted)
+
+
+def test_mor_footer_renames_split_before_any_write(spark, tmp_path,
+                                                   monkeypatch, log):
+    """``run_stream`` reads each epoch file's footer: with a rename in
+    every epoch, the span covers the whole trigger, so no group write is
+    tried and the epochs apply one by one."""
+    ev, _ddl = log
+    assert set(ev.loc[ev["op"] == "rename", "epoch"]) == set(range(N_EPOCHS))
+    rec, stats, _, _ = _drive("run_stream", spark, tmp_path, monkeypatch, ev,
+                              None, 1, merge_mode="mor")
+    assert rec.groups == [] and rec.epochs == list(range(N_EPOCHS))
+    assert [s["epoch"] for s in stats] == list(range(N_EPOCHS))

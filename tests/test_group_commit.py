@@ -188,42 +188,68 @@ def test_grouped_stream_redelivery_is_skipped(spark, tmp_path):
     _assert_oracle_equal(lake, rows)
 
 
-def test_rename_aborts_group_and_reads_one_file_per_epoch(
-        spark, tmp_path, monkeypatch):
-    """A rename in the middle epoch aborts the group: nothing from the
-    group's write stays on disk, the epochs apply one by one, and each
-    per-epoch apply reads only its own epoch's file."""
+@pytest.mark.parametrize("how", ["run_stream", "replay_log"])
+def test_rename_epoch_splits_the_group(spark, tmp_path, monkeypatch, how):
+    """A rename in the middle epoch applies on its own, and the epochs
+    before and after it as groups of one. ``run_stream`` knows the rename
+    epoch from the event files' footers before any write, and each apply
+    reads only its own epoch's file; ``replay_log`` learns it from the
+    aborted group write, which leaves nothing on disk."""
     rows = [
         (0, c(2), 0, "update", "r1", "same.py", None, "go", "e0"),
         (1, c(3), 0, "rename", "r1", "same.py", "moved.py", None, None),
         (2, c(4), 0, "update", "r1", "moved.py", None, "go", "e2"),
         (2, c(4), 1, "update", "r2", "keep.py", None, "rs", "k2"),
     ]
-    events_dir = str(tmp_path / "events")
-    write_event_log(events_dir, _frame(rows), None)
     lake = _lake(spark, str(tmp_path / "lake"))
     calls: list[tuple] = []
     orig = pipeline.apply_epoch
 
     def spy(lake_, events, epoch, *args, **kwargs):
-        calls.append((kwargs.get("epochs"), epoch, events.inputFiles()))
+        calls.append((kwargs.get("epochs"), epoch, events))
         return orig(lake_, events, epoch, *args, **kwargs)
 
     monkeypatch.setattr(pipeline, "apply_epoch", spy)
-    stats: list[dict] = []
-    run_stream(spark, lake, events_dir, str(tmp_path / "ck"),
-               on_batch=stats.append).awaitTermination(300)
-    assert calls[0][0] == [0, 1, 2]
-    singles = calls[1:]
-    assert [ep for _, ep, _ in singles] == [0, 1, 2]
-    for group, ep, files in singles:
-        assert group is None
-        assert len(files) == 1 and f"/epoch={ep}/" in files[0], files
+    if how == "run_stream":
+        events_dir = str(tmp_path / "events")
+        write_event_log(events_dir, _frame(rows), None)
+        stats: list[dict] = []
+        run_stream(spark, lake, events_dir, str(tmp_path / "ck"),
+                   on_batch=stats.append).awaitTermination(300)
+        aborted = []
+    else:
+        stats = replay_log(spark, lake, _events(spark, rows))
+        aborted = [([0, 1, 2], 2)]
+    assert [(group, ep) for group, ep, _ in calls] == aborted + [
+        ([0], 0), (None, 1), ([2], 2)]
+    if how == "run_stream":
+        for _, ep, events in calls:
+            files = events.inputFiles()
+            assert len(files) == 1 and f"/epoch={ep}/" in files[0], files
     assert [s["epoch"] for s in stats] == [0, 1, 2]
     assert not any(s["skipped"] for s in stats)
     assert len({s["version"] for s in stats}) == 3
     assert _stray_dirs(lake) == set()
     _assert_oracle_equal(lake, rows)
+
+
+def test_row_epoch_outside_the_group_is_not_stamped(spark, warehouse):
+    """Rows whose ``epoch`` is not the applied epoch never commit through
+    the fast path: a single epoch falls back to the general path, which
+    stamps the epoch it was given; a group commits nothing and reports no
+    ``bad`` span, so the scheduler applies its epochs one by one."""
+    ev = _events(spark, CASES["same_key_two_epochs"])
+    one = _lake(spark, os.path.join(warehouse, "one"))
+    st = apply_epoch(one, ev.filter(F.col("epoch") == 0)
+                     .withColumn("epoch", F.lit(7).cast("bigint")), 0)
+    assert not st["skipped"] and "group" not in st
+    got = one.read(with_engine_cols=True).filter(F.col("path") == "same.py")
+    assert [r["_epoch"] for r in got.collect()] == [0]
+    grp = _lake(spark, os.path.join(warehouse, "grp"))
+    st = apply_epoch(grp, ev.withColumn("epoch", F.col("epoch") + 5), 1,
+                     epochs=[0, 1])
+    assert st.get("aborted") and "bad" not in st
+    assert grp.hwm_epoch == -1 and _stray_dirs(grp) == set()
 
 
 @pytest.mark.parametrize("on_malformed", ["error", "quarantine"])
