@@ -1413,10 +1413,13 @@ class LakeTable:
         partitioned by ``lww_pick``. ``files_per_bucket`` > 1 fixes at
         least that many write tasks per bucket.
 
-        ``epochs`` (MOR only; ascending, ending in ``epoch``) merges a
-        group of epochs in one commit: ``actions`` then carries each row's
-        own ``_epoch``, the gate skips the whole merge if any of them is
+        ``epochs`` (ascending, ending in ``epoch``) merges a group of
+        epochs in one commit: ``actions`` then carries each row's own
+        ``_epoch``, the gate skips the whole merge if any of them is
         applied, and the commit marks all of them (see ``_commit_staged``).
+        Equal-ord rows of different epochs keep what applying the epochs
+        one by one gives: on CoW the earlier epoch's row (the target wins
+        a tie), on MOR the later one (``lww_fold`` at read time).
 
         Semantics per key (the ord gate makes replay idempotent):
           - no target row            -> insert (tombstone row for deletes)
@@ -1437,8 +1440,6 @@ class LakeTable:
             return self._merge_mor(actions, marks, mani, files_per_bucket,
                                    pre_partitioned, pre_commit_check,
                                    post_commit_mutate)
-        if epochs is not None:
-            raise ValueError("merge_batch(epochs=...) needs a MOR table")
 
         # CoW rewrites of the SAME bucket don't commute (a concurrent
         # rewrite would be silently lost), but DISJOINT-bucket rewrites do:
@@ -1506,10 +1507,10 @@ class LakeTable:
                                 _spec_prune(new_nb, nb, set(probed)))
                         nb = new_nb
                         continue
-                    if epoch is not None and self._epoch_applied(mani, epoch):
-                        return self._skipped(mani, epoch)
+                    if any(self._epoch_applied(mani, e) for e in marks):
+                        return self._skipped(mani, marks[-1])
                     return self._merge_cow_locked(
-                        act, epoch, mani, files_per_bucket, affected,
+                        act, marks, mani, files_per_bucket, affected,
                         post_commit_mutate)
             raise CommitConflict(
                 "CoW merge: bucket spec kept changing under us (8 restarts)")
@@ -1522,26 +1523,30 @@ class LakeTable:
         return {"skipped": True, "epoch": epoch,
                 "hwm_epoch": int(mani["properties"]["hwm_epoch"])}
 
-    def _merge_cow_locked(self, act: DataFrame, epoch: int | None,
+    def _merge_cow_locked(self, act: DataFrame, marks: list[int],
                           mani: dict, files_per_bucket: int,
                           affected: list[int],
                           post_commit_mutate=None) -> dict:
         """``act`` arrives bucketed (_bucket column); the caller holds
-        exclusive locks on every bucket in ``affected``.
+        exclusive locks on every bucket in ``affected``. ``marks``: the
+        epochs this merge applies (a group's rows carry ``_epoch``).
 
         The merge IS the LWW pick: the locked buckets' target rows
         (``_src=0``) and the batch's candidate rows (``_src=1``) meet in
         one ``lww_pick`` exchange, and the picked rows are the buckets' new
         contents. ``_src`` ranks right after the ord, so a batch row must
-        be strictly newer than the target to replace it."""
+        be strictly newer than the target to replace it; among equal-ord
+        candidates the earlier epoch wins, as it would applied first."""
         nb = int(mani["num_buckets"])
         old = self.read(
             buckets=affected, include_deleted=True, with_engine_cols=True
         ).withColumn("_bucket", bucket_expr(nb))
+        rows = self._as_rows(act, marks[-1] if marks else None, mani)
         both = old.withColumn("_src", F.lit(0)).unionByName(
-            self._as_rows(act, epoch, mani).withColumn("_src", F.lit(1)))
-        result = self._pick(both, mani, files_per_bucket, len(affected),
-                            head=[F.col("_src").asc()]).drop("_src")
+            rows.withColumn("_src", F.lit(1)))
+        result = self._pick(
+            both, mani, files_per_bucket, len(affected),
+            head=[F.col("_src").asc(), F.col("_epoch").asc()]).drop("_src")
         affected_set = set(affected)
 
         def _covered(fe: dict) -> bool:
@@ -1560,9 +1565,7 @@ class LakeTable:
         # metadata-only (add/rename/drop column) or a CoW merge over a
         # DISJOINT bucket set — rebasing recomputes the carry list on the
         # winner's manifest: the winner never touched our buckets.
-        stats = self._commit_staged(result, mani,
-                                    [] if epoch is None else [epoch],
-                                    drop=_covered,
+        stats = self._commit_staged(result, mani, marks, drop=_covered,
                                     post_commit_mutate=post_commit_mutate)
         if not stats["skipped"]:
             stats["affected_buckets"] = affected
@@ -1694,9 +1697,12 @@ class LakeTable:
         rows = self._as_rows(actions, marks[-1] if marks else None, mani)
         if not pre_partitioned:
             # the fast path (prepare_actions_fast) picked upstream; select()
-            # preserves that partitioning, so its write adds no shuffle
+            # preserves that partitioning, so its write adds no shuffle.
+            # Equal-ord rows of a group's epochs: the later epoch, as the
+            # read-side ``lww_fold`` picks between per-epoch deltas
             rows = self._pick(rows.withColumn("_bucket", bucket_expr(nb)),
-                              mani, files_per_bucket, nb)
+                              mani, files_per_bucket, nb,
+                              head=[F.col("_epoch").desc()])
         # lww_pick output is sorted by (_bucket, _salt, repo, path) —
         # deterministic and bucket-contiguous; re-sorting here would add a
         # full-width O(n log n) pass AND break bucket contiguity, forcing
@@ -1738,10 +1744,13 @@ class LakeTable:
         Returns the merge stats (``kind="merge"`` also appends the lineage
         ledger: one row per (epoch, bucket) written), or the
         ``aborted``/``skipped`` dict. ``epochs`` empty is an epoch-less
-        write (ledger epoch -1). Several epochs (a MOR group) split each
+        write (ledger epoch -1). Several epochs (a group) split each
         bucket's rows by the staged files' ``_epoch`` values during the
-        footer scan, also reported as ``per_epoch_bucket_rows``; one epoch
-        attributes every written row to it (CoW rewrites whole buckets)."""
+        footer scan, also reported as ``per_epoch_bucket_rows``; rows of
+        an epoch outside the group (a CoW rewrite carries its buckets'
+        older rows) count under the group's last epoch, so each bucket's
+        rows still sum to the rows written. One epoch attributes every
+        written row to it."""
         nb = int(mani["num_buckets"])
         epoch = epochs[-1] if epochs else None
         group = len(epochs) > 1
@@ -1783,6 +1792,7 @@ class LakeTable:
                 b = fe["bucket"]
                 per_bucket[b] = per_bucket.get(b, 0) + fe["rows"]
                 for ep, n in fe.pop("epoch_rows", {}).items():
+                    ep = ep if ep in by_epoch else epoch
                     by_epoch[ep][b] = by_epoch[ep].get(b, 0) + n
             if not group:
                 by_epoch = {-1 if epoch is None else epoch: per_bucket}

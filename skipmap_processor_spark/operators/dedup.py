@@ -49,7 +49,8 @@ MAX_EDGES_ON_DRIVER = 50_000
 
 _ACTION_SCHEMA = (
     "repo string, path string, commit string, event_seq bigint, op string, "
-    "lang string, content string, extra_cols map<string,string>"
+    "lang string, content string, extra_cols map<string,string>, "
+    "_epoch bigint"
 )
 
 
@@ -104,9 +105,12 @@ def batch_profile(events: DataFrame, num_buckets: int) -> dict:
     ``probe_aggs``. Per-epoch serial driver time is the Amdahl term of the
     whole pipeline at scale — every fused job buys scaling efficiency.
 
-    Returns {extra_keys, n_renames, affected_buckets, n_malformed}.
+    Returns {extra_keys, n_renames, affected_buckets, n_malformed}, plus
+    ``epochs`` (the distinct ``epoch`` values) when the batch has that
+    column.
     """
     events = _with_map_extras(events)
+    has_ep = "epoch" in events.columns
     row = events.agg(
         F.array_distinct(
             F.flatten(F.collect_set(F.map_keys("extra_cols")))
@@ -122,14 +126,18 @@ def batch_profile(events: DataFrame, num_buckets: int) -> dict:
             )
         ).alias("b2"),
         *probe_aggs(),
+        *([F.collect_set("epoch").alias("epochs")] if has_ep else []),
     ).first()
     check_ord(row)
-    return {
+    out = {
         "extra_keys": sorted(row["ek"] or []),
         "n_renames": int(row["n_renames"] or 0),
         "affected_buckets": sorted(set(row["b1"] or []) | set(row["b2"] or [])),
         "n_malformed": int(row["n_malformed"] or 0),
     }
+    if has_ep:
+        out["epochs"] = sorted(int(e) for e in row["epochs"])
+    return out
 
 
 def _local_frame(spark, columns: dict[str, list],
@@ -266,7 +274,8 @@ def _resolve_rename_groups(
     current table state for those keys (``seeds``, a bucket-pruned
     lookup). Groups are rename-graph connected components (``cc``: repo,
     path, _cc), not repos. ``name_map``: original -> current payload
-    column names."""
+    column names. Each resolved key's row takes the ``_epoch`` of the last
+    event that changed its state."""
     promoted = [
         (orig, cur)
         for orig, cur in name_map.items()
@@ -291,6 +300,7 @@ def _resolve_rename_groups(
             else F.lit(None).cast("map<string,string>")
         ).alias("extra_cols"),
         F.col("is_deleted"),
+        F.lit(None).cast("bigint").alias("epoch"),
     )
     ev = ev_aff.select(
         *KEY_COLS,
@@ -302,6 +312,7 @@ def _resolve_rename_groups(
         "content",
         "extra_cols",
         F.lit(False).alias("is_deleted"),
+        F.col("_epoch").alias("epoch"),
     )
     both = seeds.unionByName(ev).join(F.broadcast(cc), KEY_COLS)
 
@@ -324,22 +335,21 @@ def _resolve_rename_groups(
         evs = pdf[pdf["op"] != "__seed__"].sort_values(
             ["commit", "event_seq"], kind="stable"
         )
-        touched: set = set()
+        touched: dict = {}  # changed key -> epoch of its last change
         for r in evs.itertuples(index=False):
-            touched.update(
-                apply_event(
-                    state,
-                    op=r.op,
-                    repo=r.repo,
-                    path=r.path,
-                    new_path=r.new_path,
-                    commit=r.commit,
-                    event_seq=int(r.event_seq),
-                    lang=r.lang,
-                    content=r.content,
-                    extra=dict(r.extra_cols) if r.extra_cols is not None else {},
-                )
-            )
+            for key in apply_event(
+                state,
+                op=r.op,
+                repo=r.repo,
+                path=r.path,
+                new_path=r.new_path,
+                commit=r.commit,
+                event_seq=int(r.event_seq),
+                lang=r.lang,
+                content=r.content,
+                extra=dict(r.extra_cols) if r.extra_cols is not None else {},
+            ):
+                touched[key] = None if pd.isna(r.epoch) else int(r.epoch)
         rows = []
         for repo, path in sorted(touched):
             st = state[(repo, path)]
@@ -353,13 +363,14 @@ def _resolve_rename_groups(
                     "lang": st.lang,
                     "content": st.content,
                     "extra_cols": st.extra or None,
+                    "_epoch": touched[(repo, path)],
                 }
             )
         return pd.DataFrame(
             rows,
             columns=[
                 "repo", "path", "commit", "event_seq", "op",
-                "lang", "content", "extra_cols",
+                "lang", "content", "extra_cols", "_epoch",
             ],
         )
 
@@ -437,6 +448,10 @@ def prepare_actions(
     pass is needed. Keys a rename touches are resolved here, one action
     row each, by the sequential per-component resolver.
 
+    A batch with an ``epoch`` column (a group of epochs) keeps each
+    row's epoch as ``_epoch``: a passed-through row its event's, a
+    resolved key the epoch of the last event that changed its state.
+
     ``n_renames``: the batch's rename count (``batch_profile`` has it);
     counted here when not given. Up to ``MAX_EDGES_ON_DRIVER`` renames the
     resolver's inputs come from ONE driver collect of the rename edges:
@@ -446,7 +461,10 @@ def prepare_actions(
     events. Larger sets take the distributed path.
     """
     mani = lake.manifest()
-    ev = _with_map_extras(events)
+    has_ep = "epoch" in events.columns
+    ev = _with_map_extras(events).withColumn(
+        "_epoch", F.col("epoch").cast("bigint") if has_ep
+        else F.lit(None).cast("bigint"))
     renames = ev.filter(F.col("op") == "rename")
     if n_renames is None:
         n_renames = renames.count()
@@ -503,8 +521,9 @@ def prepare_actions(
         ev = ev.join(aff_keys, KEY_COLS, "left_anti")
 
     actions = ev.select(*KEY_COLS, "commit", "event_seq", _action_op(),
-                        "lang", "content", "extra_cols")
+                        "lang", "content", "extra_cols", "_epoch")
     if seq_actions is not None:
         actions = actions.unionByName(seq_actions)
     return actions.select(*KEY_COLS, "commit", "event_seq", "op",
-                          *_payload_cols(lake, mani, sha_impl))
+                          *_payload_cols(lake, mani, sha_impl),
+                          *(["_epoch"] if has_ep else []))

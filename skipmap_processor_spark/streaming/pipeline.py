@@ -1,16 +1,19 @@
 """Epoch orchestration: binlog tail -> dedup -> MERGE, batch or streaming.
 
-The unit of work is ``apply_epoch``: one epoch's change events are
-DDL-evolved, rename-resolved, digested (Arrow UDF + JVM sha2), and MERGEd
-into the lake — whose single-exchange LWW pick dedups them — with the
-epoch HWM gate making redelivery a no-op. On a MOR lake a DDL-free run of
-epochs applies as one GROUP: one write job and one commit marking them
-all. ``run_stream`` wraps it in Structured Streaming ``foreachBatch``
-with a checkpoint; ``replay_log`` is the batch-mode replay of a whole log
-(same function, no streaming overhead). Both — and
+The unit of work is ``apply_epoch``: a group of epochs' change events
+(one epoch is a group of one) are DDL-evolved, rename-resolved, digested
+(Arrow UDF + JVM sha2), and MERGEd into the lake — whose single-exchange
+LWW pick dedups them — in one commit, with the epoch HWM gate making
+redelivery a no-op. A MOR group tries an optimistic fast path first
+(``_apply_fast``); everything else takes the general path
+(``_apply_general``). ``run_stream`` wraps it in Structured Streaming
+``foreachBatch`` with a checkpoint; ``replay_log`` is the batch-mode
+replay of a whole log (same function, no streaming overhead). Both — and
 ``bench/cdc_bench.py`` — drive epochs through one scheduler,
-``_apply_epochs`` (group, sequential or concurrent apply, parked-rename
-finalization, compaction, reporting).
+``_apply_epochs``: each DDL-delimited run of epochs applies as one group
+in both merge modes, or one by one (sequential or concurrent) where a
+group would not equal that; then parked-rename finalization, compaction
+and reporting.
 
 Resume model (mirrors the reference's resumable run modes,
 /root/reference/run.sh:7-80 and docs/control-flow.md:115-126):
@@ -37,11 +40,17 @@ from skipmap_processor_spark.operators.dedup import _local_frame, prepare_action
 from skipmap_processor_spark.sources.events import event_spark_schema, read_ddl
 
 
-def _apply_ddl(lake: LakeTable, ddl: pd.DataFrame | None, epoch: int) -> list[str]:
+def _apply_ddl(lake: LakeTable, ddl: pd.DataFrame | None,
+               group: list[int]) -> list[str]:
+    """Apply the DDL of ``group[0]``, the one epoch of it that may hold any."""
     applied = []
     if ddl is None or not len(ddl):
         return applied
-    for row in ddl[ddl["epoch"] == epoch].itertuples(index=False):
+    late = sorted(set(ddl["epoch"].astype(int)) & set(group[1:]))
+    if late:
+        raise ValueError(f"DDL at epochs {late} inside the group {group}; "
+                         "a DDL epoch may only start a group")
+    for row in ddl[ddl["epoch"] == group[0]].itertuples(index=False):
         if row.change == "rename_column":
             if lake.rename_column(row.col_from, row.col_to):
                 applied.append(f"rename_column {row.col_from}->{row.col_to}")
@@ -52,10 +61,9 @@ def _apply_ddl(lake: LakeTable, ddl: pd.DataFrame | None, epoch: int) -> list[st
 
 
 def _collect_renames(events: DataFrame) -> list:
-    """Driver-side rows of this batch's rename events (5 narrow columns).
-    Called ONLY when the batch applies above an open epoch gap (its
-    renames must be parked into the manifest); in-order epochs never
-    reach it — tests monkeypatch this to prove that."""
+    """Driver-side rows of this batch's rename events (5 narrow columns),
+    collected ONLY above an open epoch gap, to park them (tests
+    monkeypatch this to prove in-order batches never reach it)."""
     return (events.filter(F.col("op") == "rename")
             .select("repo", "path", "new_path", "commit", "event_seq")
             .collect())
@@ -106,6 +114,25 @@ def bootstrap_base(lake: LakeTable, base: DataFrame) -> dict:
     return lake.merge_batch(actions, epoch=None)
 
 
+def _group_of(epoch: int, epochs: list[int] | None) -> list[int]:
+    group = [int(e) for e in epochs] if epochs else [int(epoch)]
+    if group[-1] != int(epoch) or group != sorted(set(group)):
+        raise ValueError(f"epochs={epochs!r} must ascend to epoch={epoch}")
+    return group
+
+
+def _open_below(mani: dict, top: int, group: list[int]) -> bool:
+    """True iff some epoch below ``top`` is neither applied in ``mani`` nor
+    in ``group`` (the feed promises nothing below its ``epoch_base``)."""
+    p = mani["properties"]
+    lo = max(int(p["hwm_epoch"]) + 1, int(p.get("epoch_base", 0)))
+    for s, e in LakeTable._missing_intervals_of(p) + [[lo, top - 1]]:
+        e = min(e, top - 1)
+        if e >= s and e - s + 1 > sum(s <= g <= e for g in group):
+            return True
+    return False
+
+
 def apply_epoch(
     lake: LakeTable,
     events: DataFrame,
@@ -117,71 +144,150 @@ def apply_epoch(
 ) -> dict:
     """Apply one epoch exactly once. Safe to call again for any applied epoch.
 
-    The gate distinguishes "already applied" from "older than the newest
-    applied": the file stream orders files by mtime, not epoch number, so a
-    late-landing epoch below the HWM is APPLIED (the ord-gated LWW merge is
-    order-independent) instead of silently dropped; a replay of an applied
-    epoch is a metadata-level no-op (exactly-once).
+    The gate tells "already applied" from "older than the newest applied":
+    a late-landing epoch below the HWM is APPLIED (the ord-gated LWW merge
+    is order-independent); a replay of an applied epoch is a no-op.
 
-    ``on_malformed``: policy for rows violating the event contract (null
-    key fields, unknown op, rename without target — see
-    streaming/quarantine.py). ``"error"`` fails the epoch loudly before any
-    data is staged; ``"quarantine"`` diverts them to
+    ``on_malformed``: policy for rows violating the event contract (see
+    streaming/quarantine.py). ``"error"`` fails the epoch before any data
+    is staged; ``"quarantine"`` diverts them to
     ``<table>/_quarantine/epoch=N/`` and applies the clean remainder.
-    Detection rides the existing single-pass batch aggregates — a clean
-    epoch pays no extra pass in either mode.
+    Detection rides the one-pass batch aggregates.
 
     ``epochs`` (ascending, ending in ``epoch``; ``events`` keeps its
-    ``epoch`` column) applies a GROUP of epochs of a DDL-free log to a MOR
-    lake: one observe-validated fast-path write whose rows keep their own
-    epoch, and one commit that marks every epoch of the group applied.
-    A single epoch is a group of one. The observe check covers the whole
-    group (renames, malformed rows, unknown extra columns, commit width,
-    rows whose ``epoch`` is not in the group); if it fails, if renames are
-    parked, or if any epoch of the group is (or becomes) applied before
-    the commit, nothing is committed and a group of several returns
-    ``aborted``, with ``bad`` = [first, last] epoch holding renames,
-    malformed rows or unknown extra columns when the write saw them; the
-    caller then schedules the epochs again (``_apply_epochs``). A group
-    of one falls through to the general path, as every epoch does on a
-    CoW lake."""
+    ``epoch`` column) applies a GROUP of epochs in one commit that marks
+    every epoch of the group applied; rows keep their own epoch. Only the
+    group's first epoch may carry DDL. A single epoch is a group of one.
+    On a MOR lake the group first tries the fast path (``_apply_fast``),
+    then the general path (``_apply_general``); a CoW lake takes the
+    general path. A group of several that cannot apply as one commits
+    nothing and returns ``aborted``; the caller then applies its epochs
+    one by one (``_apply_epochs``)."""
     if on_malformed not in ("error", "quarantine"):
         raise ValueError(f"on_malformed={on_malformed!r}")
     t0 = time.monotonic()
-    group = [int(e) for e in epochs] if epochs else [int(epoch)]
-    if group[-1] != int(epoch) or group != sorted(set(group)):
-        raise ValueError(f"epochs={epochs!r} must ascend to epoch={epoch}")
-    if len(group) == 1 and lake.epoch_applied(epoch):
-        return {"skipped": True, "epoch": epoch, "hwm_epoch": lake.hwm_epoch}
+    group = _group_of(epoch, epochs)
+    mani = lake.manifest()
+    if len(group) == 1 and LakeTable._epoch_applied(mani, epoch):
+        return LakeTable._skipped(mani, epoch)
+    ddl_applied = _apply_ddl(lake, ddl, group)
+    stats = _apply_fast(lake, events, group, sha_impl) or _apply_general(
+        lake, events, epoch, None, sha_impl, on_malformed, epochs)
+    if not stats.get("skipped") and not stats.get("aborted"):
+        stats.setdefault("auto_promoted", [])
+        stats["ddl_applied"] = ddl_applied
+    stats["wall_sec"] = time.monotonic() - t0
+    return stats
+
+
+def _apply_fast(lake: LakeTable, events: DataFrame, group: list[int],
+                sha_impl: str) -> dict | None:
+    """The MOR fast path: one observe-validated write job, rows keeping
+    their own epoch, and one commit (it may sit above an epoch gap:
+    without renames, LWW upserts and deletes commute). None, nothing
+    committed, when the group needs the general path: not MOR, renames
+    parked (for one epoch: above it), the observe check failed, or an
+    epoch of a group of several became applied before the commit."""
+    from pyspark.sql import Observation
+
     from skipmap_processor_spark.operators.dedup import (
-        batch_profile,
         prepare_actions_fast,
         probe_aggs,
     )
+
+    mani = lake.manifest()
+    if mani["properties"].get("merge_mode") != "mor":
+        return None
+    epoch = group[-1]
+    parked = lake.parked_renames(mani)
+    if len(group) == 1 and epoch > int(mani["properties"]["hwm_epoch"]):
+        parked = []  # only a late epoch re-injects the renames above it
+    if any(len(group) > 1 or int(r["epoch"]) > epoch for r in parked):
+        return None
+    # OPTIMISTIC single-pass fast path: assume the group is rename-free and
+    # carries no unseen extra columns (true for every steady-state epoch);
+    # validate via observe() metrics computed DURING the one pass, and roll
+    # back the uncommitted staging dir if violated.
+    if "epoch" not in events.columns:
+        events = events.withColumn("epoch", F.lit(epoch).cast("bigint"))
+    known = sorted(lake.payload_name_map())
+    known_list = ", ".join(f"'{k}'" for k in known) or "''"
+    unknown = F.size(F.expr(
+        "map_filter(CAST(extra_cols AS MAP<STRING,STRING>), "
+        f"(k, v) -> NOT k IN ({known_list}))")) > 0
+    obs = Observation()
+    ev_obs = events.observe(
+        obs,
+        *probe_aggs(),
+        F.sum(unknown.cast("long")).alias("n_unknown_extras"),
+        F.collect_set("epoch").alias("epochs"),
+    )
+    actions = prepare_actions_fast(ev_obs, lake, sha_impl=sha_impl)
+
+    def valid() -> bool:
+        # any violation aborts (the staged files roll back): the general
+        # path applies the on_malformed policy and raises the ord contract
+        # error; a row whose epoch is outside the group would be stamped
+        # and ledgered under the wrong epoch
+        m = obs.get
+        return (not m["n_renames"] and not m["n_unknown_extras"]
+                and not m["n_malformed"] and m["min_cw"] == m["max_cw"]
+                and set(m["epochs"]) <= set(group))
+
+    stats = lake.merge_batch(actions, epoch, pre_partitioned=True,
+                             pre_commit_check=valid, epochs=group)
+    if stats.get("aborted") or (stats["skipped"] and len(group) > 1):
+        return None
+    if not stats["skipped"]:
+        stats["group"] = group
+    return stats
+
+
+def _apply_general(lake: LakeTable, events: DataFrame, epoch: int,
+                   ddl: pd.DataFrame | None = None, sha_impl: str = "arrow",
+                   on_malformed: str = "error",
+                   epochs: list[int] | None = None) -> dict:
+    """The general path, ``apply_epoch`` without the fast path: one
+    ``batch_profile`` pass (extra keys, rename count, buckets), schema
+    promotion, rename resolution and one ``merge_batch``, which picks each
+    key's LWW winner. Takes the arguments of ``apply_epoch``.
+
+    A group of several (``epochs``) applies as one only where that equals
+    applying its epochs one by one. So it commits nothing and returns
+    ``aborted`` when renames are parked, when some epoch below the
+    group's last is neither applied nor in the group (renames above a gap
+    must park), when an epoch of it is or becomes applied, when
+    ``batch_profile`` finds malformed rows (quarantine stays per epoch) or
+    rows of an epoch outside the group."""
+    from skipmap_processor_spark.operators.dedup import batch_profile
     from skipmap_processor_spark.streaming.quarantine import malformed_cond
 
-    # NOTE: no persist() of the batch — a parquet re-scan is ~10x cheaper
-    # than building a multi-GB columnar cache per epoch (measured: cache
-    # build 6-10s + GC churn vs 0.6s re-read for a 2M-row epoch).
-    ddl_applied = _apply_ddl(lake, ddl, epoch)
+    t0 = time.monotonic()
+    group = _group_of(epoch, epochs)
     mani = lake.manifest()
+    aborted = {"aborted": True, "epoch": epoch, "group": group}
+    if len(group) == 1 and LakeTable._epoch_applied(mani, epoch):
+        return LakeTable._skipped(mani, epoch)
+    if len(group) > 1 and (
+            lake.parked_renames(mani) or _open_below(mani, epoch, group)
+            or any(LakeTable._epoch_applied(mani, e) for e in group)):
+        return {**aborted, "wall_sec": time.monotonic() - t0}
+    ddl_applied = _apply_ddl(lake, ddl, group)
+    if ddl_applied:
+        mani = lake.manifest()
     promoted: list[str] = []
-    stats = None
 
     # ---- out-of-order rename handling (parked renames) ----------------
     # LWW upserts/deletes commute across epochs, renames do NOT: a rename
-    # reads its source key's state at its ord position, so a rename applied
-    # while an EARLIER epoch is still missing may see a source that "does
-    # not exist yet" and silently no-op (oracle.apply_event returns [] for
-    # a missing source — correct in sequential order, wrong out of order).
-    # Protocol: every rename applied while a gap exists below its epoch is
-    # PARKED in the manifest (atomically with the merge commit); whenever a
-    # gap-FILLING epoch arrives, parked renames above it are re-injected
-    # into this batch's sequential resolver, which replays them at their
-    # true ord against the now-completed state. Re-injecting an
-    # already-applied rename is a no-op (the resolver's ord gate sees its
-    # own tombstone at the same ord). An entry is dropped once no gap
-    # remains below its epoch — its resolution is then final.
+    # reads its source key's state at its ord, so one applied while an
+    # EARLIER epoch is missing may see a source that "does not exist yet"
+    # and silently no-op. So every rename applied above a gap is PARKED in
+    # the manifest (atomically with the merge commit); a gap-FILLING epoch
+    # re-injects the parked renames above it into its sequential resolver,
+    # which replays them at their true ord (re-injecting an applied rename
+    # is a no-op: the resolver's ord gate sees its own tombstone). An entry
+    # is dropped once no gap remains below its epoch. A group of several
+    # has neither a gap below nor anything parked (checked above).
     hwm = int(mani["properties"]["hwm_epoch"])
     parked = lake.parked_renames(mani)
     inject = (
@@ -189,171 +295,100 @@ def apply_epoch(
         if (parked and epoch <= hwm)
         else []
     )
-    aborted = {"aborted": True, "epoch": epoch, "group": group}
-    fast = (mani["properties"].get("merge_mode") == "mor"
-            and not (parked if len(group) > 1 else inject))
-    if not fast and len(group) > 1:
+
+    # no persist() of the batch: a parquet re-scan is ~10x cheaper than a
+    # multi-GB columnar cache per epoch (6-10s + GC vs 0.6s, 2M rows)
+    if len(group) == 1:
+        events = events.drop("epoch")  # merge_batch stamps ``epoch``
+    elif "epoch" not in events.columns:
+        raise ValueError("a group's events need their `epoch` column")
+    if inject:
+        events = events.unionByName(
+            _parked_frame(events.sparkSession, inject, events.schema))
+    profile = batch_profile(events, int(mani["num_buckets"]))
+    if len(group) > 1 and (profile["n_malformed"]
+                           or not set(profile["epochs"]) <= set(group)):
         return {**aborted, "wall_sec": time.monotonic() - t0}
-
-    if fast:
-        # OPTIMISTIC single-pass fast path: assume the group is rename-free
-        # and carries no unseen extra columns (true for every steady-state
-        # epoch); validate via observe() metrics computed DURING the one
-        # pass, and roll back the uncommitted staging dir if violated.
-        from pyspark.sql import Observation
-
-        if "epoch" not in events.columns:
-            events = events.withColumn("epoch", F.lit(epoch).cast("bigint"))
-        known = sorted(lake.payload_name_map())
-        known_list = ", ".join(f"'{k}'" for k in known) or "''"
-        unknown = F.size(F.expr(
-            "map_filter(CAST(extra_cols AS MAP<STRING,STRING>), "
-            f"(k, v) -> NOT k IN ({known_list}))")) > 0
-        # rows only the general path applies; their epoch span tells the
-        # scheduler which epochs around them can still go as a group
-        needs_general = ((F.col("op") == "rename") | malformed_cond()
-                         | unknown)
-        obs = Observation()
-        ev_obs = events.observe(
-            obs,
-            *probe_aggs(),
-            F.sum(unknown.cast("long")).alias("n_unknown_extras"),
-            F.collect_set("epoch").alias("epochs"),
-            F.min(F.when(needs_general, F.col("epoch"))).alias("first_bad"),
-            F.max(F.when(needs_general, F.col("epoch"))).alias("last_bad"),
-        )
-        actions = prepare_actions_fast(ev_obs, lake, sha_impl=sha_impl)
-
-        def valid() -> bool:
-            # any violation aborts (the staged files roll back): the general
-            # path applies the on_malformed policy and raises the ord
-            # contract error; a row whose epoch is outside the group would
-            # be stamped and ledgered under the wrong epoch
-            m = obs.get
-            return (not m["n_renames"] and not m["n_unknown_extras"]
-                    and not m["n_malformed"] and m["min_cw"] == m["max_cw"]
-                    and set(m["epochs"]) <= set(group))
-
-        stats = lake.merge_batch(
-            actions, epoch, pre_partitioned=True, pre_commit_check=valid,
-            epochs=group,
-        )
-        if len(group) > 1 and (stats.get("aborted") or stats["skipped"]):
-            # obs is only filled once the write ran (not on a gate skip);
-            # a span inside the group lets the scheduler make progress
-            m = obs.get if stats.get("aborted") else {}
-            if (m.get("first_bad") is not None
-                    and set(m["epochs"]) <= set(group)):
-                aborted["bad"] = [m["first_bad"], m["last_bad"]]
-            return {**aborted, "wall_sec": time.monotonic() - t0}
-        if stats.get("aborted"):
-            stats = None  # fall through to the general path
-        elif not stats["skipped"]:
-            stats["group"] = group
-
     n_quarantined = 0
-    if stats is None:
-        # general path: one profile pass (extra keys, rename count,
-        # buckets), schema promotion, rename resolution; merge_batch picks
-        # each key's LWW winner
-        events = events.drop("epoch")
-        if inject:
-            events = events.unionByName(
-                _parked_frame(events.sparkSession, inject, events.schema))
-        profile = batch_profile(events, int(mani["num_buckets"]))
-        if profile["n_malformed"]:
-            from skipmap_processor_spark.streaming.quarantine import (
-                quarantine_epoch,
-                raise_malformed,
-            )
-
-            bad = events.filter(malformed_cond())
-            if on_malformed == "error":
-                raise_malformed(lake, bad, epoch)  # before anything stages
-            n_quarantined = quarantine_epoch(lake, bad, epoch)
-            events = events.filter(~malformed_cond())
-            # re-profile the CLEAN rows: a malformed row must not promote a
-            # junk extra column or force the rename slow path (rare path —
-            # only an epoch that actually contains malformed rows pays it)
-            profile = batch_profile(events, int(mani["num_buckets"]))
-        known_orig = set(lake.payload_name_map())
-        for k in profile["extra_keys"]:
-            if k not in known_orig:
-                lake.add_column(k, "string", src_key=k)
-                promoted.append(k)
-        park_hook = None
-        if profile["n_renames"] or parked:
-            # Resolution finality is judged against the SNAPSHOT the
-            # resolver seeded from (`mani`), NOT the commit-time gap state:
-            # with concurrent epoch applies, a racing epoch can commit
-            # between our snapshot and our hook, closing the gap while our
-            # resolution was computed WITHOUT its effects. A rename's
-            # resolution is final iff every epoch below it was applied in
-            # the snapshot, with THIS batch's epoch counting as applied.
-            snap_ivs = LakeTable._missing_intervals_of(mani["properties"])
-            snap_hwm = hwm
-
-            def _covered_below(ep: int) -> bool:
-                if ep > snap_hwm + 1:
-                    return False  # epochs snap_hwm+1..ep-1 never seen
-                for s, e in snap_ivs:
-                    if s >= ep:
-                        continue
-                    lo, hi = s, min(e, ep - 1)
-                    if not (lo == epoch and hi == epoch):
-                        return False
-                return True
-
-            # This batch's own renames all carry THIS epoch, so whether
-            # they resolve finally is one row-independent predicate. In
-            # the covered case (every in-order epoch, whatever its rename
-            # count) none of them is ever parked — so none needs to cross
-            # to the driver at all: a rename-storm epoch costs the driver
-            # nothing (guide §5; VERDICT r5 minor 3). Only an epoch that
-            # applies ABOVE an open gap collects its renames, because they
-            # must be parked into the manifest; that list is bounded by
-            # the out-of-order WINDOW's rename count, not the feed's —
-            # the epoch-composition contract: deliver gap-filling epochs
-            # promptly or keep rename storms in-order.
-            if _covered_below(int(epoch)):
-                fresh: list[dict] = []
-            else:
-                inj_keys = {_parked_key(r) for r in inject}
-                fresh = [
-                    {"repo": r["repo"], "path": r["path"],
-                     "new_path": r["new_path"], "commit": r["commit"],
-                     "event_seq": int(r["event_seq"]), "epoch": int(epoch)}
-                    for r in _collect_renames(events)
-                ]
-                fresh = [r for r in fresh if _parked_key(r) not in inj_keys]
-
-            resolved_keys = {
-                _parked_key(r) for r in fresh + inject
-                if _covered_below(int(r["epoch"]))
-            }
-
-            def park_hook(mani2: dict) -> None:
-                seen: set = set()
-                kept: list[dict] = []
-                # base on mani2's CURRENT list, not the snapshot read at
-                # apply start: a CONCURRENT apply may have parked entries
-                # in between (the CAS rebase replays this hook on the
-                # winner's manifest), and rebuilding from the stale
-                # snapshot would silently drop them
-                for r in fresh + lake.parked_renames(mani2):
-                    key = _parked_key(r)
-                    if key in seen or key in resolved_keys:
-                        continue
-                    seen.add(key)
-                    kept.append(r)
-                LakeTable._set_parked_renames(mani2, kept)
-
-        actions = prepare_actions(events, lake, sha_impl=sha_impl,
-                                  n_renames=profile["n_renames"])
-        stats = lake.merge_batch(
-            actions, epoch, affected_buckets=profile["affected_buckets"],
-            post_commit_mutate=park_hook,
+    if profile["n_malformed"]:
+        from skipmap_processor_spark.streaming.quarantine import (
+            quarantine_epoch,
+            raise_malformed,
         )
+
+        bad = events.filter(malformed_cond())
+        if on_malformed == "error":
+            raise_malformed(lake, bad, epoch)  # before anything stages
+        n_quarantined = quarantine_epoch(lake, bad, epoch)
+        events = events.filter(~malformed_cond())
+        # re-profile the CLEAN rows: a malformed row must not promote a
+        # junk extra column or force the rename slow path (rare path —
+        # only an epoch that actually contains malformed rows pays it)
+        profile = batch_profile(events, int(mani["num_buckets"]))
+    known_orig = set(lake.payload_name_map())
+    for k in profile["extra_keys"]:
+        if k not in known_orig:
+            lake.add_column(k, "string", src_key=k)
+            promoted.append(k)
+    park_hook = None
+    if profile["n_renames"] or parked:
+        # A rename's resolution is final iff every epoch below it was
+        # applied in the SNAPSHOT the resolver seeded from (`mani`), with
+        # this batch's epochs counting as applied — not in the commit-time
+        # state: a racing epoch may commit in between, closing a gap while
+        # our resolution was computed WITHOUT its effects.
+        def _covered_below(ep: int) -> bool:
+            return not _open_below(mani, ep, group)
+
+        # Whether this batch's own renames resolve finally is one
+        # row-independent predicate (a group has no gap below its last
+        # epoch). In the covered case (every in-order batch, whatever its
+        # rename count) none is parked, so none crosses to the driver: a
+        # rename storm costs the driver nothing (guide §5). Only an epoch
+        # applied ABOVE an open gap collects its renames to park them — a
+        # list bounded by the out-of-order window's rename count.
+        if _covered_below(int(epoch)):
+            fresh: list[dict] = []
+        else:
+            inj_keys = {_parked_key(r) for r in inject}
+            fresh = [
+                {"repo": r["repo"], "path": r["path"],
+                 "new_path": r["new_path"], "commit": r["commit"],
+                 "event_seq": int(r["event_seq"]), "epoch": int(epoch)}
+                for r in _collect_renames(events)
+            ]
+            fresh = [r for r in fresh if _parked_key(r) not in inj_keys]
+
+        resolved_keys = {
+            _parked_key(r) for r in fresh + inject
+            if _covered_below(int(r["epoch"]))
+        }
+
+        def park_hook(mani2: dict) -> None:
+            seen: set = set()
+            kept: list[dict] = []
+            # base on mani2's CURRENT list: a CONCURRENT apply may have
+            # parked entries since our snapshot (the CAS rebase replays
+            # this hook on the winner's manifest)
+            for r in fresh + lake.parked_renames(mani2):
+                key = _parked_key(r)
+                if key in seen or key in resolved_keys:
+                    continue
+                seen.add(key)
+                kept.append(r)
+            LakeTable._set_parked_renames(mani2, kept)
+
+    actions = prepare_actions(events, lake, sha_impl=sha_impl,
+                              n_renames=profile["n_renames"])
+    stats = lake.merge_batch(
+        actions, epoch, affected_buckets=profile["affected_buckets"],
+        post_commit_mutate=park_hook,
+        epochs=group if len(group) > 1 else None,
+    )
+    if len(group) > 1:
+        if stats["skipped"]:  # another writer applied one of its epochs
+            return {**aborted, "wall_sec": time.monotonic() - t0}
+        stats["group"] = group
     stats["ddl_applied"] = ddl_applied
     stats["auto_promoted"] = promoted
     if n_quarantined:
@@ -365,15 +400,11 @@ def apply_epoch(
 def resolve_parked(lake: LakeTable, spark: SparkSession) -> dict:
     """Replay parked renames whose gap below has closed, outside any epoch.
 
-    The sequential protocol resolves parked renames inside the gap-FILLING
-    apply (it injects everything parked above itself). With CONCURRENT
-    epoch applies that invariant can race: epoch K+1 parks a rename while K
-    is still uncommitted, then K commits — the gap closes but no later
-    apply remains to inject. This finalizer closes that hole: entries with
-    no remaining gap below replay through the same sequential resolver in
-    an epoch-less merge, and only the entries replayed HERE are dropped
-    (a racing writer may free more entries mid-flight; those stay parked
-    for their own resolution)."""
+    With CONCURRENT applies, epoch K+1 may park a rename while K is still
+    uncommitted; K's commit then closes the gap with no later apply left
+    to re-inject it. Entries with no gap below replay through the same
+    resolver in an epoch-less merge; only those replayed HERE are dropped
+    (entries a racing writer frees stay parked for their own resolution)."""
     parked = lake.parked_renames()
     if not parked:
         return {"resolved": 0}
@@ -407,31 +438,34 @@ def _compact(lake: LakeTable) -> dict:
     return {**out, "wall_sec": round(time.monotonic() - t0, 3)}
 
 
-def _apply_group(lake: LakeTable, mani: dict, epochs: list, rows_of,
-                 sha_impl: str, on_malformed: str,
-                 compact_every: int) -> tuple[list[dict] | None, list | None]:
-    """Apply the not-yet-applied epochs of ``epochs`` as one group
-    (``apply_epoch(..., epochs=group)``) and return one stats dict per
-    epoch. A group epoch's stats are the group's shared commit fields
-    (``version``, ``group``, timings, files) with the group wall divided
-    by the group size and the epoch's own ledger rows. When the group
-    aborted, nothing was committed and the result is None, with the
-    aborted write's ``bad`` span: the first and last epoch holding rows
-    only the general path applies, or None if the abort had another
-    cause."""
-    group = [int(ep) for ep in epochs
+def _apply_run(lake: LakeTable, run: list, rows_of, ddl, sha_impl: str,
+               on_malformed: str, compact_every: int,
+               renames) -> list[dict] | None:
+    """Apply the not-yet-applied epochs of ``run`` as ONE group; one
+    stats dict per epoch of ``run`` (see ``_apply_epochs``), or None,
+    nothing committed, when they must apply one by one."""
+    mani = lake.manifest()
+    group = [int(ep) for ep in run
              if not LakeTable._epoch_applied(mani, int(ep))]
     stats = None
     if group:
-        stats = apply_epoch(lake, rows_of(group), group[-1], None, sha_impl,
-                            on_malformed, epochs=group)
+        # a MOR run tries the fast path (``apply_epoch``) unless the event
+        # files' footers show renames; on CoW ``apply_epoch`` is the
+        # general path
+        mor = mani["properties"].get("merge_mode") == "mor"
+        general = not mor or (renames is not None and renames(group))
+        if len(group) > 1 and (lake.parked_renames(mani) or (
+                general and _open_below(mani, group[-1], group))):
+            return None
+        apply = _apply_general if mor and general else apply_epoch
+        stats = apply(lake, rows_of(group), group[-1], ddl, sha_impl,
+                      on_malformed, epochs=group if len(group) > 1 else None)
         if stats.get("aborted"):
-            return None, stats.get("bad")
+            return None
     out = []
-    for ep in epochs:
+    for ep in run:
         if int(ep) not in group:
-            out.append({"skipped": True, "epoch": ep,
-                        "hwm_epoch": int(mani["properties"]["hwm_epoch"])})
+            out.append(LakeTable._skipped(mani, ep))
         elif stats["skipped"]:
             out.append(stats)  # a group of one, applied by another writer
         else:
@@ -446,7 +480,7 @@ def _apply_group(lake: LakeTable, mani: dict, epochs: list, rows_of,
     if group and not stats["skipped"] and any(
             _compact_due(ep, compact_every) for ep in group):
         out[-1]["compact"] = _compact(lake)
-    return out, None
+    return out
 
 
 def _compact_due(ep, compact_every: int) -> bool:
@@ -455,66 +489,62 @@ def _compact_due(ep, compact_every: int) -> bool:
 
 def _apply_epochs(lake: LakeTable, epochs: list, rows_of, ddl, sha_impl: str,
                   on_malformed: str, max_in_flight: int, compact_every: int,
-                  on_batch, bad: list | None = None) -> list[dict]:
+                  on_batch, renames=None) -> list[dict]:
     """The one epoch scheduler: applies ``epochs`` (ascending), with
     ``rows_of(eps)`` building the events of the epochs ``eps`` (``epoch``
     column kept); returns one stats dict per epoch, in epoch order.
-    ``bad``: a [first, last] span of ``epochs`` already known to hold rows
-    only the general path applies (``run_stream`` reads renames from the
-    event files' footers); it splits the epochs as an aborted group's span
-    does, without the group's write.
+    ``renames(eps)``, when given, says whether the event files of ``eps``
+    hold renames (``run_stream`` reads their footers).
 
-    - GROUP: on a MOR lake, for a DDL-free log with no parked renames, the
-      epochs not applied yet go through ONE ``apply_epoch(...,
-      epochs=group)`` call — one write job, one commit marking them all
-      (LWW upserts and deletes commute across epochs). Epochs applied
-      before the call report ``skipped``; each group epoch's stats carry
-      the shared ``version``, ``group`` and ``wall_sec`` = group wall /
-      group size. If the group aborts, nothing is committed. When its
-      write saw rows only the general path applies (renames, malformed
-      rows, unknown extra columns), the epochs from the first to the last
-      such epoch apply one by one under the rules below, and the epochs
-      before and after that span are scheduled again from the top, so
-      they can still go as groups. Any other abort (mixed commit widths,
-      or a racing writer applied one of its epochs) applies every epoch
-      one by one.
-    - CONCURRENT (``max_in_flight`` threads) only for more than one epoch
-      of a DDL-free log: applies commute (MOR: ord-gated CAS append; CoW:
-      per-bucket locks; renames: the parked-rename protocol), but a
-      schema change takes effect FROM its epoch, so a DDL-bearing log
-      runs sequentially in epoch order.
-    - After a concurrent drain ``resolve_parked`` finalizes renames whose
-      gap closed mid-flight; a non-zero count rides on the LAST stats as
+    - RUNS: ``epochs`` split at DDL epochs (a schema change takes effect
+      from its epoch, so a DDL epoch only starts a run). A run's epochs
+      not applied yet go through ONE group call in both merge modes
+      (``_apply_run``): one profile, one rename resolution, one
+      ``merge_batch``, one commit marking them all. A MOR run tries the
+      fast path first (``apply_epoch``) unless its files show renames
+      (``_apply_general``); a CoW run's ``apply_epoch`` is the general
+      path. Epochs applied before report ``skipped``; a group epoch's
+      stats carry the shared ``version``, ``group`` and ``wall_sec`` =
+      group wall / group size.
+    - ONE BY ONE (``_apply_each``), nothing of the group committed, when
+      renames are parked, an epoch below the run's last is neither applied
+      nor in the group (a fast MOR group may sit above such a gap), or the
+      group aborted (malformed rows — quarantine stays per epoch — or a
+      racing writer applied one of its epochs).
+    - CONCURRENT (``max_in_flight`` threads) only one by one, for more
+      than one epoch of a DDL-free log: applies commute (MOR: ord-gated
+      CAS append; CoW: per-bucket locks; renames: the parked-rename
+      protocol). Then ``resolve_parked`` finalizes renames whose gap closed
+      mid-flight; a non-zero count rides on the LAST stats as
       ``parked_resolved``.
-    - Compaction (``stats["compact"]``): sequentially after each applied
-      epoch with ``(ep + 1) % compact_every == 0``; after a group or a
-      concurrent drain at most once (on the last stats), if any applied
-      epoch crossed such a boundary.
+    - Compaction (``stats["compact"]``): one by one, sequentially, after
+      each applied epoch with ``(ep + 1) % compact_every == 0``; after a
+      group or a concurrent drain at most once (on the last stats), if any
+      applied epoch crossed such a boundary.
     - ``on_batch(stats)`` per epoch, in epoch order.
     """
-    args = (rows_of, ddl, sha_impl, on_malformed, max_in_flight,
-            compact_every, on_batch)
-    has_ddl = ddl is not None and len(ddl) > 0
-    mani = lake.manifest()
-    if (epochs and not has_ddl
-            and mani["properties"].get("merge_mode") == "mor"
-            and not lake.parked_renames(mani)):
-        if bad is None:
-            out, bad = _apply_group(lake, mani, epochs, rows_of, sha_impl,
-                                    on_malformed, compact_every)
-            if out is not None:
-                if on_batch is not None:
-                    for stats in out:
-                        on_batch(stats)
-                return out
-        if bad is not None:
-            lo, hi = bad
-            return (_apply_epochs(lake, [e for e in epochs if e < lo], *args)
-                    + _apply_each(lake, [e for e in epochs
-                                         if lo <= e <= hi], *args)
-                    + _apply_epochs(lake, [e for e in epochs if e > hi],
-                                    *args))
-    return _apply_each(lake, epochs, *args)
+    starts = (set() if ddl is None or not len(ddl)
+              else set(ddl["epoch"].astype(int)))
+    runs: list[list] = []
+    for ep in epochs:
+        if runs and int(ep) not in starts:
+            runs[-1].append(ep)
+        else:
+            runs.append([ep])
+    out: list[dict] = []
+    for run in runs:
+        stats = _apply_run(lake, run, rows_of, ddl, sha_impl, on_malformed,
+                           compact_every, renames)
+        if stats is None:
+            out += _apply_each(lake, run, rows_of, ddl, sha_impl,
+                               on_malformed, max_in_flight, compact_every,
+                               on_batch)
+            continue
+        if on_batch is not None:
+            for st in stats:
+                on_batch(st)
+        out += stats
+    return out
 
 
 def _apply_each(lake: LakeTable, epochs: list, rows_of, ddl, sha_impl: str,
@@ -530,11 +560,9 @@ def _apply_each(lake: LakeTable, epochs: list, rows_of, ddl, sha_impl: str,
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=max_in_flight) as pool:
-            futs = [
-                pool.submit(apply_epoch, lake, rows_of([ep]), int(ep), None,
-                            sha_impl, on_malformed)
-                for ep in epochs
-            ]
+            futs = [pool.submit(apply_epoch, lake, rows_of([ep]), int(ep),
+                                None, sha_impl, on_malformed)
+                    for ep in epochs]
             out = [f.result() for f in futs]
         fin = resolve_parked(lake, lake.spark)
         if fin.get("resolved"):
@@ -566,16 +594,11 @@ def replay_log(
     max_in_flight: int = 1,
     on_malformed: str = "error",
 ) -> list[dict]:
-    """Batch-mode replay: every epoch of ``events`` through apply_epoch,
-    one stats dict per epoch (a DDL-free log into a MOR lake applies as
-    one group, see ``_apply_epochs``).
-
-    ``max_in_flight > 1`` applies that many epochs CONCURRENTLY (backfill /
-    catch-up mode; DDL-free logs only): the lake's final state is
-    arrival-order-independent by design, and overlapping epochs fills the
-    scheduler/barrier idle a sequential loop leaves on wide executors.
-    After the drain ``resolve_parked`` runs, and its count rides on the
-    LAST epoch's stats as ``parked_resolved``. See ``_apply_epochs``."""
+    """Batch-mode replay of every epoch of ``events`` through
+    ``_apply_epochs``, one stats dict per epoch: one group per
+    DDL-delimited run. ``max_in_flight > 1`` applies epochs that go one
+    by one CONCURRENTLY (DDL-free logs only; the final state is
+    arrival-order-independent by design), then runs ``resolve_parked``."""
     epochs = sorted(
         r["epoch"] for r in events.select("epoch").distinct().collect()
     )
@@ -585,8 +608,7 @@ def replay_log(
 
 
 def _epoch_slice(events: DataFrame, eps: list, all_eps: list) -> DataFrame:
-    """The rows of ``events`` (all epochs ``all_eps``) in epochs ``eps``;
-    ``events`` itself when that is all of them."""
+    """The rows of ``events`` (epochs ``all_eps``) in epochs ``eps``."""
     if set(eps) == set(all_eps):
         return events
     return events.filter(F.col("epoch").isin([int(e) for e in eps]))
@@ -599,39 +621,33 @@ def epochs_from_source_log(checkpoint_dir: str,
     return None if files is None else sorted(files)
 
 
-def _rename_epochs(files: dict[int, list[str]]) -> list[int]:
-    """Epochs whose parquet event files hold a non-null ``new_path`` (a
-    rename) by their footers' null counts: a driver-side read, no Spark
-    job. A file without such statistics counts as rename-free; the fast
-    path's own check stays the authority."""
+def _holds_renames(paths: list[str]) -> bool:
+    """Whether any of these parquet event files holds a non-null
+    ``new_path`` (a rename), by their footers' null counts: a driver-side
+    read, no Spark job. A file without such statistics counts as
+    rename-free; the fast path's own check stays the authority."""
     from urllib.parse import urlparse
 
     import pyarrow.parquet as pq
 
-    out = []
-    for ep, paths in files.items():
-        for p in paths:
-            md = pq.read_metadata(urlparse(p).path)
-            i = md.schema.names.index("new_path")
-            if any((st := md.row_group(r).column(i).statistics) is not None
-                   and st.has_null_count
-                   and st.null_count < md.row_group(r).num_rows
-                   for r in range(md.num_row_groups)):
-                out.append(int(ep))
-                break
-    return sorted(out)
+    for p in paths:
+        md = pq.read_metadata(urlparse(p).path)
+        i = md.schema.names.index("new_path")
+        if any((st := md.row_group(r).column(i).statistics) is not None
+               and st.has_null_count
+               and st.null_count < md.row_group(r).num_rows
+               for r in range(md.num_row_groups)):
+            return True
+    return False
 
 
 def files_from_source_log(checkpoint_dir: str,
                           batch_id: int) -> dict[int, list[str]] | None:
     """Each epoch of a micro-batch with its files, read from the
-    checkpoint's FileStreamSource log (the authoritative list of files the
-    batch delivers, one JSON entry per file tagged with its batchId) — a
-    driver-side metadata read, no Spark job. The foreachBatch DF is a
-    LogicalRDD (no inputFiles metadata, no partition pruning), and a
-    distinct().collect() would launch an extra job per micro-batch
-    (VERDICT r2). Returns None if the log or epoch= layout is absent
-    (caller falls back to the partition-column scan)."""
+    checkpoint's FileStreamSource log (one JSON entry per delivered file,
+    tagged with its batchId): a driver-side read, no Spark job — the
+    foreachBatch DF has no inputFiles and no partition pruning. None if
+    the log or the epoch= layout is absent (then scan the column)."""
     import glob
     import json
 
@@ -682,50 +698,35 @@ def run_stream(
 ):
     """Tail the event directory as a Structured Streaming file source.
 
-    One epoch == one ``epoch=K`` partition dir == (by construction) one file,
-    so ``maxFilesPerTrigger`` bounds epochs per micro-batch. Its default
-    (``None``) is no cap when the lake is MOR and the log is DDL-free —
-    the trigger's backlog then applies as one group, paying one epoch's
-    fixed cost — and 1 otherwise. Each micro-batch's epochs go through
-    ``_apply_epochs`` (group, sequential, or with ``max_in_flight > 1``
-    concurrent catch-up; compaction; ``resolve_parked``); ``on_batch``
-    gets each epoch's stats, in epoch order. When a multi-epoch
-    micro-batch applies part of its epochs, those rows read only their
-    own files, named by the checkpoint's source log
-    (``files_from_source_log``); the foreachBatch DF cannot prune them.
-    For parquet events the footers of those files also name the epochs
-    holding renames (``_rename_epochs``), so a MOR trigger splits around
-    them before the group's write instead of aborting it.
+    One epoch == one ``epoch=K`` partition dir == one file, so
+    ``maxFilesPerTrigger`` bounds epochs per micro-batch. Its default
+    (``None``) is no cap, in both merge modes, with or without DDL: a
+    trigger's backlog applies as one group per DDL-delimited run. Each
+    micro-batch goes through ``_apply_epochs``; ``on_batch`` gets each
+    epoch's stats, in epoch order. A group that is part of a micro-batch
+    reads only its epochs' files, named by the checkpoint's source log
+    (``files_from_source_log``). For parquet events their footers also
+    show whether a group holds renames (``_holds_renames``): a MOR group
+    with renames skips the fast path's doomed write.
 
-    ``wire_format`` selects the on-disk event encoding: ``"parquet"`` (the
-    internal event schema, default) or ``"debezium"`` / ``"maxwell"`` —
-    JSON-lines text files of standard connector envelopes (one document per
-    line, same ``epoch=K`` dir layout), decoded per micro-batch by
-    ``sources.envelopes.parse_debezium/parse_maxwell`` (pure ``from_json``
-    map work; malformed documents surface as null-key rows for the
-    ``on_malformed`` policy). The epoch of record is the partition dir, not
-    the envelope's own lineage field — identical to the parquet path.
+    ``wire_format``: ``"parquet"`` (the internal event schema, default) or
+    ``"debezium"`` / ``"maxwell"`` — JSON-lines connector envelopes in the
+    same ``epoch=K`` layout, decoded per micro-batch by
+    ``sources.envelopes`` (malformed documents become null-key rows for
+    ``on_malformed``). The epoch of record is the partition dir.
     """
     if wire_format not in ("parquet", "debezium", "maxwell"):
         raise ValueError(f"unknown wire_format: {wire_format!r}")
     ddl = read_ddl(events_dir)
-    if max_files_per_trigger is None and not (
-            lake.manifest()["properties"].get("merge_mode") == "mor"
-            and (ddl is None or not len(ddl))):
-        max_files_per_trigger = 1
     cap = ({} if max_files_per_trigger is None
            else {"maxFilesPerTrigger": max_files_per_trigger})
 
-    # Declare the partition column LAST. The file source appends partition
-    # values after the data columns in the physical row; when the stream
-    # starts over an EMPTY directory (live tail bootstrapping before the
-    # first epoch lands) Spark cannot detect `epoch` as a partition column
-    # at source init and keeps the user-declared attribute ORDER while later
-    # batches still arrive in physical order — a declared schema with epoch
-    # first then binds every name to the wrong value (observed: extra_cols
-    # resolved as BIGINT because it picked up the epoch values). Epoch-last
-    # makes declared order == physical order in both the empty-start and
-    # dirs-present cases.
+    # Declare the partition column LAST: the file source appends partition
+    # values after the data columns, and a stream started over an EMPTY
+    # directory cannot detect `epoch` as a partition column, so it keeps
+    # the declared order while batches arrive in physical order — epoch
+    # first would bind every name to the wrong value (seen: extra_cols
+    # read as BIGINT). Epoch-last makes the two orders equal.
     full = event_spark_schema()
     if wire_format == "parquet":
         schema = StructType(
@@ -754,16 +755,16 @@ def run_stream(
             files = files_from_source_log(checkpoint_dir, int(batch_id))
         except Exception:
             files = None
-        try:  # only a trigger of several epochs can be split
-            renames = (_rename_epochs(files) if fmt == "parquet"
-                       and files is not None and len(files) > 1 else [])
-        except (OSError, ValueError):  # footer unreadable: no hint
-            renames = []
+
+        def renames(eps) -> bool:
+            try:
+                return _holds_renames([p for e in eps for p in files[e]])
+            except (OSError, ValueError):  # footer unreadable: no hint
+                return False
+
         if files is None:  # fallback: partition-column scan (one job)
-            epochs = sorted(
-                r["epoch"]
-                for r in batch_df.select("epoch").distinct().collect()
-            )
+            epochs = sorted(r["epoch"] for r in
+                            batch_df.select("epoch").distinct().collect())
         else:
             epochs = sorted(files)
 
@@ -782,13 +783,10 @@ def run_stream(
 
         _apply_epochs(lake, epochs, rows_of, ddl, sha_impl, on_malformed,
                       max_in_flight, compact_every, on_batch,
-                      [renames[0], renames[-1]] if renames else None)
+                      renames if fmt == "parquet" and files else None)
 
-    writer = (
-        sdf.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    writer = (sdf.writeStream.foreachBatch(handle)
+              .option("checkpointLocation", checkpoint_dir))
     if available_now:
         writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    return q
+    return writer.start()

@@ -1,15 +1,17 @@
 """The epoch scheduler contract ``replay_log`` and ``run_stream`` share,
 and the CLI's wiring into ``run_stream``.
 
-``apply_epoch`` is replaced by a recorder, so these tests pin only the
-scheduling rules. On a CoW lake (and for any aborted group): one call per
-epoch with the epoch as the third positional argument (or ``epoch=``),
-concurrency only for DDL-free logs, ``parked_resolved`` on the last
-stats, and the compaction schedule. On a MOR lake a DDL-free log's
-epochs go through one call with ``epochs=``, reported per epoch, with
-one compaction after the group; a span of epochs holding renames (from
-an aborted group, or from the event files' footers) applies one by one,
-with the epochs around it grouped again.
+``apply_epoch`` and ``_apply_general`` are replaced by a recorder, so
+these tests pin only the scheduling rules. Each DDL-delimited run of
+epochs goes through one group call with ``epochs=`` (a run of one: a
+plain call), reported once per epoch in epoch order: ``apply_epoch`` on a
+CoW lake and for a MOR run whose files show no rename (it tries the fast
+path first), ``_apply_general`` for a MOR run whose event files' footers
+show renames. Epochs apply one by one — one call per epoch with the
+epoch as the third positional argument (or ``epoch=``), concurrency only
+for DDL-free logs, ``parked_resolved`` on the last stats, compaction per
+epoch — when the group aborted, when renames are parked, and when an
+epoch below the run is missing (a gap: here a log starting at epoch 1).
 """
 
 from __future__ import annotations
@@ -30,46 +32,64 @@ N_EPOCHS = 4
 
 
 class _Recorder:
-    """Stands in for ``apply_epoch``: records the epoch, the DDL argument,
-    each group call's ``epochs`` and the peak number of applies in flight.
-    ``abort_groups`` makes every group call report ``aborted``; ``bad``
-    (an epoch span) makes a group call that overlaps it report ``aborted``
-    with that span as its ``bad`` epochs."""
+    """Stands in for ``apply_epoch`` and ``_apply_general``: records the
+    epoch of each plain call, the DDL argument, each ``apply_epoch`` group
+    call's ``epochs``, each ``_apply_general`` call's epochs (``general``)
+    and the peak number of applies in flight. A group call marks its epochs applied; ``abort_groups`` makes
+    every group call report ``aborted`` instead."""
 
-    def __init__(self, abort_groups: bool = False, bad=None):
+    def __init__(self, abort_groups: bool = False):
         self.epochs: list[int] = []
         self.ddl_seen: list[bool] = []
         self.groups: list[list[int]] = []
+        self.general: list[list[int]] = []
         self.abort_groups = abort_groups
-        self.bad = bad
         self.active = self.peak = 0
         self.lock = threading.Lock()
 
+    @staticmethod
+    def _mark_applied(lake, group) -> None:
+        """A group commits: later runs see no gap below them."""
+        def mark(mani: dict) -> bool:
+            for e in group:
+                LakeTable._mark_epoch_applied(mani, e)
+            return True
+
+        lake._commit_with_rebase(mark)
+
+    def apply_general(self, *args, **kwargs):
+        with self.lock:
+            self.general.append(list(kwargs.get("epochs") or [args[2]]))
+        return self._apply(None, args, kwargs)
+
     def __call__(self, *args, **kwargs):
+        return self._apply(self.groups, args, kwargs)
+
+    def _apply(self, groups: list | None, args, kwargs):
         ep = int(kwargs["epoch"]) if "epoch" in kwargs else int(args[2])
         ddl = kwargs.get("ddl", args[3] if len(args) > 3 else None)
         group = kwargs.get("epochs")
+        with self.lock:
+            self.ddl_seen.append(ddl is not None and len(ddl) > 0)
         if group is not None:
-            with self.lock:
-                self.groups.append(list(group))
+            if groups is not None:
+                with self.lock:
+                    groups.append(list(group))
             if self.abort_groups:
                 return {"aborted": True, "epoch": ep, "group": group}
-            if self.bad and any(self.bad[0] <= e <= self.bad[1]
-                                for e in group):
-                return {"aborted": True, "epoch": ep, "group": group,
-                        "bad": list(self.bad)}
+            self._mark_applied(args[0], group)
             return {"skipped": False, "epoch": ep, "group": list(group),
                     "version": 1, "wall_sec": 0.4, "per_bucket_rows": {},
                     "rows_written": 0}
         with self.lock:
             self.epochs.append(ep)
-            self.ddl_seen.append(ddl is not None and len(ddl) > 0)
             self.active += 1
             self.peak = max(self.peak, self.active)
         time.sleep(0.2)
         with self.lock:
             self.active -= 1
-        return {"skipped": False, "epoch": ep}
+        return {"skipped": False, "epoch": ep, "wall_sec": 0.2,
+                "per_bucket_rows": {}}
 
 
 @pytest.fixture(scope="module")
@@ -82,27 +102,39 @@ def log():
 
 def _rename_free(log):
     """The log without its renames: ``run_stream`` reads rename epochs
-    from the event files' footers and would split a MOR group around
-    them before the recorder sees it."""
+    from the event files' footers and would send a MOR group straight to
+    ``_apply_general``."""
     ev, _ddl = log
     return ev[ev["op"] != "rename"]
 
 
+def _above_gap(ev, ddl=None):
+    """The log moved up one epoch: epoch 0 is never delivered, so every
+    run has a gap below it and applies one by one."""
+    ev = ev.assign(epoch=ev["epoch"] + 1)
+    return ev if ddl is None else (ev, ddl.assign(epoch=ddl["epoch"] + 1))
+
+
 def _drive(how, spark, tmp_path, monkeypatch, ev, ddl, max_in_flight,
-           compact_every=0, merge_mode="cow", abort_groups=False, bad=None):
-    rec = _Recorder(abort_groups, bad)
+           compact_every=0, merge_mode="cow", abort_groups=False,
+           prepare=None):
+    rec = _Recorder(abort_groups)
     finalized: list[int] = []
     compacts: list[list[int]] = []
     monkeypatch.setattr(pipeline, "apply_epoch", rec)
+    monkeypatch.setattr(pipeline, "_apply_general", rec.apply_general)
     monkeypatch.setattr(
         pipeline, "resolve_parked",
         lambda lake, spark: finalized.append(1) or {"resolved": 3})
     lake = LakeTable.create(spark, str(tmp_path / "lake"), num_buckets=4,
                             merge_mode=merge_mode)
+    if prepare is not None:
+        prepare(lake)
     monkeypatch.setattr(
         lake, "compact",
         lambda **kw: compacts.append(
-            list(rec.epochs) + [e for g in rec.groups for e in g]) or {})
+            list(rec.epochs) + [e for g in rec.groups + rec.general
+                                for e in g]) or {})
     if how == "replay_log":
         sdf = spark.createDataFrame(ev.drop(columns=["ts", "extra_cols"]))
         stats = pipeline.replay_log(spark, lake, sdf, ddl,
@@ -124,11 +156,13 @@ def _drive(how, spark, tmp_path, monkeypatch, ev, ddl, max_in_flight,
 @pytest.mark.parametrize("how", ["replay_log", "run_stream"])
 def test_one_apply_per_epoch(spark, tmp_path, monkeypatch, log, how,
                              max_in_flight):
+    """A run above a gap applies one by one: one call per epoch,
+    sequential or concurrent, reported in epoch order."""
     ev, _ddl = log
-    rec, stats, finalized, _ = _drive(how, spark, tmp_path, monkeypatch, ev,
-                                      None, max_in_flight)
-    epochs = list(range(N_EPOCHS))
-    assert rec.groups == []  # a CoW lake never groups
+    rec, stats, finalized, _ = _drive(how, spark, tmp_path, monkeypatch,
+                                      _above_gap(ev), None, max_in_flight)
+    epochs = list(range(1, N_EPOCHS + 1))
+    assert rec.groups == [] and rec.general == []
     assert sorted(rec.epochs) == epochs  # exactly one call per epoch
     assert [s["epoch"] for s in stats] == epochs  # reported in epoch order
     resolved = [i for i, s in enumerate(stats) if "parked_resolved" in s]
@@ -147,10 +181,10 @@ def test_ddl_log_applies_sequentially(spark, tmp_path, monkeypatch, log, how):
     """A DDL-bearing log never runs concurrently: schema changes take
     effect from their epoch on, so epochs apply one at a time, in order,
     each with the DDL."""
-    ev, ddl = log
+    ev, ddl = _above_gap(*log)
     rec, stats, finalized, _ = _drive(how, spark, tmp_path, monkeypatch, ev,
                                       ddl, max_in_flight=2)
-    assert rec.epochs == list(range(N_EPOCHS))
+    assert rec.epochs == list(range(1, N_EPOCHS + 1))
     assert rec.peak == 1
     assert all(rec.ddl_seen)
     assert finalized == []
@@ -160,19 +194,19 @@ def test_ddl_log_applies_sequentially(spark, tmp_path, monkeypatch, log, how):
 @pytest.mark.parametrize("max_in_flight", [1, 2])
 def test_compaction_schedule(spark, tmp_path, monkeypatch, log,
                              max_in_flight):
-    """Sequential: compact after each epoch with (ep + 1) % k == 0.
-    Concurrent: once, after the drain."""
+    """One by one, sequential: compact after each epoch with
+    (ep + 1) % k == 0. Concurrent: once, after the drain."""
     ev, _ddl = log
     rec, stats, _, compacts = _drive("run_stream", spark, tmp_path,
-                                     monkeypatch, ev, None, max_in_flight,
-                                     compact_every=2)
+                                     monkeypatch, _above_gap(ev), None,
+                                     max_in_flight, compact_every=2)
     compacted = [s["epoch"] for s in stats if "compact" in s]
     if max_in_flight == 1:
-        assert compacts == [[0, 1], [0, 1, 2, 3]]
+        assert compacts == [[1], [1, 2, 3]]
         assert compacted == [1, 3]
     else:
-        assert len(compacts) == 1 and sorted(compacts[0]) == [0, 1, 2, 3]
-        assert compacted == [N_EPOCHS - 1]
+        assert len(compacts) == 1 and sorted(compacts[0]) == [1, 2, 3, 4]
+        assert compacted == [N_EPOCHS]
 
 
 def test_main_stream_passes_sha_impl(spark, tmp_path, monkeypatch):
@@ -257,42 +291,68 @@ def test_mor_aborted_group_falls_back(spark, tmp_path, monkeypatch, log,
             assert len(compacts) == 1
 
 
-@pytest.mark.parametrize("max_in_flight", [1, 2])
+def _ddl_at_2(log):
+    _ev, ddl = log
+    return ddl.assign(epoch=2)
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
 @pytest.mark.parametrize("how", ["replay_log", "run_stream"])
-def test_mor_aborted_group_splits_around_bad_span(spark, tmp_path,
-                                                  monkeypatch, log, how,
-                                                  max_in_flight):
-    """A group that aborts on rows only the general path applies, in
-    epochs 1..2, applies that span one by one and the epochs before and
-    after it as groups again; stats stay one per epoch, in epoch order."""
-    ev = _rename_free(log)
-    rec, stats, finalized, compacts = _drive(
-        how, spark, tmp_path, monkeypatch, ev, None, max_in_flight,
-        compact_every=2 if how == "run_stream" else 0, merge_mode="mor",
-        bad=(1, 2))
-    assert rec.groups == [[0, 1, 2, 3], [0], [3]]
-    assert sorted(rec.epochs) == [1, 2]
+def test_one_group_call_per_ddl_run(spark, tmp_path, monkeypatch, log, how,
+                                    merge_mode):
+    """A DDL epoch starts a run, and each run goes through one group call
+    with the DDL, in both merge modes: a CoW run, and a MOR run whose
+    files show no rename, through ``apply_epoch``. Stats come once per
+    epoch, in epoch order, each with its run's group."""
+    rec, stats, finalized, _ = _drive(how, spark, tmp_path, monkeypatch,
+                                      _rename_free(log), _ddl_at_2(log), 2,
+                                      merge_mode=merge_mode)
+    assert rec.groups == [[0, 1], [2, 3]]
+    assert rec.general == [] and rec.epochs == []
+    assert rec.ddl_seen == [True, True]
     assert [s["epoch"] for s in stats] == [0, 1, 2, 3]
-    assert [s.get("group") for s in stats] == [[0], None, None, [3]]
-    compacted = [s["epoch"] for s in stats if "compact" in s]
-    if max_in_flight == 1:
-        assert rec.epochs == [1, 2] and finalized == []
-        assert compacted == ([1, 3] if how == "run_stream" else [])
-    else:
-        assert rec.peak == 2 and finalized == [1]
-        assert stats[2]["parked_resolved"] == 3
-        assert compacted == ([2, 3] if how == "run_stream" else [])
-    assert len(compacts) == len(compacted)
+    assert [s["group"] for s in stats] == [[0, 1]] * 2 + [[2, 3]] * 2
+    assert finalized == []
 
 
-def test_mor_footer_renames_split_before_any_write(spark, tmp_path,
-                                                   monkeypatch, log):
-    """``run_stream`` reads each epoch file's footer: with a rename in
-    every epoch, the span covers the whole trigger, so no group write is
-    tried and the epochs apply one by one."""
-    ev, _ddl = log
+def test_mor_footer_renames_skip_the_fast_path(spark, tmp_path,
+                                               monkeypatch, log):
+    """``run_stream`` reads each epoch file's footer: a MOR run whose
+    files hold renames goes straight to ``_apply_general``, so no
+    fast-path write is tried. The log's DDL at epoch 3 makes [3] a run of
+    its own: a plain call."""
+    ev, ddl = log
     assert set(ev.loc[ev["op"] == "rename", "epoch"]) == set(range(N_EPOCHS))
     rec, stats, _, _ = _drive("run_stream", spark, tmp_path, monkeypatch, ev,
-                              None, 1, merge_mode="mor")
-    assert rec.groups == [] and rec.epochs == list(range(N_EPOCHS))
+                              ddl, 1, merge_mode="mor")
+    assert rec.general == [[0, 1, 2], [3]] and rec.groups == []
+    assert rec.epochs == [3]
     assert [s["epoch"] for s in stats] == list(range(N_EPOCHS))
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_parked_renames_apply_one_by_one(spark, tmp_path, monkeypatch, log,
+                                         merge_mode):
+    """A lake with parked renames applies a run one by one: the per-epoch
+    applies re-inject and resolve them."""
+    def park(lake):
+        lake._commit_with_rebase(lambda m: LakeTable._set_parked_renames(
+            m, [{"repo": "r", "path": "a", "new_path": "b", "commit": "c",
+                 "event_seq": 0, "epoch": 9}]) or True)
+
+    rec, stats, _, _ = _drive("replay_log", spark, tmp_path, monkeypatch,
+                              _rename_free(log), None, 1,
+                              merge_mode=merge_mode, prepare=park)
+    assert rec.groups == [] and rec.general == []
+    assert rec.epochs == list(range(N_EPOCHS))
+    assert [s["epoch"] for s in stats] == list(range(N_EPOCHS))
+
+
+def test_cow_aborted_group_falls_back(spark, tmp_path, monkeypatch, log):
+    """A CoW group that aborts (malformed rows, a racing writer) applies
+    its epochs one by one."""
+    rec, stats, _, _ = _drive("replay_log", spark, tmp_path, monkeypatch,
+                              _rename_free(log), None, 1, abort_groups=True)
+    epochs = list(range(N_EPOCHS))
+    assert rec.groups == [epochs] and rec.epochs == epochs
+    assert [s["epoch"] for s in stats] == epochs
