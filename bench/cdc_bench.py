@@ -90,8 +90,7 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
         sha_impl: str = "arrow", merge_mode: str = "cow",
         compact_every: int = 4, warmup_epochs: int = 0,
         shuffle_partitions: int | None = None,
-        events_dir: str | None = None,
-        in_flight: int = 1) -> dict:
+        events_dir: str | None = None) -> dict:
     from skipmap_processor_spark.lake import LakeTable
     from skipmap_processor_spark.session import get_spark
     from skipmap_processor_spark.streaming.pipeline import (
@@ -241,16 +240,10 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
     pcpu0 = _tree_cpu()
     gc0_sec, gc0_n = _jvm_gc()
     t0 = time.monotonic()
-    # in_flight > 1 is the CONCURRENT epoch apply (backfill/catch-up
-    # mode): a sequential loop leaves the wide executor idle through every
-    # per-epoch scheduler/barrier/driver phase — the fixed term that caps
-    # the N->4N ratio — so overlapping epochs pipelines one epoch's
-    # reduce/write phase under the next epoch's scan. MOR compacts every
-    # compact_every epochs, or once after a concurrent drain (same fold
-    # work); CoW never does.
+    # MOR compacts every compact_every epochs (once after a group that
+    # crossed such a boundary); CoW never does.
     out = _apply_epochs(lake, epochs, rows_of, None, sha_impl, "error",
-                        in_flight, compact_every if merge_mode == "mor" else 0,
-                        None)
+                        compact_every if merge_mode == "mor" else 0, None)
     assert not any(st["skipped"] for st in out)
     per_epoch = [round(st["wall_sec"], 3) for st in out]
     compact_sec = sum(st["compact"]["wall_sec"] for st in out
@@ -269,15 +262,11 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
         "merge_mode": merge_mode,
         "wall_sec": round(wall, 3),
         "events_per_sec": round(n_events / wall, 1),
-        # with overlapping epochs the per-epoch walls double-count shared
-        # time; warmup already strips cold-start, so wall IS steady state
         "steady_events_per_sec": round(
-            n_events / wall, 1) if in_flight > 1 else round(
             (n_events - n_events // n_epochs)
             / max(sum(per_epoch[1:]) + compact_sec, 1e-9),
             1,
         ),
-        "in_flight": in_flight,
         "per_epoch_sec": per_epoch,
         "compact_sec": round(compact_sec, 3),
         "cpu_sec": round(cpu1 - cpu0, 1),
@@ -314,9 +303,6 @@ if __name__ == "__main__":
     ap.add_argument("--mode", choices=["cow", "mor"], default="cow")
     ap.add_argument("--compact-every", type=int, default=4)
     ap.add_argument("--warmup-epochs", type=int, default=0)
-    ap.add_argument("--in-flight", type=int, default=1,
-                    help="concurrent epoch applies (backfill mode); >1 "
-                         "overlaps scheduler/barrier idle across epochs")
     ap.add_argument("--shuffle-partitions", type=int, default=None,
                     help="pin the shuffle/file layout (identical job at "
                          "any parallelism level); default cpus*mult")
@@ -327,7 +313,6 @@ if __name__ == "__main__":
     args = ap.parse_args()
     res = run(args.cpus, args.keys, args.events, args.epochs, args.buckets,
               args.sha, args.mode, args.compact_every,
-              args.warmup_epochs, args.shuffle_partitions, args.events_dir,
-              args.in_flight)
+              args.warmup_epochs, args.shuffle_partitions, args.events_dir)
     res["sha_impl"] = args.sha
     print(json.dumps(res))

@@ -80,8 +80,6 @@ def main() -> None:
     ap.add_argument("--warmup", type=int, default=2)
     ap.add_argument("--sha", choices=["arrow", "jvm"], default="jvm")
     ap.add_argument("--fixed-shuffle", type=int, default=128)
-    ap.add_argument("--in-flight", type=int, default=1,
-                    help="concurrent epoch applies per leg (backfill mode)")
     ap.add_argument("--max-steal-frac", type=float, default=0.02)
     ap.add_argument("--max-foreign-frac", type=float, default=0.03,
                     help="max in-host non-leg CPU (kernel + foreign "
@@ -168,8 +166,6 @@ def main() -> None:
     smult = os.environ.get("SKIPMAP_BENCH_SHUFFLE_MULT", "4")
     layout = (f"sp{args.fixed_shuffle}" if args.fixed_shuffle
               else f"s{smult}")
-    if args.in_flight > 1:
-        layout += f"_if{args.in_flight}"
     sig = (f"n{args.n}_k{args.keys}_e{args.events}_p{args.epochs}"
            f"_{args.mode}_{args.sha}_{layout}")
 
@@ -210,8 +206,7 @@ def main() -> None:
 
     def leg(cpus: int) -> dict | None:
         r = run_one(cpus, args.keys, args.events, args.epochs, args.mode,
-                    args.warmup, args.sha, args.fixed_shuffle,
-                    args.in_flight)
+                    args.warmup, args.sha, args.fixed_shuffle)
         if r is None:
             return None
         r["sig"] = sig

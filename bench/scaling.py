@@ -150,8 +150,7 @@ def wait_quiet(threshold: float = 0.02, window_s: float = 10.0,
 
 
 def run_one(cpus: int, keys: int, events: int, epochs: int, mode: str,
-            warmup: int, sha: str, fixed_shuffle: int | None = None,
-            in_flight: int = 1) -> dict:
+            warmup: int, sha: str, fixed_shuffle: int | None = None) -> dict:
     cmd = [
         sys.executable, os.path.join(REPO, "bench", "cdc_bench.py"),
         "--cpus", str(cpus), "--keys", str(keys), "--events", str(events),
@@ -160,8 +159,6 @@ def run_one(cpus: int, keys: int, events: int, epochs: int, mode: str,
     ]
     if fixed_shuffle:
         cmd += ["--shuffle-partitions", str(fixed_shuffle)]
-    if in_flight > 1:
-        cmd += ["--in-flight", str(in_flight)]
     # 3600s: first-ever invocation also generates the event log (~25 min
     # single-core for 32M events; cached for every later run).
     # start_new_session: the leg (driver + its pyspark JVM) forms its OWN

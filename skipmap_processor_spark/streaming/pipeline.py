@@ -10,10 +10,13 @@ redelivery a no-op. A MOR group tries an optimistic fast path first
 ``foreachBatch`` with a checkpoint; ``replay_log`` is the batch-mode
 replay of a whole log (same function, no streaming overhead). Both — and
 ``bench/cdc_bench.py`` — drive epochs through one scheduler,
-``_apply_epochs``: each DDL-delimited run of epochs applies as one group
-in both merge modes, or one by one (sequential or concurrent) where a
-group would not equal that; then parked-rename finalization, compaction
-and reporting.
+``_apply_epochs``: it first finalizes parked renames whose gap has
+closed (``resolve_parked``), then applies each DDL-delimited run of
+epochs as one group in both merge modes, or one by one where a group
+would not equal that; then compaction and reporting. Epochs apply
+sequentially; separate writer handles on one table may still race, and
+the CAS commit, the CoW bucket locks and the parked-rename protocol keep
+that equal to the sequential order.
 
 Resume model (mirrors the reference's resumable run modes,
 /root/reference/run.sh:7-80 and docs/control-flow.md:115-126):
@@ -367,8 +370,8 @@ def _apply_general(lake: LakeTable, events: DataFrame, epoch: int,
         def park_hook(mani2: dict) -> None:
             seen: set = set()
             kept: list[dict] = []
-            # base on mani2's CURRENT list: a CONCURRENT apply may have
-            # parked entries since our snapshot (the CAS rebase replays
+            # base on mani2's CURRENT list: another writer handle may
+            # have parked entries since our snapshot (the CAS rebase replays
             # this hook on the winner's manifest)
             for r in fresh + lake.parked_renames(mani2):
                 key = _parked_key(r)
@@ -400,11 +403,13 @@ def _apply_general(lake: LakeTable, events: DataFrame, epoch: int,
 def resolve_parked(lake: LakeTable, spark: SparkSession) -> dict:
     """Replay parked renames whose gap below has closed, outside any epoch.
 
-    With CONCURRENT applies, epoch K+1 may park a rename while K is still
-    uncommitted; K's commit then closes the gap with no later apply left
-    to re-inject it. Entries with no gap below replay through the same
-    resolver in an epoch-less merge; only those replayed HERE are dropped
-    (entries a racing writer frees stay parked for their own resolution)."""
+    With another writer handle on the table, epoch K+1 may park a rename
+    while K is still uncommitted; K's commit then closes the gap with no
+    later apply left to re-inject it. ``_apply_epochs`` therefore calls
+    this at the start of every trigger. Entries with no gap below replay
+    through the same resolver in an epoch-less merge; only those replayed
+    HERE are dropped (entries a racing writer frees stay parked for their
+    own resolution). With nothing parked it is one manifest read."""
     parked = lake.parked_renames()
     if not parked:
         return {"resolved": 0}
@@ -488,14 +493,18 @@ def _compact_due(ep, compact_every: int) -> bool:
 
 
 def _apply_epochs(lake: LakeTable, epochs: list, rows_of, ddl, sha_impl: str,
-                  on_malformed: str, max_in_flight: int, compact_every: int,
-                  on_batch, renames=None) -> list[dict]:
+                  on_malformed: str, compact_every: int, on_batch,
+                  renames=None) -> list[dict]:
     """The one epoch scheduler: applies ``epochs`` (ascending), with
     ``rows_of(eps)`` building the events of the epochs ``eps`` (``epoch``
     column kept); returns one stats dict per epoch, in epoch order.
     ``renames(eps)``, when given, says whether the event files of ``eps``
     hold renames (``run_stream`` reads their footers).
 
+    - FIRST ``resolve_parked``: renames parked above a gap that has since
+      closed (another writer handle filled it) are finalized, so the runs
+      below can group. A non-zero count rides on the first stats as
+      ``parked_resolved``. With nothing parked this is one manifest read.
     - RUNS: ``epochs`` split at DDL epochs (a schema change takes effect
       from its epoch, so a DDL epoch only starts a run). A run's epochs
       not applied yet go through ONE group call in both merge modes
@@ -506,23 +515,18 @@ def _apply_epochs(lake: LakeTable, epochs: list, rows_of, ddl, sha_impl: str,
       path. Epochs applied before report ``skipped``; a group epoch's
       stats carry the shared ``version``, ``group`` and ``wall_sec`` =
       group wall / group size.
-    - ONE BY ONE (``_apply_each``), nothing of the group committed, when
-      renames are parked, an epoch below the run's last is neither applied
-      nor in the group (a fast MOR group may sit above such a gap), or the
-      group aborted (malformed rows — quarantine stays per epoch — or a
-      racing writer applied one of its epochs).
-    - CONCURRENT (``max_in_flight`` threads) only one by one, for more
-      than one epoch of a DDL-free log: applies commute (MOR: ord-gated
-      CAS append; CoW: per-bucket locks; renames: the parked-rename
-      protocol). Then ``resolve_parked`` finalizes renames whose gap closed
-      mid-flight; a non-zero count rides on the LAST stats as
-      ``parked_resolved``.
-    - Compaction (``stats["compact"]``): one by one, sequentially, after
-      each applied epoch with ``(ep + 1) % compact_every == 0``; after a
-      group or a concurrent drain at most once (on the last stats), if any
-      applied epoch crossed such a boundary.
+    - ONE BY ONE, one ``apply_epoch`` per epoch, nothing of the group
+      committed, when renames are still parked, an epoch below the run's
+      last is neither applied nor in the group (a fast MOR group may sit
+      above such a gap), or the group aborted (malformed rows — quarantine
+      stays per epoch — or a racing writer applied one of its epochs).
+    - Compaction (``stats["compact"]``): one by one, after each applied
+      epoch with ``(ep + 1) % compact_every == 0``; after a group at most
+      once (on the last stats), if any applied epoch crossed such a
+      boundary.
     - ``on_batch(stats)`` per epoch, in epoch order.
     """
+    resolved = resolve_parked(lake, lake.spark)["resolved"]
     starts = (set() if ddl is None or not len(ddl)
               else set(ddl["epoch"].astype(int)))
     runs: list[list] = []
@@ -532,56 +536,27 @@ def _apply_epochs(lake: LakeTable, epochs: list, rows_of, ddl, sha_impl: str,
         else:
             runs.append([ep])
     out: list[dict] = []
-    for run in runs:
-        stats = _apply_run(lake, run, rows_of, ddl, sha_impl, on_malformed,
-                           compact_every, renames)
-        if stats is None:
-            out += _apply_each(lake, run, rows_of, ddl, sha_impl,
-                               on_malformed, max_in_flight, compact_every,
-                               on_batch)
-            continue
-        if on_batch is not None:
-            for st in stats:
-                on_batch(st)
-        out += stats
-    return out
 
-
-def _apply_each(lake: LakeTable, epochs: list, rows_of, ddl, sha_impl: str,
-                on_malformed: str, max_in_flight: int, compact_every: int,
-                on_batch) -> list[dict]:
-    """``_apply_epochs`` without the group rule: one ``apply_epoch`` per
-    epoch, concurrent or sequential."""
-    def due(ep, stats: dict) -> bool:
-        return not stats.get("skipped") and _compact_due(ep, compact_every)
-
-    has_ddl = ddl is not None and len(ddl) > 0
-    if max_in_flight > 1 and len(epochs) > 1 and not has_ddl:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=max_in_flight) as pool:
-            futs = [pool.submit(apply_epoch, lake, rows_of([ep]), int(ep),
-                                None, sha_impl, on_malformed)
-                    for ep in epochs]
-            out = [f.result() for f in futs]
-        fin = resolve_parked(lake, lake.spark)
-        if fin.get("resolved"):
-            out[-1]["parked_resolved"] = fin["resolved"]
-        if any(due(ep, st) for ep, st in zip(epochs, out)):
-            out[-1]["compact"] = _compact(lake)
-        if on_batch is not None:
-            for stats in out:
-                on_batch(stats)
-        return out
-    out = []
-    for ep in epochs:
-        stats = apply_epoch(lake, rows_of([ep]), int(ep), ddl, sha_impl,
-                            on_malformed)
-        if due(ep, stats):
-            stats["compact"] = _compact(lake)
+    def report(stats: dict) -> None:
+        if resolved and not out:
+            stats["parked_resolved"] = resolved
+        out.append(stats)
         if on_batch is not None:
             on_batch(stats)
-        out.append(stats)
+
+    for run in runs:
+        group = _apply_run(lake, run, rows_of, ddl, sha_impl, on_malformed,
+                           compact_every, renames)
+        if group is not None:
+            for stats in group:
+                report(stats)
+            continue
+        for ep in run:  # one by one
+            stats = apply_epoch(lake, rows_of([ep]), int(ep), ddl, sha_impl,
+                                on_malformed)
+            if not stats.get("skipped") and _compact_due(ep, compact_every):
+                stats["compact"] = _compact(lake)
+            report(stats)
     return out
 
 
@@ -591,20 +566,18 @@ def replay_log(
     events: DataFrame,
     ddl: pd.DataFrame | None = None,
     sha_impl: str = "arrow",
-    max_in_flight: int = 1,
     on_malformed: str = "error",
 ) -> list[dict]:
     """Batch-mode replay of every epoch of ``events`` through
-    ``_apply_epochs``, one stats dict per epoch: one group per
-    DDL-delimited run. ``max_in_flight > 1`` applies epochs that go one
-    by one CONCURRENTLY (DDL-free logs only; the final state is
-    arrival-order-independent by design), then runs ``resolve_parked``."""
+    ``_apply_epochs``, one stats dict per epoch: parked renames whose gap
+    has closed are finalized first, then one group per DDL-delimited
+    run."""
     epochs = sorted(
         r["epoch"] for r in events.select("epoch").distinct().collect()
     )
     return _apply_epochs(
         lake, epochs, lambda eps: _epoch_slice(events, eps, epochs),
-        ddl, sha_impl, on_malformed, max_in_flight, 0, None)
+        ddl, sha_impl, on_malformed, 0, None)
 
 
 def _epoch_slice(events: DataFrame, eps: list, all_eps: list) -> DataFrame:
@@ -612,13 +585,6 @@ def _epoch_slice(events: DataFrame, eps: list, all_eps: list) -> DataFrame:
     if set(eps) == set(all_eps):
         return events
     return events.filter(F.col("epoch").isin([int(e) for e in eps]))
-
-
-def epochs_from_source_log(checkpoint_dir: str,
-                           batch_id: int) -> list[int] | None:
-    """Epochs in a micro-batch (``files_from_source_log``'s keys)."""
-    files = files_from_source_log(checkpoint_dir, batch_id)
-    return None if files is None else sorted(files)
 
 
 def _holds_renames(paths: list[str]) -> bool:
@@ -692,7 +658,6 @@ def run_stream(
     on_batch=None,
     compact_every: int = 0,
     sha_impl: str = "arrow",
-    max_in_flight: int = 1,
     on_malformed: str = "error",
     wire_format: str = "parquet",
 ):
@@ -702,8 +667,9 @@ def run_stream(
     ``maxFilesPerTrigger`` bounds epochs per micro-batch. Its default
     (``None``) is no cap, in both merge modes, with or without DDL: a
     trigger's backlog applies as one group per DDL-delimited run. Each
-    micro-batch goes through ``_apply_epochs``; ``on_batch`` gets each
-    epoch's stats, in epoch order. A group that is part of a micro-batch
+    micro-batch goes through ``_apply_epochs``, which first finalizes the
+    parked renames whose gap has closed; ``on_batch`` gets each epoch's
+    stats, in epoch order. A group that is part of a micro-batch
     reads only its epochs' files, named by the checkpoint's source log
     (``files_from_source_log``). For parquet events their footers also
     show whether a group holds renames (``_holds_renames``): a MOR group
@@ -782,7 +748,7 @@ def run_stream(
             return rows if decode is None else decode(rows)
 
         _apply_epochs(lake, epochs, rows_of, ddl, sha_impl, on_malformed,
-                      max_in_flight, compact_every, on_batch,
+                      compact_every, on_batch,
                       renames if fmt == "parquet" and files else None)
 
     writer = (sdf.writeStream.foreachBatch(handle)

@@ -1,23 +1,22 @@
 """The epoch scheduler contract ``replay_log`` and ``run_stream`` share,
 and the CLI's wiring into ``run_stream``.
 
-``apply_epoch`` and ``_apply_general`` are replaced by a recorder, so
-these tests pin only the scheduling rules. Each DDL-delimited run of
-epochs goes through one group call with ``epochs=`` (a run of one: a
-plain call), reported once per epoch in epoch order: ``apply_epoch`` on a
-CoW lake and for a MOR run whose files show no rename (it tries the fast
-path first), ``_apply_general`` for a MOR run whose event files' footers
-show renames. Epochs apply one by one — one call per epoch with the
-epoch as the third positional argument (or ``epoch=``), concurrency only
-for DDL-free logs, ``parked_resolved`` on the last stats, compaction per
-epoch — when the group aborted, when renames are parked, and when an
-epoch below the run is missing (a gap: here a log starting at epoch 1).
+``apply_epoch``, ``_apply_general`` and ``resolve_parked`` are replaced
+by recorders, so these tests pin only the scheduling rules. Every
+trigger first calls ``resolve_parked`` once, before any apply; a non-zero
+count rides on its first stats as ``parked_resolved``. Each
+DDL-delimited run of epochs then goes through one group call with
+``epochs=`` (a run of one: a plain call), reported once per epoch in
+epoch order: ``apply_epoch`` on a CoW lake and for a MOR run whose files
+show no rename (it tries the fast path first), ``_apply_general`` for a
+MOR run whose event files' footers show renames. Epochs apply one by one
+— one call per epoch with the epoch as the third positional argument
+(or ``epoch=``), in order, compaction per epoch — when the group
+aborted, when renames are parked, and when an epoch below the run is
+missing (a gap: here a log starting at epoch 1).
 """
 
 from __future__ import annotations
-
-import threading
-import time
 
 import pytest
 
@@ -32,20 +31,23 @@ N_EPOCHS = 4
 
 
 class _Recorder:
-    """Stands in for ``apply_epoch`` and ``_apply_general``: records the
-    epoch of each plain call, the DDL argument, each ``apply_epoch`` group
-    call's ``epochs``, each ``_apply_general`` call's epochs (``general``)
-    and the peak number of applies in flight. A group call marks its epochs applied; ``abort_groups`` makes
-    every group call report ``aborted`` instead."""
+    """Stands in for ``apply_epoch``, ``_apply_general`` and
+    ``resolve_parked``: records the epoch of each plain call, the DDL
+    argument, each ``apply_epoch`` group call's ``epochs``, each
+    ``_apply_general`` call's epochs (``general``) and, in ``order``,
+    every call in sequence (``"resolve"``, or the epochs applied). A
+    group call marks its epochs applied; ``abort_groups`` makes every
+    group call report ``aborted`` instead. ``resolve_parked`` reports
+    ``resolved`` renames."""
 
-    def __init__(self, abort_groups: bool = False):
+    def __init__(self, abort_groups: bool = False, resolved: int = 0):
         self.epochs: list[int] = []
         self.ddl_seen: list[bool] = []
         self.groups: list[list[int]] = []
         self.general: list[list[int]] = []
+        self.order: list = []
         self.abort_groups = abort_groups
-        self.active = self.peak = 0
-        self.lock = threading.Lock()
+        self.resolved = resolved
 
     @staticmethod
     def _mark_applied(lake, group) -> None:
@@ -57,9 +59,12 @@ class _Recorder:
 
         lake._commit_with_rebase(mark)
 
+    def resolve_parked(self, lake, spark) -> dict:
+        self.order.append("resolve")
+        return {"resolved": self.resolved}
+
     def apply_general(self, *args, **kwargs):
-        with self.lock:
-            self.general.append(list(kwargs.get("epochs") or [args[2]]))
+        self.general.append(list(kwargs.get("epochs") or [args[2]]))
         return self._apply(None, args, kwargs)
 
     def __call__(self, *args, **kwargs):
@@ -69,27 +74,24 @@ class _Recorder:
         ep = int(kwargs["epoch"]) if "epoch" in kwargs else int(args[2])
         ddl = kwargs.get("ddl", args[3] if len(args) > 3 else None)
         group = kwargs.get("epochs")
-        with self.lock:
-            self.ddl_seen.append(ddl is not None and len(ddl) > 0)
+        self.ddl_seen.append(ddl is not None and len(ddl) > 0)
+        self.order.append(list(group or [ep]))
         if group is not None:
             if groups is not None:
-                with self.lock:
-                    groups.append(list(group))
+                groups.append(list(group))
             if self.abort_groups:
                 return {"aborted": True, "epoch": ep, "group": group}
             self._mark_applied(args[0], group)
             return {"skipped": False, "epoch": ep, "group": list(group),
                     "version": 1, "wall_sec": 0.4, "per_bucket_rows": {},
                     "rows_written": 0}
-        with self.lock:
-            self.epochs.append(ep)
-            self.active += 1
-            self.peak = max(self.peak, self.active)
-        time.sleep(0.2)
-        with self.lock:
-            self.active -= 1
+        self.epochs.append(ep)
         return {"skipped": False, "epoch": ep, "wall_sec": 0.2,
                 "per_bucket_rows": {}}
+
+    def resolved_first(self) -> bool:
+        """One ``resolve_parked`` call, made before any apply."""
+        return self.order.count("resolve") == 1 and self.order[0] == "resolve"
 
 
 @pytest.fixture(scope="module")
@@ -115,17 +117,13 @@ def _above_gap(ev, ddl=None):
     return ev if ddl is None else (ev, ddl.assign(epoch=ddl["epoch"] + 1))
 
 
-def _drive(how, spark, tmp_path, monkeypatch, ev, ddl, max_in_flight,
-           compact_every=0, merge_mode="cow", abort_groups=False,
-           prepare=None):
-    rec = _Recorder(abort_groups)
-    finalized: list[int] = []
+def _drive(how, spark, tmp_path, monkeypatch, ev, ddl, compact_every=0,
+           merge_mode="cow", abort_groups=False, prepare=None, resolved=0):
+    rec = _Recorder(abort_groups, resolved)
     compacts: list[list[int]] = []
     monkeypatch.setattr(pipeline, "apply_epoch", rec)
     monkeypatch.setattr(pipeline, "_apply_general", rec.apply_general)
-    monkeypatch.setattr(
-        pipeline, "resolve_parked",
-        lambda lake, spark: finalized.append(1) or {"resolved": 3})
+    monkeypatch.setattr(pipeline, "resolve_parked", rec.resolve_parked)
     lake = LakeTable.create(spark, str(tmp_path / "lake"), num_buckets=4,
                             merge_mode=merge_mode)
     if prepare is not None:
@@ -137,8 +135,7 @@ def _drive(how, spark, tmp_path, monkeypatch, ev, ddl, max_in_flight,
                                 for e in g]) or {})
     if how == "replay_log":
         sdf = spark.createDataFrame(ev.drop(columns=["ts", "extra_cols"]))
-        stats = pipeline.replay_log(spark, lake, sdf, ddl,
-                                    max_in_flight=max_in_flight)
+        stats = pipeline.replay_log(spark, lake, sdf, ddl)
     else:
         events_dir = str(tmp_path / "events")
         write_event_log(events_dir, ev, ddl)
@@ -146,67 +143,68 @@ def _drive(how, spark, tmp_path, monkeypatch, ev, ddl, max_in_flight,
         pipeline.run_stream(
             spark, lake, events_dir, str(tmp_path / "ckpt"),
             max_files_per_trigger=16, available_now=True,
-            on_batch=stats.append, max_in_flight=max_in_flight,
-            compact_every=compact_every,
+            on_batch=stats.append, compact_every=compact_every,
         ).awaitTermination(300)
-    return rec, stats, finalized, compacts
+    return rec, stats, compacts
 
 
-@pytest.mark.parametrize("max_in_flight", [1, 2])
 @pytest.mark.parametrize("how", ["replay_log", "run_stream"])
-def test_one_apply_per_epoch(spark, tmp_path, monkeypatch, log, how,
-                             max_in_flight):
-    """A run above a gap applies one by one: one call per epoch,
-    sequential or concurrent, reported in epoch order."""
+def test_one_apply_per_epoch(spark, tmp_path, monkeypatch, log, how):
+    """A run above a gap applies one by one: one call per epoch, in
+    order, after the trigger's one ``resolve_parked`` call, reported in
+    epoch order."""
     ev, _ddl = log
-    rec, stats, finalized, _ = _drive(how, spark, tmp_path, monkeypatch,
-                                      _above_gap(ev), None, max_in_flight)
+    rec, stats, _ = _drive(how, spark, tmp_path, monkeypatch,
+                           _above_gap(ev), None)
     epochs = list(range(1, N_EPOCHS + 1))
     assert rec.groups == [] and rec.general == []
-    assert sorted(rec.epochs) == epochs  # exactly one call per epoch
+    assert rec.epochs == epochs  # exactly one call per epoch, in order
     assert [s["epoch"] for s in stats] == epochs  # reported in epoch order
-    resolved = [i for i, s in enumerate(stats) if "parked_resolved" in s]
-    if max_in_flight == 1:
-        assert rec.epochs == epochs and rec.peak == 1
-        assert finalized == [] and resolved == []
-    else:
-        assert rec.peak == 2
-        assert finalized == [1]
-        assert resolved == [N_EPOCHS - 1]
-        assert stats[-1]["parked_resolved"] == 3
+    assert rec.resolved_first()
+    assert not any("parked_resolved" in s for s in stats)
 
 
 @pytest.mark.parametrize("how", ["replay_log", "run_stream"])
 def test_ddl_log_applies_sequentially(spark, tmp_path, monkeypatch, log, how):
-    """A DDL-bearing log never runs concurrently: schema changes take
-    effect from their epoch on, so epochs apply one at a time, in order,
-    each with the DDL."""
+    """A DDL-bearing log above a gap applies one epoch at a time, in
+    order, each with the DDL (schema changes take effect from their
+    epoch on)."""
     ev, ddl = _above_gap(*log)
-    rec, stats, finalized, _ = _drive(how, spark, tmp_path, monkeypatch, ev,
-                                      ddl, max_in_flight=2)
+    rec, stats, _ = _drive(how, spark, tmp_path, monkeypatch, ev, ddl)
     assert rec.epochs == list(range(1, N_EPOCHS + 1))
-    assert rec.peak == 1
     assert all(rec.ddl_seen)
-    assert finalized == []
+    assert rec.resolved_first()
     assert not any("parked_resolved" in s for s in stats)
 
 
-@pytest.mark.parametrize("max_in_flight", [1, 2])
-def test_compaction_schedule(spark, tmp_path, monkeypatch, log,
-                             max_in_flight):
-    """One by one, sequential: compact after each epoch with
-    (ep + 1) % k == 0. Concurrent: once, after the drain."""
+def test_compaction_schedule(spark, tmp_path, monkeypatch, log):
+    """One by one: compact after each epoch with (ep + 1) % k == 0."""
     ev, _ddl = log
-    rec, stats, _, compacts = _drive("run_stream", spark, tmp_path,
-                                     monkeypatch, _above_gap(ev), None,
-                                     max_in_flight, compact_every=2)
+    rec, stats, compacts = _drive("run_stream", spark, tmp_path,
+                                  monkeypatch, _above_gap(ev), None,
+                                  compact_every=2)
     compacted = [s["epoch"] for s in stats if "compact" in s]
-    if max_in_flight == 1:
-        assert compacts == [[1], [1, 2, 3]]
-        assert compacted == [1, 3]
-    else:
-        assert len(compacts) == 1 and sorted(compacts[0]) == [1, 2, 3, 4]
-        assert compacted == [N_EPOCHS]
+    assert compacts == [[1], [1, 2, 3]]
+    assert compacted == [1, 3]
+
+
+@pytest.mark.parametrize("grouped", [True, False],
+                         ids=["group", "one_by_one"])
+@pytest.mark.parametrize("how", ["replay_log", "run_stream"])
+def test_parked_resolved_rides_on_first_stats(spark, tmp_path, monkeypatch,
+                                              log, how, grouped):
+    """A trigger's ``resolve_parked`` runs once, before any apply; its
+    non-zero count rides on the trigger's first stats only, whether the
+    run then applies as a group or one by one."""
+    ev = _rename_free(log)
+    rec, stats, _ = _drive(how, spark, tmp_path, monkeypatch,
+                           ev if grouped else _above_gap(ev), None,
+                           resolved=3)
+    assert rec.resolved_first()
+    assert (rec.groups != []) == grouped
+    assert len(stats) == N_EPOCHS
+    assert stats[0]["parked_resolved"] == 3
+    assert not any("parked_resolved" in s for s in stats[1:])
 
 
 def test_main_stream_passes_sha_impl(spark, tmp_path, monkeypatch):
@@ -240,55 +238,45 @@ def test_mor_group_one_call(spark, tmp_path, monkeypatch, log, how):
     ``epochs=``, reported once per epoch in epoch order, each epoch with
     the shared version and the group wall split evenly."""
     ev = _rename_free(log)
-    rec, stats, finalized, _ = _drive(how, spark, tmp_path, monkeypatch, ev,
-                                      None, 2, merge_mode="mor")
+    rec, stats, _ = _drive(how, spark, tmp_path, monkeypatch, ev, None,
+                           merge_mode="mor")
     epochs = list(range(N_EPOCHS))
     assert rec.groups == [epochs] and rec.epochs == []
     assert [s["epoch"] for s in stats] == epochs
     assert all(not s["skipped"] and s["group"] == epochs
                and s["version"] == 1 for s in stats)
     assert [s["wall_sec"] for s in stats] == [0.4 / N_EPOCHS] * N_EPOCHS
-    assert finalized == []
+    assert rec.resolved_first()
 
 
 def test_mor_group_compacts_once(spark, tmp_path, monkeypatch, log):
     """A group compacts once, after the whole group, if any of its epochs
     crossed a ``compact_every`` boundary."""
     ev = _rename_free(log)
-    rec, stats, _, compacts = _drive("run_stream", spark, tmp_path,
-                                     monkeypatch, ev, None, 1,
-                                     compact_every=2, merge_mode="mor")
+    rec, stats, compacts = _drive("run_stream", spark, tmp_path,
+                                  monkeypatch, ev, None, compact_every=2,
+                                  merge_mode="mor")
     assert compacts == [[0, 1, 2, 3]]
     assert [s["epoch"] for s in stats if "compact" in s] == [N_EPOCHS - 1]
 
 
-@pytest.mark.parametrize("max_in_flight", [1, 2])
 @pytest.mark.parametrize("how", ["replay_log", "run_stream"])
 def test_mor_aborted_group_falls_back(spark, tmp_path, monkeypatch, log,
-                                      how, max_in_flight):
+                                      how):
     """An aborted group applies its epochs one by one under the per-epoch
-    rules: sequential or concurrent, ``resolve_parked`` after a concurrent
-    drain, compaction per epoch or once after the drain."""
+    rules: in order, compaction per epoch."""
     ev = _rename_free(log)
-    rec, stats, finalized, compacts = _drive(
-        how, spark, tmp_path, monkeypatch, ev, None, max_in_flight,
+    rec, stats, compacts = _drive(
+        how, spark, tmp_path, monkeypatch, ev, None,
         compact_every=2 if how == "run_stream" else 0, merge_mode="mor",
         abort_groups=True)
     epochs = list(range(N_EPOCHS))
     assert rec.groups == [epochs]
-    assert sorted(rec.epochs) == epochs
+    assert rec.epochs == epochs
     assert [s["epoch"] for s in stats] == epochs
-    if max_in_flight == 1:
-        assert rec.epochs == epochs and rec.peak == 1
-        assert finalized == []
-        if how == "run_stream":
-            assert compacts == [[0, 1] + epochs, epochs + epochs]
-    else:
-        assert rec.peak == 2
-        assert finalized == [1]
-        assert stats[-1]["parked_resolved"] == 3
-        if how == "run_stream":
-            assert len(compacts) == 1
+    assert rec.resolved_first()
+    if how == "run_stream":
+        assert compacts == [[0, 1] + epochs, epochs + epochs]
 
 
 def _ddl_at_2(log):
@@ -304,15 +292,15 @@ def test_one_group_call_per_ddl_run(spark, tmp_path, monkeypatch, log, how,
     with the DDL, in both merge modes: a CoW run, and a MOR run whose
     files show no rename, through ``apply_epoch``. Stats come once per
     epoch, in epoch order, each with its run's group."""
-    rec, stats, finalized, _ = _drive(how, spark, tmp_path, monkeypatch,
-                                      _rename_free(log), _ddl_at_2(log), 2,
-                                      merge_mode=merge_mode)
+    rec, stats, _ = _drive(how, spark, tmp_path, monkeypatch,
+                           _rename_free(log), _ddl_at_2(log),
+                           merge_mode=merge_mode)
     assert rec.groups == [[0, 1], [2, 3]]
     assert rec.general == [] and rec.epochs == []
     assert rec.ddl_seen == [True, True]
     assert [s["epoch"] for s in stats] == [0, 1, 2, 3]
     assert [s["group"] for s in stats] == [[0, 1]] * 2 + [[2, 3]] * 2
-    assert finalized == []
+    assert rec.resolved_first()
 
 
 def test_mor_footer_renames_skip_the_fast_path(spark, tmp_path,
@@ -323,8 +311,8 @@ def test_mor_footer_renames_skip_the_fast_path(spark, tmp_path,
     its own: a plain call."""
     ev, ddl = log
     assert set(ev.loc[ev["op"] == "rename", "epoch"]) == set(range(N_EPOCHS))
-    rec, stats, _, _ = _drive("run_stream", spark, tmp_path, monkeypatch, ev,
-                              ddl, 1, merge_mode="mor")
+    rec, stats, _ = _drive("run_stream", spark, tmp_path, monkeypatch, ev,
+                           ddl, merge_mode="mor")
     assert rec.general == [[0, 1, 2], [3]] and rec.groups == []
     assert rec.epochs == [3]
     assert [s["epoch"] for s in stats] == list(range(N_EPOCHS))
@@ -340,9 +328,9 @@ def test_parked_renames_apply_one_by_one(spark, tmp_path, monkeypatch, log,
             m, [{"repo": "r", "path": "a", "new_path": "b", "commit": "c",
                  "event_seq": 0, "epoch": 9}]) or True)
 
-    rec, stats, _, _ = _drive("replay_log", spark, tmp_path, monkeypatch,
-                              _rename_free(log), None, 1,
-                              merge_mode=merge_mode, prepare=park)
+    rec, stats, _ = _drive("replay_log", spark, tmp_path, monkeypatch,
+                           _rename_free(log), None, merge_mode=merge_mode,
+                           prepare=park)
     assert rec.groups == [] and rec.general == []
     assert rec.epochs == list(range(N_EPOCHS))
     assert [s["epoch"] for s in stats] == list(range(N_EPOCHS))
@@ -351,8 +339,8 @@ def test_parked_renames_apply_one_by_one(spark, tmp_path, monkeypatch, log,
 def test_cow_aborted_group_falls_back(spark, tmp_path, monkeypatch, log):
     """A CoW group that aborts (malformed rows, a racing writer) applies
     its epochs one by one."""
-    rec, stats, _, _ = _drive("replay_log", spark, tmp_path, monkeypatch,
-                              _rename_free(log), None, 1, abort_groups=True)
+    rec, stats, _ = _drive("replay_log", spark, tmp_path, monkeypatch,
+                           _rename_free(log), None, abort_groups=True)
     epochs = list(range(N_EPOCHS))
     assert rec.groups == [epochs] and rec.epochs == epochs
     assert [s["epoch"] for s in stats] == epochs

@@ -11,6 +11,8 @@ must equal the sequential oracle regardless of epoch arrival order.
 
 from __future__ import annotations
 
+import copy
+
 import pandas as pd
 import pytest
 
@@ -200,12 +202,10 @@ def test_applied_rename_reinjection_is_noop(spark, tmp_path):
 
 
 @pytest.mark.parametrize("merge_mode", ["mor", "cow"])
-def test_concurrent_epoch_replay_matches_oracle(spark, tmp_path, merge_mode):
-    """Backfill mode: replay_log(max_in_flight=2) applies epochs
-    concurrently (threads, CAS-rebased commits). Final state must equal
-    the sequential oracle for ANY interleaving — including renames whose
-    source epoch may commit after the rename's epoch parked it (the
-    resolve_parked finalizer closes that race)."""
+def test_grouped_replay_matches_oracle(spark, tmp_path, merge_mode):
+    """Backfill mode: replay_log applies a DDL-free rename-bearing log as
+    one group (one rename resolution, one commit). Final state must equal
+    the sequential oracle, with nothing parked and no gap left."""
     from skipmap_processor_spark.sources.events import generate_full
     from skipmap_processor_spark.streaming.pipeline import replay_log
 
@@ -220,7 +220,7 @@ def test_concurrent_epoch_replay_matches_oracle(spark, tmp_path, merge_mode):
         if isinstance(r.get("ts"), pd.Timestamp):
             r["ts"] = r["ts"].to_pydatetime()
     sdf = spark.createDataFrame(records, schema=event_spark_schema())
-    replay_log(spark, lake, sdf, ddl=None, max_in_flight=2)
+    replay_log(spark, lake, sdf, ddl=None)
     assert lake.parked_renames() == []
     assert lake.missing_intervals() == []
 
@@ -234,10 +234,10 @@ def test_concurrent_epoch_replay_matches_oracle(spark, tmp_path, merge_mode):
     )
 
 
-def test_stream_catchup_concurrent_epochs(spark, tmp_path):
-    """run_stream(max_in_flight=2): one availableNow trigger delivering all
-    epoch files at once (a tail that fell behind) applies them concurrently
-    and still matches the sequential oracle."""
+def test_stream_catchup_group_matches_oracle(spark, tmp_path):
+    """run_stream: one availableNow trigger delivering all epoch files at
+    once (a tail that fell behind) applies them as one group and still
+    matches the sequential oracle."""
     from skipmap_processor_spark.sources.events import (
         generate_full,
         write_event_log,
@@ -255,7 +255,7 @@ def test_stream_catchup_concurrent_epochs(spark, tmp_path):
     seen: list[dict] = []
     q = run_stream(spark, lake, events_dir, str(tmp_path / "ckpt"),
                    max_files_per_trigger=16, available_now=True,
-                   on_batch=seen.append, max_in_flight=2)
+                   on_batch=seen.append)
     q.awaitTermination(300)
     assert sorted(s["epoch"] for s in seen) == sorted(
         int(e) for e in ev["epoch"].unique())
@@ -269,3 +269,91 @@ def test_stream_catchup_concurrent_epochs(spark, tmp_path):
         oracle[cols].astype({"event_seq": "int64"}),
         check_dtype=False,
     )
+
+
+@pytest.mark.parametrize("merge_mode", ["mor", "cow"])
+def test_two_handle_race_finalizes_parked_rename(spark, tmp_path,
+                                                 monkeypatch, merge_mode):
+    """Two writer handles on one table, without threads. Handle B reads
+    its manifest; handle A applies epoch 2 above the gap at epoch 1, so
+    its rename b->c parks; B then fills the gap from its stale snapshot
+    (epoch 1 above B's HWM: nothing to re-inject), and its commit keeps
+    A's entry. The gap is closed and b->c is left parked. The next
+    trigger finalizes it before anything else (``parked_resolved`` on
+    its first stats), then applies its epochs as one group, and the lake
+    equals the sequential oracle."""
+    from skipmap_processor_spark.streaming import pipeline
+    from skipmap_processor_spark.streaming.pipeline import replay_log
+
+    ev = _ev_frame(
+        [
+            {"epoch": 0, "op": "update", "path": "a.py", "content": "v1"},
+            {"epoch": 1, "op": "rename", "path": "a.py", "new_path": "b.py"},
+            {"epoch": 1, "op": "update", "path": "b.py", "content": "v2"},
+            {"epoch": 2, "op": "rename", "path": "b.py", "new_path": "c.py"},
+            {"epoch": 3, "op": "update", "path": "x.py", "content": "x3"},
+            {"epoch": 4, "op": "update", "path": "y.py", "content": "y4"},
+        ]
+    )
+    path = str(tmp_path / "lake")
+    lake_a = LakeTable.create(spark, path, num_buckets=4,
+                              merge_mode=merge_mode)
+    bootstrap_base(lake_a, _base(spark))
+    _apply(spark, lake_a, ev, 0)
+
+    lake_b = LakeTable(spark, path)
+    stale = lake_b.manifest()
+    _apply(spark, lake_a, ev, 2)  # above the gap: b->c parks
+    assert [(p["path"], p["new_path"]) for p in lake_a.parked_renames()] == [
+        ("b.py", "c.py")
+    ]
+
+    # B reads its pre-race snapshot until its action prep runs
+    live = {"stale": True}
+    read_manifest = lake_b.manifest
+
+    def b_manifest(version=None):
+        if version is None and live["stale"]:
+            return copy.deepcopy(stale)
+        return read_manifest(version)
+
+    prep = pipeline.prepare_actions
+
+    def prepare_actions(events, lake, *args, **kwargs):
+        if lake is lake_b:
+            live["stale"] = False
+        return prep(events, lake, *args, **kwargs)
+
+    monkeypatch.setattr(lake_b, "manifest", b_manifest)
+    monkeypatch.setattr(pipeline, "prepare_actions", prepare_actions)
+    _apply(spark, lake_b, ev, 1)  # the gap-filler, from B's snapshot
+    assert not live["stale"]
+    assert lake_a.missing_intervals() == []
+    assert [(p["path"], p["new_path"]) for p in lake_a.parked_renames()] == [
+        ("b.py", "c.py")
+    ]
+
+    later = ev[ev["epoch"] >= 3].to_dict("records")
+    for r in later:
+        r["ts"] = r["ts"].to_pydatetime()
+    stats = replay_log(spark, lake_a,
+                       spark.createDataFrame(later,
+                                             schema=event_spark_schema()))
+    assert stats[0]["parked_resolved"] == 1
+    assert [s["epoch"] for s in stats] == [3, 4]
+    assert [s["group"] for s in stats] == [[3, 4], [3, 4]]
+    assert lake_a.parked_renames() == []
+
+    base_pdf = pd.DataFrame(
+        [("org/r", "a.py", commit_str(0), "py", "v0")],
+        columns=["repo", "path", "commit", "lang", "content"],
+    )
+    oracle = replay(base_pdf, ev)
+    engine = _final(lake_a)
+    cols = sorted(oracle.columns)
+    pd.testing.assert_frame_equal(
+        engine[cols].astype({"event_seq": "int64"}),
+        oracle[cols].astype({"event_seq": "int64"}),
+        check_dtype=False,
+    )
+    assert sorted(engine["path"]) == ["c.py", "x.py", "y.py"]

@@ -75,7 +75,7 @@ def test_epochs_from_source_log_parses_plain_and_compact(tmp_path):
     import json
 
     from skipmap_processor_spark.streaming.pipeline import (
-        epochs_from_source_log,
+        files_from_source_log,
     )
 
     d = tmp_path / "ckpt" / "sources" / "0"
@@ -89,19 +89,19 @@ def test_epochs_from_source_log_parses_plain_and_compact(tmp_path):
     (d / "1").write_text(
         "v1\n" + entry("file:///ev/epoch=1/part-0.parquet", 1) + "\n"
         + entry("file:///ev/epoch=2/part-0.parquet", 1) + "\n")
-    assert epochs_from_source_log(str(tmp_path / "ckpt"), 0) == [0]
-    assert epochs_from_source_log(str(tmp_path / "ckpt"), 1) == [1, 2]
+    assert sorted(files_from_source_log(str(tmp_path / "ckpt"), 0)) == [0]
+    assert sorted(files_from_source_log(str(tmp_path / "ckpt"), 1)) == [1, 2]
 
     # compacted log: batch 2's entries live in 3.compact alongside older ones
     (d / "3.compact").write_text(
         "v1\n" + entry("file:///ev/epoch=0/part-0.parquet", 0) + "\n"
         + entry("file:///ev/epoch=3/part-0.parquet", 2) + "\n"
         + entry("file:///ev/epoch=4/part-0.parquet", 3) + "\n")
-    assert epochs_from_source_log(str(tmp_path / "ckpt"), 2) == [3]
-    assert epochs_from_source_log(str(tmp_path / "ckpt"), 3) == [4]
+    assert sorted(files_from_source_log(str(tmp_path / "ckpt"), 2)) == [3]
+    assert sorted(files_from_source_log(str(tmp_path / "ckpt"), 3)) == [4]
 
     # unknown batch -> None (fallback scan)
-    assert epochs_from_source_log(str(tmp_path / "ckpt"), 9) is None
+    assert files_from_source_log(str(tmp_path / "ckpt"), 9) is None
     # layout without epoch= dirs -> None
     (d / "5").write_text("v1\n" + entry("file:///ev/part-9.parquet", 5) + "\n")
-    assert epochs_from_source_log(str(tmp_path / "ckpt"), 5) is None
+    assert files_from_source_log(str(tmp_path / "ckpt"), 5) is None

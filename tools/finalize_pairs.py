@@ -196,8 +196,8 @@ in `BENCH/scaling_history.jsonl`; every probe in
 | A | local[{small['cpus']}] | {small['wall_sec']} | {small['events_per_sec']} | {small['steady_events_per_sec']} | {small['proc_cpu_sec']} | {round(steal_frac(small), 4)} |
 | B | local[{big['cpus']}] | {big['wall_sec']} | {big['events_per_sec']} | {big['steady_events_per_sec']} | {big['proc_cpu_sec']} | {round(steal_frac(big), 4)} |
 
-*steady = wall-based for overlapped (in-flight>1) runs; warmup epochs
-are untimed in both legs.
+*steady = the events of every epoch but the first, over those epochs'
+walls plus compaction; warmup epochs are untimed in both legs.
 
 **Scaling efficiency (median over {len(vp)} valid pairs):**
 
